@@ -1,10 +1,12 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import java.nio.file.{Files, Path, Paths}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.collection.immutable.ListMap
+import scala.jdk.CollectionConverters._
 
 /** Driver-run benchmark: times every registered query at SPARK_GRAFT_SF_DIR
-  * and prints one JSON line. Results are forced through a noop-style sink
-  * (`toRdd.count()` over the full physical plan) rather than `df.count()` —
-  * a bare count lets Catalyst prune away the very columns being benchmarked.
+  * and prints one JSON line. Results are forced through the full-plan
+  * `toRdd.count()` sink ([[Harness.timed]]).
   *
   * Outlier hardening (round 17, VERDICT r16 item 2): this host's
   * documented pathology can spike ONE query 12× mid-sweep with zero code
@@ -29,77 +31,120 @@ object Bench {
     java.lang.management.ManagementFactory
       .getOperatingSystemMXBean.getSystemLoadAverage
 
+  val defaultSfDir = "/root/testdata/sf0.1"
+
   /** Last committed settled per-query mins — the outlier-re-run reference
-    * (VERDICT r16 item 2). Read from the in-tree BENCH_LOCAL.json BEFORE
-    * this run overwrites it, and used ONLY when its "sf" and "cpus"
-    * fields match this run (an 8-core or non-default-SF reference would
-    * flag everything). Bench wrote that file itself, so a two-regex parse
-    * of its known shape is safe; any parse failure degrades to "no
-    * reference" (re-runs off), never to an error. */
-  private def refMins(sfDir: String, cpus: String): Map[String, Double] = {
-    try {
-      val p = java.nio.file.Paths.get("BENCH_LOCAL.json")
-      if (!java.nio.file.Files.exists(p)) return Map.empty
-      val txt = java.nio.file.Files.readString(p)
-      def field(k: String): Option[String] =
-        ("\"" + k + "\":\"?([^\",}]*)\"?").r.findFirstMatchIn(txt).map(_.group(1))
-      if (!field("sf").contains(sfDir) || !field("cpus").contains(cpus))
-        return Map.empty
-      val qs = txt.indexOf("\"queries\":{") match {
-        case -1 => return Map.empty
-        case i => txt.substring(i + 11, txt.indexOf('}', i))
+    * (VERDICT r16 item 2). Read BEFORE this run overwrites the file, and
+    * used ONLY when its "sf" and "cpus" fields match this run (an 8-core
+    * or non-default-SF reference would flag everything). Left carries
+    * why there is no reference (re-runs off), never an error. */
+  def refMins(file: Path, sfDir: String, cpus: String): Either[String, Map[String, Double]] =
+    if (!Files.exists(file)) Left(s"no $file")
+    else scala.util.Try(Harness.json.readTree(file.toFile)).toEither
+      .left.map(e => s"unreadable $file: ${String.valueOf(e.getMessage).takeWhile(_ != '\n')}")
+      .flatMap { t =>
+        val (sf, c) = (t.path("sf").asText, t.path("cpus").asText)
+        if (sf != sfDir) Left(s"$file is sf $sf, this run $sfDir")
+        else if (c != cpus) Left(s"$file is cpus $c, this run $cpus")
+        else Right(t.path("queries").properties.asScala
+          .map(e => e.getKey -> e.getValue.asDouble).filter(_._2 > 0).toMap)
       }
-      "\"([A-Za-z0-9_]+)\":(-?[0-9.]+)".r.findAllMatchIn(qs)
-        .map(m => m.group(1) -> m.group(2).toDouble)
-        .filter(_._2 > 0).toMap
-    } catch { case _: Throwable => Map.empty }
+
+  /** BENCH_LOCAL.json is committed evidence and must ONLY ever hold a
+    * full-registry run at the default SF and cores: round 13's
+    * end-of-round snapshot committed a 4-query stress leftover over the
+    * real 228-query pair (VERDICT r13), and an 8-core reference turns the
+    * outlier re-run off for the next 32-core sweep. Subset
+    * (SPARK_GRAFT_ONLY), non-default-SF, conf-overlay (SPARK_GRAFT_CONF —
+    * knob probes measure a different engine config), non-default-repeat
+    * and non-default-cpus runs are dev-loop scratch and land in
+    * BENCH_SCRATCH.json unless the caller explicitly overrides the path. */
+  def isFullDefaultRun(only: Option[Seq[String]], sfDir: String,
+      conf: Option[String], repeat: Int, cpus: String): Boolean =
+    only.isEmpty && sfDir == defaultSfDir &&
+      conf.forall(_.trim.isEmpty) && repeat == 3 && cpus == "32"
+
+  /** An outlier re-run: the min before it, the post-settle run (-1 if it
+    * failed), the committed min that tripped the 3x gate, and the 1-min
+    * loadavg at detection. */
+  final case class Rerun(first: Double, rerun: Double, ref: Double, load: Double)
+
+  /** One finished sweep; renders the full JSON (written to `out`) and the
+    * bounded stdout line. `results` is (name, min seconds, every run ok). */
+  final case class Sweep(repeat: Int, loadStart: Double, loadEnd: Double,
+      cpus: String, sf: String, out: String,
+      results: Seq[(String, Double, Boolean)], reruns: Seq[(String, Rerun)],
+      loads: Seq[(String, Double)]) {
+    import Harness.num
+    // a failed query must not read as a fast pass: sentinel -1 in the map,
+    // name in "failed", wall-clock excluded from the total
+    private def value(v: Double, ok: Boolean): Any = if (ok) num(v) else -1
+    private def rerun(r: Rerun) =
+      ListMap("first" -> num(r.first), "rerun" -> value(r.rerun, r.rerun >= 0), "ref" -> num(r.ref))
+    private val failed = results.collect { case (k, _, false) => k }
+    private def head(rest: (String, Any)*): String =
+      Harness.json.writeValueAsString(ListMap[String, Any]("metric" -> "total",
+        "value" -> num(results.collect { case (_, v, true) => v }.sum),
+        "unit" -> "sec", "runs_per_query" -> repeat, "timing" -> "min",
+        "load_start" -> num(loadStart), "load_end" -> num(loadEnd),
+        "cpus" -> cpus.toIntOption.getOrElse(cpus)) ++ rest ++ Seq("sf" -> sf))
+
+    def full: String = head(
+      "queries" -> ListMap(results.map { case (k, v, ok) => k -> value(v, ok) }: _*),
+      "reruns" -> ListMap(reruns.map { case (k, r) => k -> (rerun(r) + ("load" -> num(r.load))) }: _*),
+      "query_load" -> ListMap(loads.map { case (k, v) => k -> num(v) }: _*),
+      "failed" -> failed)
+
+    /** The round harness keeps only the LAST ~2000 chars of combined
+      * stdout/stderr (every BENCH_r01–r06 artifact stored a mid-line
+      * fragment), so this line is size-bounded: failures and the slowest
+      * queries first (the informative ones); the reruns and failed lists
+      * share the budget, or a mass-failure round — exactly when the parse
+      * matters most — would overflow it. The full map is in `out`. */
+    def line: String = {
+      def entryLen(e: (String, Any)) = Harness.json.writeValueAsString(ListMap(e)).length - 2
+      val (rk, rkLen, ro) = bounded(reruns.map { case (k, r) => k -> rerun(r) }, 300)(entryLen)
+      val ordered = results.filterNot(_._3) ++ results.filter(_._3).sortBy(-_._2)
+      // 1400 leaves room for the fixed fields inside the 2000-char window
+      val (qk, _, qo) = bounded(ordered.map { case (k, v, ok) => k -> value(v, ok) },
+        1400 - rkLen)(entryLen)
+      val (fk, _, fo) = bounded(failed, 300)(s => Harness.json.writeValueAsString(s).length)
+      head("n_queries" -> results.size, "queries" -> ListMap(qk: _*),
+        "queries_omitted" -> qo, "queries_full" -> out, "reruns" -> ListMap(rk: _*),
+        "reruns_omitted" -> ro, "failed" -> fk, "failed_omitted" -> fo)
+    }
   }
+
+  /** Greedy size bound on a JSON object or array body: keeps entries in
+    * order while the comma-joined text stays within `budget` chars (each
+    * entry also reserves a separator). Returns the kept entries, their
+    * joined length and the omitted count. */
+  private def bounded[T](xs: Seq[T], budget: Int)(len: T => Int): (Seq[T], Int, Int) =
+    xs.foldLeft((Vector.empty[T], 0, 0)) { case ((kept, used, omitted), x) =>
+      val l = len(x)
+      if (used + l + 1 <= budget) (kept :+ x, used + l + (if (kept.isEmpty) 0 else 1), omitted)
+      else (kept, used, omitted + 1)
+    }
 
   def main(args: Array[String]): Unit = {
     val loadStart = loadAvg
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // reference mins for the outlier re-run, read BEFORE the output file
-    // is overwritten below
-    val refs = refMins(sfDir, cpus)
-    // session conf lives in BenchConf (shared with PlanDump so plan
-    // evidence is captured under exactly this conf)
-    val spark = BenchConf.builder(cpus).getOrCreate()
-    // ERROR, not WARN: the per-run unpersist of lazily-checkpointed RDDs
-    // emits an async "lineage truncated" WARN per block, and any WARN
-    // that lands after the final JSON line breaks the harness's
-    // last-line parse (ADVICE r7). Real failures still surface — the
-    // bench prints them itself via System.err.
-    spark.sparkContext.setLogLevel("ERROR")
-    // the per-run eager unpersist races in-flight task completions, and
-    // DAGScheduler logs a benign multi-line "Failed to update accumulator
-    // (Unknown class)" ERROR stack per race — 60 lines of it can land
-    // directly ahead of the final JSON inside the harness's 2000-char
-    // tail window. Query failures surface through the caught exception
-    // per run (stderr + the failed list), never through this logger.
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.scheduler.DAGScheduler",
-      org.apache.logging.log4j.Level.OFF)
-    // JVM + parquet-footer + view-registration warmup, excluded from
-    // timings; the shuffle job initializes codegen, the shuffle system,
-    // and the broadcast machinery so the first timed query isn't charged
-    // for one-time session setup.
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", defaultSfDir)
+    val cpus = Harness.cpus
+    val refs = refMins(Paths.get("BENCH_LOCAL.json"), sfDir, cpus).fold({ why =>
+      System.err.println(s"[bench] outlier re-run off: $why"); Map.empty[String, Double]
+    }, identity)
+    val spark = Harness.session(BenchConf.bench(cpus))
+    // parquet footers + view registration, excluded from timings; touch
+    // every table once: vectorized reader + AQE init would otherwise be
+    // charged to whichever query runs first
     ops.Tables.load(spark, sfDir)
-    import org.apache.spark.sql.functions.expr
-    spark.range(1 << 20).groupBy(expr("id % 7")).count()
-      .queryExecution.toRdd.count()
-    // touch every table once: parquet footer + vectorized reader + AQE
-    // init would otherwise be charged to whichever query runs first
     ops.Tables.all.foreach { t =>
       try spark.table(t).limit(4).queryExecution.toRdd.count()
       catch { case _: Throwable => () }
     }
-    // dev loop: SPARK_GRAFT_ONLY=d02,d03 times just the named queries
-    // (prefix match); the driver never sets it, so the graded run is full
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSeq)
-    val picked = SparkEntry.queries.toSeq.sortBy(_._1).filter { case (n, _) =>
-      only.forall(_.exists(n.startsWith))
-    }
+    val only = Harness.only
+    val picked = SparkEntry.queries.toSeq.sortBy(_._1)
+      .filter { case (n, _) => only.forall(_.exists(n.startsWith)) }
     // each query runs three times and reports the fastest: run 1 pays
     // one-time Janino/whole-stage codegen compilation (~1-2s of JVM work
     // per unique plan, amortized away on any long-lived cluster), later
@@ -109,45 +154,14 @@ object Bench {
     // across idle-machine runs); the JVM caches only compiled code
     // between runs; no data or shuffle output is reused (each run
     // re-executes the full physical plan).
-    val repeat = math.max(1, sys.env.get("SPARK_GRAFT_REPEAT")
-      .flatMap(_.toIntOption).getOrElse(3))
-    def timedRun(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): (Double, Boolean) = {
-      val t0 = System.nanoTime()
-      val ok =
-        try { fn(spark, sfDir).queryExecution.toRdd.count(); true }
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] $name failed: ${e.getMessage}")
-          false
-        }
-      val dt = (System.nanoTime() - t0) / 1e9
-      // each run builds FRESH lazy-checkpoint RDDs (Q.sortedNarrow and
-      // the shared-index ops); their MEMORY_AND_DISK blocks are only
-      // reclaimed when the driver GCs the RDD object, so across
-      // 160+ queries × 3 runs storage fills and later checkpoint-heavy
-      // queries pay eviction/spill I/O that has nothing to do with
-      // their plan (observed: d24 0.8s isolated → 15s late in a full
-      // sweep). Blocks are never shared across runs — drop them
-      // eagerly once the run is timed.
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-      (dt, ok)
-    }
-    // outlier re-runs (VERDICT r16 item 2): one t38-style host spike
-    // (24.2 s driver-window vs 1.9 s settled same HEAD, round 16) can
-    // distort a whole round verdict. When a query's min-of-N lands >3×
-    // its last committed settled min (refMins; same sf + cpus only) AND
-    // the absolute excess tops 1 s (sub-second floor queries triple on
-    // scheduler jitter alone), the query is re-run ONCE after a full GC
-    // and a short settle, and BOTH numbers are reported: the `queries`
-    // value becomes the min over all runs (still a fresh full-plan
-    // execution — min-of-N honesty unchanged) and the `reruns` map keeps
-    // the pre-re-run min, the reference, and the loadavg at detection,
-    // so nothing is silently dropped. No re-run ever REPLACES a number.
-    val rerunLog = scala.collection.mutable.LinkedHashMap
-      .empty[String, (Double, Double, Double, Double)] // first, rerun, ref, load
-    val queryLoad = scala.collection.mutable.LinkedHashMap.empty[String, Double]
+    val repeat = Harness.repeat(3)
+    def run(name: String, fn: (SparkSession, String) => DataFrame) =
+      try Harness.timed(spark, sfDir, "bench", name, fn)
+      finally Harness.unpersistAll(spark, blocking = false)
+    val reruns = Seq.newBuilder[(String, Rerun)]
+    val loads = Seq.newBuilder[(String, Double)]
     val results = picked.map { case (name, fn) =>
-      val runs = (1 to repeat).map(_ => timedRun(name, fn))
+      val runs = (1 to repeat).map(_ => run(name, fn))
       // drive ContextCleaner between QUERIES (not between the min-of-3
       // runs): shuffle files and broadcasts free only when the driver
       // GCs their references, and the accumulated residue taxed later
@@ -159,141 +173,33 @@ object Bench {
       // ~80 ms median tax on the next timed run (+18 s over the suite),
       // which is the min-of-3's warm state being evacuated for nothing.
       System.gc()
+      // ok requires EVERY run to pass — a query that flakes on any run is
+      // a failure, not a pass with its fastest lucky time
       val ok = runs.forall(_._2)
       val best = runs.filter(_._2).map(_._1).sorted.headOption.getOrElse(-1.0)
-      queryLoad(name) = loadAvg
+      val load = loadAvg
+      loads += name -> load
+      // outlier re-run (see the object scaladoc): only when the absolute
+      // excess also tops 1 s — sub-second floor queries triple on
+      // scheduler jitter alone. No re-run ever REPLACES a number.
       val finalBest = refs.get(name) match {
         case Some(ref) if ok && best > 3 * ref && best - ref > 1.0 =>
           Thread.sleep(2000) // post-GC settle; pathology is host-level,
           // minutes-scale — 2 s bounds sweep cost, the re-run is the data
-          val (dt, rok) = timedRun(name, fn)
+          val (dt, rok) = run(name, fn)
           System.gc()
-          rerunLog(name) = (best, if (rok) dt else -1.0, ref, queryLoad(name))
+          reruns += name -> Rerun(best, if (rok) dt else -1.0, ref, load)
           if (rok) math.min(best, dt) else best
         case _ => best
       }
-      // ok requires EVERY run to pass — a query that flakes on any run is
-      // a failure, not a pass with its fastest lucky time
       (name, finalBest, ok)
     }
-    // a failed query must not read as a fast pass: sentinel -1 in the map,
-    // name in "failed", wall-clock excluded from the total
-    // Locale.ROOT formatting: the f-interpolator uses the JVM default
-    // locale, and a comma-decimal locale (de_DE ...) would emit
-    // "value":125,832 — invalid JSON on the one line the harness parses
-    def num(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-    def entry(k: String, v: Double, ok: Boolean): String =
-      s"\"" + k + "\":" + (if (ok) num(v) else "-1")
-    val qs = results.map { case (k, v, ok) => entry(k, v, ok) }
-      .mkString("{", ",", "}")
-    val failed = results.collect { case (k, _, false) => s"\"$k\"" }
-      .mkString("[", ",", "]")
-    val total = results.collect { case (_, v, true) => v }.sum
-    // machine-state stamp: 1-min loadavg at sweep start/end (see loadAvg),
-    // plus cpus (the outlier-re-run reference is only valid same-core)
-    val machine =
-      s""""load_start":${num(loadStart)},"load_end":${num(loadAvg)},"cpus":$cpus"""
-    // outlier re-runs, in full (see rerunLog above): first = the min
-    // before the re-run, rerun = the post-settle run (-1 if it failed),
-    // ref = the committed settled min that tripped the 3x gate, load =
-    // 1-min loadavg at detection
-    val reruns = rerunLog.map { case (k, (first, rerun, ref, load)) =>
-      s""""$k":{"first":${num(first)},"rerun":${if (rerun >= 0) num(rerun) else "-1"},"ref":${num(ref)},"load":${num(load)}}"""
-    }.mkString("{", ",", "}")
-    // per-query machine state (full file only; the stdout line is
-    // size-bounded): loadavg sampled right after each query's runs
-    val loads = queryLoad.map { case (k, v) => s""""$k":${num(v)}""" }
-      .mkString("{", ",", "}")
-    val json =
-      s"""{"metric":"total","value":${num(total)},"unit":"sec","runs_per_query":$repeat,"timing":"min",$machine,"queries":$qs,"reruns":$reruns,"query_load":$loads,"failed":$failed,"sf":"$sfDir"}"""
-    // The round harness keeps only the LAST ~2000 chars of combined
-    // stdout/stderr (observed in BENCH_r01–r06: every artifact stored a
-    // mid-line tail fragment, parsed:null — the full per-query map has
-    // never fit). So stdout gets a size-bounded line that actually
-    // survives that window: failures and the slowest queries first (the
-    // informative ones), capped so line + sbt's trailing "[success]"
-    // banner stay inside the window. The complete map is persisted to
-    // BENCH_LOCAL.json (committed evidence) either way.
-    // the stdout failed-array shares the size budget: the failed names
-    // already lead `kept` (as -1 entries), so an unbounded copy here
-    // would overflow the harness's tail window in exactly the
-    // mass-failure round where the parse matters most
-    val failedNames = results.collect { case (k, _, false) => s"\"$k\"" }
-    val failedKept = new StringBuilder
-    var failedOmitted = 0
-    failedNames.foreach { e =>
-      if (failedKept.length + e.length + 1 <= 300) {
-        if (failedKept.nonEmpty) failedKept.append(',')
-        failedKept.append(e)
-      } else failedOmitted += 1
-    }
-    // BENCH_LOCAL.json is committed evidence and must ONLY ever hold a
-    // full-registry run at the default SF: round 13's end-of-round snapshot
-    // committed a 4-query stress leftover over the real 228-query pair
-    // (VERDICT r13). Subset (SPARK_GRAFT_ONLY), non-default-SF, conf-overlay
-    // (SPARK_GRAFT_CONF — knob probes like shuffle.partitions=8 measure a
-    // different engine config) and non-default-repeat runs are dev-loop
-    // scratch and land in BENCH_SCRATCH.json unless the caller explicitly
-    // overrides the path.
-    val isFullDefaultRun =
-      only.isEmpty && sfDir == "/root/testdata/sf0.1" &&
-        sys.env.get("SPARK_GRAFT_CONF").forall(_.trim.isEmpty) &&
-        repeat == 3
     val benchOut = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
-      if (isFullDefaultRun) "BENCH_LOCAL.json" else "BENCH_SCRATCH.json")
-    // stdout reruns: bounded like the queries map (the stdout line must
-    // clear the harness's ~2000-char tail window); full map in $benchOut
-    val rerunsKept = new StringBuilder
-    var rerunsOmitted = 0
-    rerunLog.foreach { case (k, (first, rerun, ref, _)) =>
-      val e = s""""$k":{"first":${num(first)},"rerun":${if (rerun >= 0) num(rerun) else "-1"},"ref":${num(ref)}}"""
-      if (rerunsKept.length + e.length + 1 <= 300) {
-        if (rerunsKept.nonEmpty) rerunsKept.append(',')
-        rerunsKept.append(e)
-      } else rerunsOmitted += 1
-    }
-    // 1400, not 1500: the load_start/load_end/cpus stamp and the rerun
-    // counters joined the fixed fields, and the whole line must keep
-    // clearing the harness's ~2000-char tail window; the (rare, bounded)
-    // reruns entries additionally debit this budget directly
-    val budget = 1400 - rerunsKept.length
-    val ordered = results.filterNot(_._3) ++
-      results.filter(_._3).sortBy(-_._2) // failed first, then slowest
-    val kept = new StringBuilder
-    var omitted = 0
-    ordered.foreach { case (k, v, ok) =>
-      val e = entry(k, v, ok)
-      if (kept.length + e.length + 1 <= budget) {
-        if (kept.nonEmpty) kept.append(',')
-        kept.append(e)
-      } else omitted += 1
-    }
-    val stdoutJson =
-      s"""{"metric":"total","value":${num(total)},"unit":"sec","runs_per_query":$repeat,"timing":"min",$machine,"n_queries":${results.size},"queries":{$kept},"queries_omitted":$omitted,"queries_full":"$benchOut","reruns":{$rerunsKept},"reruns_omitted":$rerunsOmitted,"failed":[$failedKept],"failed_omitted":$failedOmitted,"sf":"$sfDir"}"""
-    try java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(benchOut), json + "\n")
-    catch { case e: Throwable =>
-      // never silent: a stale committed BENCH_LOCAL.json surviving a
-      // failed write would masquerade as this run's evidence
-      System.err.println(s"[bench] could not write $benchOut: ${e.getMessage}")
-    }
-    // drain every outstanding checkpoint block SYNCHRONOUSLY, stop Spark,
-    // and only then print the JSON — nothing (async unpersist WARNs,
-    // executor shutdown chatter) may interleave after the line the round
-    // harness parses from its bounded tail window. build.sbt passes the
-    // forked stdout through raw and suppresses sbt's [success] banner, so
-    // this println IS the final line of the run's combined output.
-    // silence shutdown chatter entirely: a non-fatal DAGScheduler
-    // event-loop stack trace logged during unpersist/stop used to land in
-    // the harness's 2000-char tail window ahead of the JSON line — every
-    // measurement is already taken by this point
-    spark.sparkContext.setLogLevel("OFF")
-    spark.sparkContext.getPersistentRDDs.values
-      .foreach(_.unpersist(blocking = true))
-    spark.stop()
-    System.out.flush(); System.err.flush()
-    println(stdoutJson)
-    System.out.flush()
+      if (isFullDefaultRun(only, sfDir, sys.env.get("SPARK_GRAFT_CONF"), repeat, cpus))
+        "BENCH_LOCAL.json" else "BENCH_SCRATCH.json")
+    val sweep = Sweep(repeat, loadStart, loadAvg, cpus, sfDir, benchOut,
+      results, reruns.result(), loads.result())
+    Harness.writeJson("bench", benchOut, sweep.full)
+    Harness.stopAndPrint(spark, sweep.line)
   }
 }

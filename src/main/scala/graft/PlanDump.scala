@@ -4,7 +4,7 @@ import java.nio.file.{Files, Paths}
 
 /** Optimization-round evidence dump: writes `explain("formatted")` for
   * registered queries to `<outDir>/<name>_<suffix>.txt`, under the SAME
-  * session conf Bench uses ([[BenchConf.builder]] — shared, not copied,
+  * session conf Bench uses ([[BenchConf.bench]] — shared, not copied,
   * per ADVICE r16: plan shape depends on AQE / split-size / object-agg /
   * shuffle-compression conf and on any SPARK_GRAFT_CONF overlay, so plans
   * must be captured under exactly the bench conditions).
@@ -24,9 +24,7 @@ object PlanDump {
         System.err.println("usage: graft.PlanDump <sfDir> <outDir> <suffix> [names]")
         sys.exit(2)
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = BenchConf.builder(cpus).getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session(BenchConf.bench(Harness.cpus))
     new java.io.File(outDir).mkdirs()
     val picked = SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }
@@ -34,16 +32,14 @@ object PlanDump {
     var failures = 0
     picked.foreach { case (name, fn) =>
       try {
-        val df = fn(spark, sfDir)
-        val txt = df.queryExecution.explainString(FormattedMode)
+        val txt = fn(spark, sfDir).queryExecution.explainString(FormattedMode)
         Files.writeString(Paths.get(s"$outDir/${name}_$suffix.txt"), txt)
         println(s"[plandump] $name -> ${name}_$suffix.txt")
       } catch { case e: Throwable =>
         failures += 1
         System.err.println(s"[plandump] $name failed: ${e.getMessage}")
       }
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
+      Harness.unpersistAll(spark, blocking = false)
     }
     spark.stop()
     if (picked.isEmpty) {

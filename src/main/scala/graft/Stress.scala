@@ -1,22 +1,13 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import scala.collection.immutable.ListMap
 
 /** The repeatable scale gate (VERDICT r14 item 6): runs the
   * stress-measured families against the deterministic scaled substrates
-  * under /tmp (regenerate with `python3 tools/gen_stress_data.py`) at the
-  * SCALE config — shuffle compression ON and a production-sized
-  * `initialPartitionNum` — and writes the full result map to
-  * STRESS_LOCAL.json.
-  *
-  * Why a separate conf from graft.Bench: sf0.1's exchanges are tiny
-  * (compression pure CPU overhead, 32 partitions plenty), while the
-  * 10x-160x pair/wedge frames are exactly where compression and partition
-  * count flip sign (SURVEY §6, rounds 13-14: d02 and g22 both measured
-  * >2x swings on the partition knob alone; g22's 137M-row wedge shuffle
-  * amplified the gap with compression off). This main IS the documented
-  * crossover: small-SF numbers come from Bench's conf, at-scale numbers
-  * from this one.
+  * under /tmp (regenerate with `python3 tools/gen_stress_data.py`) with
+  * the [[BenchConf.scale]] profile — shuffle compression ON and a production-sized
+  * `initialPartitionNum`, the measured crossover from Bench's small-SF
+  * pins — and writes the full result map to STRESS_LOCAL.json.
   *
   * Knobs: SPARK_GRAFT_STRESS_TIER=10|40|all (default 10 — the 40x tiers
   * run minutes); SPARK_GRAFT_ONLY=g21,d02 name-prefix subset. Keep the
@@ -133,6 +124,22 @@ object Stress {
     // at 50x it is a ~17 min query that measures the spec, not the plan.
     Tier("emb50x", "/tmp/scaleemb/n100000", Seq("s02_ivf_ann")))
 
+  /** The STRESS_LOCAL.json document: per-tier (name, min seconds, ok)
+    * results, `partial` until the last selected tier is in. A failed
+    * query reads -1 and is excluded from the total. */
+  def render(tierSel: String, repeat: Int,
+      results: Seq[(Tier, Seq[(String, Double, Boolean)])], partial: Boolean): String =
+    Harness.json.writeValueAsString(ListMap[String, Any](
+      "metric" -> "stress_total",
+      "value" -> Harness.num(results.flatMap(_._2).filter(_._3).map(_._2).sum),
+      "unit" -> "sec", "runs_per_query" -> repeat, "timing" -> "min",
+      "tier" -> tierSel) ++ (if (partial) Seq("partial" -> true) else Nil) ++ Seq(
+      "tiers" -> ListMap(results.map { case (tier, qs) => tier.label -> ListMap(
+        "dir" -> tier.dir,
+        "queries" -> ListMap(qs.map { case (n, v, ok) =>
+          n -> (if (ok) Harness.num(v) else -1) }: _*)) }: _*),
+      "failed" -> results.flatMap(_._2).collect { case (n, _, false) => n }))
+
   def main(args: Array[String]): Unit = {
     val tierSel = sys.env.getOrElse("SPARK_GRAFT_STRESS_TIER", "10")
     val tiers = tierSel match {
@@ -149,103 +156,28 @@ object Stress {
            |regenerate with: python3 tools/gen_stress_data.py""".stripMargin)
       sys.exit(2)
     }
-    val builder = SparkSession.builder()
-      .master("local[32]")
-      .appName("graft-stress")
-      // the SCALE config (see scaladoc): Bench's small-SF pins inverted
-      // where the stress rounds measured the crossover
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", "256")
-      .config("spark.shuffle.compress", "true")
-      .config("spark.shuffle.spill.compress", "true")
-      .config("spark.sql.files.maxPartitionBytes", (8 * 1024 * 1024).toString)
-      .config("spark.sql.files.openCostInBytes", (128 * 1024).toString)
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        (4 * 1024 * 1024).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    sys.env.get("SPARK_GRAFT_CONF").toSeq
-      .flatMap(_.split(";")).map(_.split("=", 2))
-      .foreach { case Array(k, v) => builder.config(k, v); case _ => }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.scheduler.DAGScheduler",
-      org.apache.logging.log4j.Level.OFF)
-    // session warmup (Bench's): codegen, shuffle system, broadcast
-    // machinery — one-time JVM setup must not be charged to the first
-    // timed query
-    locally {
-      import org.apache.spark.sql.functions.expr
-      spark.range(1 << 20).groupBy(expr("id % 7")).count()
-        .queryExecution.toRdd.count()
-    }
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSeq)
-    val repeat = math.max(1, sys.env.get("SPARK_GRAFT_REPEAT")
-      .flatMap(_.toIntOption).getOrElse(1))
-    // Locale.ROOT: the f-interpolator is locale-dependent and a
-    // comma-decimal JVM would emit invalid JSON (same guard as Bench)
-    def num(d: Double): String =
-      String.format(java.util.Locale.ROOT, "%.3f", Double.box(d))
-
-    val outPath = java.nio.file.Paths.get(
-      sys.env.getOrElse("SPARK_GRAFT_STRESS_OUT", "STRESS_LOCAL.json"))
-    def emit(results: Seq[(Tier, Seq[(String, Double, Boolean)])],
-        partial: Boolean): String = {
-      val failed = results.flatMap(_._2).collect { case (n, _, false) => n }
-      val total = results.flatMap(_._2).filter(_._3).map(_._2).sum
-      val tierJson = results.map { case (tier, qs) =>
-        val qj = qs.map { case (n, v, ok) =>
-          s""""$n":${if (ok) num(v) else "-1"}""" }.mkString(",")
-        s""""${tier.label}":{"dir":"${tier.dir}","queries":{$qj}}"""
-      }.mkString(",")
-      val json =
-        s"""{"metric":"stress_total","value":${num(total)},"unit":"sec","runs_per_query":$repeat,"timing":"min","tier":"$tierSel"${if (partial) ",\"partial\":true" else ""},"tiers":{$tierJson},"failed":[${failed.map(n => s""""$n"""").mkString(",")}]}"""
-      // write-through after EVERY tier: a late-tier JVM death (the
-      // li160x OOM, round 16) must not lose the whole window's
-      // measurements
-      try java.nio.file.Files.writeString(outPath, json + "\n")
-      catch { case e: Throwable =>
-        System.err.println(s"[stress] could not write: ${e.getMessage}")
-      }
-      json
-    }
+    val spark = Harness.session(BenchConf.scale)
+    val only = Harness.only
+    val repeat = Harness.repeat(1)
+    val outPath = sys.env.getOrElse("SPARK_GRAFT_STRESS_OUT", "STRESS_LOCAL.json")
     var done = Seq.empty[(Tier, Seq[(String, Double, Boolean)])]
-    val results = tiers.map { tier =>
+    tiers.foreach { tier =>
       ops.Tables.load(spark, tier.dir)
       val prevConf = tier.conf.keys
         .map(k => k -> spark.conf.getOption(k)).toMap
       tier.conf.foreach { case (k, v) => spark.conf.set(k, v) }
-      val picked = tier.queries.filter(n => only.forall(_.exists(n.startsWith)))
-      val qs = picked.map { name =>
+      val qs = tier.queries.filter(n => only.forall(_.exists(n.startsWith))).map { name =>
         val fn = SparkEntry.queries.getOrElse(name,
           sys.error(s"unknown stress query $name"))
+        // after each run, free lazily-checkpointed blocks NOW (blocking)
+        // and drive ContextCleaner: shuffle files and broadcasts free only
+        // when the driver GCs their references, and at stress scale a prior
+        // query's tens of GB of map output lingering in the page cache
+        // taxes the next one ~2x (g22 measured 52.1 s after g21 in-JVM vs
+        // 27.0 s alone, round 15)
         val runs = (1 to repeat).map { _ =>
-          val t0 = System.nanoTime()
-          val ok =
-            try { fn(spark, tier.dir).queryExecution.toRdd.count(); true }
-            catch { case e: Throwable =>
-              System.err.println(s"[stress] ${tier.label}/$name failed: " +
-                e.getMessage)
-              false
-            }
-          // elapsed BEFORE cleanup — Bench does the same; charging
-          // unpersist+GC to the measurement biased stress ratios
-          // against Spark (ADVICE r15)
-          val dt = (System.nanoTime() - t0) / 1e9
-          // free lazily-checkpointed blocks NOW — they only release on
-          // driver GC otherwise and poison the next query's memory
-          // (the d24 in-sweep lesson, CLAUDE.md)
-          spark.sparkContext.getPersistentRDDs.values
-            .foreach(_.unpersist(blocking = true))
-          // ...and drive ContextCleaner: shuffle files and broadcasts
-          // free only when the driver GCs their references, and at
-          // stress scale a prior query's tens of GB of map output
-          // lingering in the page cache taxes the next one ~2x (g22
-          // measured 52.1 s after g21 in-JVM vs 27.0 s alone, round 15)
-          System.gc()
-          (dt, ok)
+          try Harness.timed(spark, tier.dir, "stress", s"${tier.label}/$name", fn)
+          finally { Harness.unpersistAll(spark, blocking = true); System.gc() }
         }
         val ok = runs.forall(_._2)
         (name, if (ok) runs.map(_._1).min else -1.0, ok)
@@ -255,16 +187,15 @@ object Stress {
         case (k, None) => spark.conf.unset(k)
       }
       done = done :+ (tier, qs)
-      emit(done, partial = tier ne tiers.last)
-      (tier, qs)
+      // write-through after EVERY tier: a late-tier JVM death (the
+      // li160x OOM, round 16) must not lose the whole window's
+      // measurements
+      if (tier ne tiers.last)
+        Harness.writeJson("stress", outPath, render(tierSel, repeat, done, partial = true))
     }
-    val failed = results.flatMap(_._2).collect { case (n, _, false) => n }
-    val json = emit(results, partial = false)
-    spark.sparkContext.setLogLevel("OFF")
-    spark.stop()
-    System.out.flush(); System.err.flush()
-    println(json)
-    System.out.flush()
-    if (failed.nonEmpty) sys.exit(1)
+    val json = render(tierSel, repeat, done, partial = false)
+    Harness.writeJson("stress", outPath, json)
+    Harness.stopAndPrint(spark, json)
+    if (done.exists(_._2.exists(!_._3))) sys.exit(1)
   }
 }

@@ -1,9 +1,17 @@
 package graft
-import org.apache.spark.sql.SparkSession
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the DuckDB oracle compare. Runs under the
+  * `bench` profile ([[BenchConf.bench]], SPARK_GRAFT_CONF overlay
+  * included): the plan that is timed is the plan that is verified. */
 object Verify {
+  /** The query → oracle SQL map as JSON. Jackson escapes quotes,
+    * backslashes and every control char — a raw tab or CR in SQL would
+    * make a strict reader (Python's json.load) reject the file, and the
+    * correctness gate with it. */
+  def writeOracleSql(file: Path, sql: Map[String, String]): Unit =
+    Files.writeString(file, Harness.json.writeValueAsString(sql))
+
   def main(args: Array[String]): Unit = {
     // 2-arg form (driver contract) dumps every query; an optional third
     // arg restricts to comma-separated name PREFIXES for fast local
@@ -17,23 +25,11 @@ object Verify {
           "usage: graft.Verify <sfDir> <outDir> [name1,name2,...]")
         sys.exit(2)
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // keep the posting-list CappedCollect aggregation on the hash path
-      // (same setting and rationale as Bench; buffers are cap-bounded)
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        (4 * 1024 * 1024).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    def picked(name: String) = only.isEmpty || only.exists(name.startsWith)
+    val spark = Harness.session(BenchConf.bench(Harness.cpus))
     new java.io.File(outDir).mkdirs()
     var nFailed = 0
-    SparkEntry.queries
-      .filter { case (name, _) => only.isEmpty || only.exists(name.startsWith) }
-      .foreach { case (name, fn) =>
+    SparkEntry.queries.filter { case (name, _) => picked(name) }.foreach { case (name, fn) =>
       // repartition(1), NOT coalesce(1): coalesce propagates a 1-task
       // constraint up an entire shuffle-free pipeline (the codec/text
       // kernel queries run on one of the 32 cores); the extra tiny
@@ -48,36 +44,12 @@ object Verify {
         // run's parquet in place — localverify would read the stale dir
         // and report a silent PASS on a broken query; delete it so the
         // gate reads red
-        val stale = Paths.get(s"$outDir/$name")
-        if (Files.exists(stale)) {
-          import scala.jdk.CollectionConverters._
-          Files.walk(stale).sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-            .iterator().asScala.foreach(Files.deleteIfExists(_))
-        }
+        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(s"$outDir/$name"))
       }
-      // release this query's lazy-checkpoint blocks (same accumulation
-      // Bench hit: 160+ queries of retained MEMORY_AND_DISK blocks force
-      // spills on the later checkpoint-heavy queries; blocks are never
-      // shared across queries)
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
+      Harness.unpersistAll(spark, blocking = false)
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .filter { case (k, _) => only.isEmpty || only.exists(k.startsWith) }
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    writeOracleSql(Paths.get(s"$outDir/oracle_sql.json"),
+      SparkEntry.oracleSql.filter { case (k, _) => picked(k) })
     spark.stop()
     // a nonzero exit makes a failed dump unmissable even when only the
     // tail of stdout/stderr is captured

@@ -41,8 +41,6 @@ sealed trait Resource {
   def packageName: String
   /** path of the code file (or defining YAML) relative to project root. */
   def filePath: String
-  /** resource type prefix of the unique id: model/source/macro/... */
-  def resourceType: String = uniqueId.takeWhile(_ != '.')
 }
 
 final case class ModelNode(

@@ -21,8 +21,6 @@ object JinjaLite {
     """\{\{\s*source\s*\(\s*['"]([A-Za-z0-9_.\-]+)['"]\s*,\s*['"]([A-Za-z0-9_.\-]+)['"]\s*\)\s*\}\}""".r
   val varRe: Regex =
     """\{\{\s*var\s*\(\s*['"]([A-Za-z0-9_.\-]+)['"]\s*(?:,\s*([^)]*?)\s*)?\)\s*\}\}""".r
-  val docRe: Regex =
-    """\{\{\s*doc\s*\(\s*['"]([A-Za-z0-9_.\-]+)['"]\s*\)\s*\}\}""".r
   val configRe: Regex = """\{\{\s*config\s*\(([\s\S]*?)\)\s*\}\}""".r
   val commentRe: Regex = """\{#[\s\S]*?#\}""".r
   val currentTimestampRe: Regex = """\{\{\s*current_timestamp\s*\(\s*\)\s*\}\}""".r
@@ -76,9 +74,6 @@ object JinjaLite {
 
   def findPythonSources(code: String): Vector[SourceCall] =
     pySourceRe.findAllMatchIn(code).map(m => SourceCall(m.group(1), m.group(2))).toVector
-
-  def findDocRefs(code: String): Vector[String] =
-    docRe.findAllMatchIn(code).map(_.group(1)).toVector
 
   /** `{{ config(k=v, ...) }}` kwargs as raw strings (quotes stripped). */
   def findConfig(code: String): Map[String, String] =

@@ -45,36 +45,12 @@ object Commands {
 
   /** The `connect` command (§3.3, `main.py:121-210`): sweep every project
     * pair for source-hack/package dependencies (deduped), then resolve
-    * each into governance + rewrite changes. `installs(a, b)` answers
-    * "does a install b as a package" (packages.yml inspection). */
-  def connect(
-      projects: Seq[Manifest],
-      installs: (String, String) => Boolean,
-      contractData: Linker.ProjectDependency => Option[YMap],
-      readFile: (String, String) => String): ChangeSet = {
-    val byName = projects.map(m => m.projectName -> m).toMap
-    val deps: Set[Linker.ProjectDependency] =
-      projects.combinations(2).flatMap { case Seq(a, b) =>
-        Linker.sourceDependencies(a, b) ++
-          (if (installs(b.projectName, a.projectName))
-            Linker.packageDependencies(a, b) else Set.empty) ++
-          (if (installs(a.projectName, b.projectName))
-            Linker.packageDependencies(b, a) else Set.empty)
-      }.toSet
-    deps.toSeq.sortBy(d => (d.upstreamProject, d.downstreamProject, d.upstreamResource))
-      .foldLeft(ChangeSet()) { (cs, dep) =>
-        // thread the accumulated set so rewrites to a file already touched
-        // by an earlier dependency chain on its pending text
-        cs ++ Linker.resolveDependency(dep,
-          upManifest(projects, byName, dep), byName(dep.downstreamProject),
-          contractData(dep), readFile, pending = cs)
-      }
-  }
-
-  /** [[connect]], with the plan split per project root: the upstream gets
-    * its model governance patches (access/contract); the downstream gets
-    * the rewrites, source removals, and dependencies.yml registration —
-    * each side's ChangeSet executes against its own project directory. */
+    * each into governance + rewrite changes, with the plan split per
+    * project root: the upstream gets its model governance patches
+    * (access/contract); the downstream gets the rewrites, source
+    * removals, and dependencies.yml registration — each side's ChangeSet
+    * executes against its own project directory. `installs(a, b)`
+    * answers "does a install b as a package" (packages.yml inspection). */
   def connectPlans(
       projects: Seq[Manifest],
       installs: (String, String) => Boolean,

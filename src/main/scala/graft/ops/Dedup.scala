@@ -2474,11 +2474,11 @@ object Dedup {
 
   def all: Seq[Q] = Seq(
     Q("d01_exact_dedup", d01, Some(d01Sql)),
-    Q("d02_ngram_jaccard", d02, Some(d02Sql), headline = true),
-    Q("d03_minhash_lsh", d03, Some(d03Sql), headline = true),
-    Q("d04_simhash", d04, Some(d04Sql), headline = true),
+    Q("d02_ngram_jaccard", d02, Some(d02Sql)),
+    Q("d03_minhash_lsh", d03, Some(d03Sql)),
+    Q("d04_simhash", d04, Some(d04Sql)),
     Q("d05_edit_blocked", d05, Some(d05Sql)),
-    Q("d06_decontaminate", d06, Some(d06Sql), headline = true),
+    Q("d06_decontaminate", d06, Some(d06Sql)),
     Q("d07_canonical_corpus", d07, Some(d07Sql)),
     Q("d08_chunk_dedup", d08, Some(d08Sql)),
     Q("d09_containment", d09, Some(d09Sql)),

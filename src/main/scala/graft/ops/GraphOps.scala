@@ -1599,8 +1599,9 @@ object GraphOps {
     * forced repartition(da) that ReuseExchange shares across deg + both
     * wedge sides (two scheduling barriers and one exchange gone). The
     * remaining 2.10 s vs the 0.57 s DuckDB CTE is stage-round floor,
-    * not data: the per-stage profile (tools/devscratch/ProfG22.scala)
-    * measured the substrate at ~0.8 s (600k-row lineitem scan + basket
+    * not data: the per-stage profile (`git show
+    * 4b84937:tools/devscratch/ProfG22.scala`) measured the substrate at
+    * ~0.8 s (600k-row lineitem scan + basket
     * collect_set + support agg — real work) and EVERY post-support frame
     * at ≤ 10k rows, with each of the ~6 sequential AQE stage rounds
     * costing ~0.2-0.3 s of scheduling; forcing
@@ -1744,8 +1745,8 @@ object GraphOps {
     * Floor adjudication (round 14, settled isolated A/B at sf0.1):
     * 2.80 s → ~2.4 s from the shared repartition(da) substrate (see
     * g21). The residue vs the 0.32 s DuckDB CTE is the same stage-round
-    * floor g21 documents (per-stage profile in
-    * tools/devscratch/ProfG22.scala: substrate ~0.8 s, every later
+    * floor g21 documents (per-stage profile in `git show
+    * 4b84937:tools/devscratch/ProfG22.scala`: substrate ~0.8 s, every later
     * frame ≤ 10k rows, ~0.2-0.3 s per sequential stage round;
     * shuffle.partitions=8 → 1.41 s, AQE off → 3.7 s).
     *
@@ -1847,7 +1848,7 @@ object GraphOps {
        |FROM reach GROUP BY reach ORDER BY reach""".stripMargin
 
   def all: Seq[Q] = Seq(
-    Q("g01_components", g01, Some(g01Sql), headline = true),
+    Q("g01_components", g01, Some(g01Sql)),
     Q("g02_triangles", g02, Some(g02Sql)),
     Q("g03_degree_hist", g03, Some(g03Sql)),
     Q("g04_pagerank", g04, Some(g04Sql)),

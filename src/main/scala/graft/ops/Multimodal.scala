@@ -1219,7 +1219,7 @@ object Multimodal {
 
   def all: Seq[Q] = Seq(
     Q("m01_binary_meta", m01, Some(m01Sql)),
-    Q("m02_feature_extract", m02, Some(m02Sql), headline = true),
+    Q("m02_feature_extract", m02, Some(m02Sql)),
     Q("m03_frame_sample", m03, Some(m03Sql)),
     Q("m04_resize", m04, Some(m04Sql)),
     Q("m05_media_dedup", m05, Some(m05Sql)),

@@ -14,9 +14,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 final case class Q(
     name: String,
     fn: (SparkSession, String) => DataFrame,
-    oracle: Option[String] = None,
-    /** headline queries are the ones Bench times */
-    headline: Boolean = false)
+    oracle: Option[String] = None)
 
 object Q {
   /** All registered operators, in registration order. */

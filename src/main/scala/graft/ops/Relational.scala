@@ -2447,25 +2447,25 @@ object Relational {
       |  AND CAST(round(l_quantity * 100) AS BIGINT) < 2400""".stripMargin
 
   val all: Seq[Q] = Seq(
-    Q("q01_pricing_summary", q01, Some(q01Sql), headline = true),
+    Q("q01_pricing_summary", q01, Some(q01Sql)),
     Q("q02_stg_projection", q02, Some(q02Sql)),
-    Q("q03_top_revenue", q03, Some(q03Sql), headline = true),
-    Q("q04_left_join_case", q04, Some(q04Sql), headline = true),
+    Q("q03_top_revenue", q03, Some(q03Sql)),
+    Q("q04_left_join_case", q04, Some(q04Sql)),
     Q("q05_case_sum", q05, Some(q05Sql)),
-    Q("q06_window_lag", q06, Some(q06Sql), headline = true),
+    Q("q06_window_lag", q06, Some(q06Sql)),
     Q("q07_customer_lifetime", q07, Some(q07Sql)),
     Q("q08_incremental_batch", q08, Some(q08Sql)),
     Q("q09_dq_tests", q09, Some(q09Sql)),
     Q("q10_semi_anti", q10, Some(q10Sql)),
     Q("q11_topk_per_group", q11, Some(q11Sql)),
-    Q("q12_star_join", q12, Some(q12Sql), headline = true),
+    Q("q12_star_join", q12, Some(q12Sql)),
     Q("q13_events_hourly", q13, Some(q13Sql)),
     Q("q14_rollup", q14, Some(q14Sql)),
     Q("q14b_cube", q14b, Some(q14bSql)),
     Q("q15_distinct_count", q15, Some(q15Sql)),
     Q("q16_set_ops", q16, Some(q16Sql)),
     Q("q19_json_extract", q19, Some(q19Sql)),
-    Q("q20_range_join", q20, Some(q20Sql), headline = true),
+    Q("q20_range_join", q20, Some(q20Sql)),
     Q("q21_salted_agg", q21, Some(q21Sql)),
     Q("q22_exact_median", q22, Some(q22Sql)),
     Q("q23_funnel", q23, Some(q23Sql)),

@@ -2082,10 +2082,10 @@ object Similarity {
   }
 
   def all: Seq[Q] = Seq(
-    Q("s01_cosine_topk", s01, Some(s01Sql), headline = true),
-    Q("s02_ivf_ann", s02, Some(s02Sql), headline = true),
+    Q("s01_cosine_topk", s01, Some(s01Sql)),
+    Q("s02_ivf_ann", s02, Some(s02Sql)),
     Q("s03_embed_neardup", s03, Some(s03Sql)),
-    Q("s04_srp_lsh", s04, Some(s04Sql), headline = true),
+    Q("s04_srp_lsh", s04, Some(s04Sql)),
     Q("s05_int8_quantized", s05, Some(s05Sql)),
     Q("s06_ann_recall", s06, Some(s06Sql)),
     Q("s07_pq_adc", s07, Some(s07Sql)),

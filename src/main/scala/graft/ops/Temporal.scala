@@ -1352,7 +1352,7 @@ object Temporal {
       |FROM d ORDER BY d.delay_s""".stripMargin
 
   def all: Seq[Q] = Seq(
-    Q("q17_sessionize", q17, Some(q17Sql), headline = true),
+    Q("q17_sessionize", q17, Some(q17Sql)),
     Q("q18_asof_join", q18, Some(q18Sql)),
     Q("q35_retention", q35, Some(q35Sql)),
     Q("q36_concurrency", q36, Some(q36Sql)),

@@ -555,14 +555,6 @@ object TextAnalysis {
     nTok >= 20 && nTok <= 90 && (dbl(nStop) / nTok) < lit(0.5)
   }
 
-  /** Multiplicity-preserving word trigrams of `ws` (callers must filter
-    * size(ws) >= 3 first — `sequence` would run backwards otherwise).
-    * Shared by batch t12 and the streaming trending-n-grams twin. */
-  def trigramsOf(ws: Column): Column =
-    transform(sequence(lit(0), size(ws) - 3), i =>
-      concat_ws(" ",
-        element_at(ws, i + 1), element_at(ws, i + 2), element_at(ws, i + 3)))
-
   /** PII scrubbing — the mandatory pre-training redaction pass: mask
     * email addresses and digit runs in free text (here `events.props`,
     * the only column in the testdata with digits) and count what was
@@ -3720,7 +3712,7 @@ object TextAnalysis {
     Q("t01_token_stats", t01, Some(t01Sql)),
     Q("t02_quality_score", t02, Some(t02Sql)),
     Q("t03_langid", t03, Some(t03Sql)),
-    Q("t04_fingerprint", t04, Some(t04Sql), headline = true),
+    Q("t04_fingerprint", t04, Some(t04Sql)),
     Q("t05_bpe_tokens", t05, Some(t05Sql)),
     Q("t06_repetition", t06, Some(t06Sql)),
     Q("t07_pack_sequences", t07, Some(t07Sql)),

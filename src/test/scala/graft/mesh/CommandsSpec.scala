@@ -48,8 +48,8 @@ class CommandsSpec extends AnyFunSuite with SparkFixture {
     val files = Map(
       ("down", "models/consumer.sql") ->
         "select * from {{ source('ext', 'shared') }}")
-    val cs = Commands.connect(Seq(up, down), (_, _) => false, _ => None,
-      (p, f) => files((p, f)))
+    val cs = Commands.connectPlans(Seq(up, down), (_, _) => false, _ => None,
+      (p, f) => files((p, f)))("down")
     assert(cs.changes.exists {
       case fc: FileChange =>
         fc.data.exists(_.contains("{{ ref('up', 'shared') }}"))
