@@ -37,8 +37,10 @@ import java.nio.file.{Files, Path, Paths}
   * a temp dir (the reference's catalog-cache lever, `cli.py:98-104`);
   * `contract --public-only` restricts contracting to public models.
   *
-  * All commands are pure planners; `--dry-run` prints the plan instead of
-  * editing files (the reference's plan/execute split, `main.py:99-110`).
+  * All commands are pure planners; `--dry-run` prints the plan and stages
+  * it against the files (so it fails on the same step a real run would)
+  * without editing them (the reference's plan/execute split,
+  * `main.py:99-110`).
   * Commands that need physical schemas (group/contract) run the project
   * on a local SparkSession first.
   */
@@ -781,13 +783,9 @@ object Main {
         names.foreach { modelName =>
           val node = m.nodes.values.find(_.name == modelName).getOrElse(
             sys.error(s"model $modelName not found"))
-          val entry = node.patchPath.map { pp =>
-            graft.core.yaml.Yaml.parseMap(readFile(pp)).get("models").collect {
-              case graft.core.yaml.YList(ms) => ms.collectFirst {
-                case e: graft.core.yaml.YMap if e.get("name").exists(_.asStr == modelName) => e
-              }
-            }.flatten.getOrElse(graft.core.yaml.YMap.empty)
-          }.getOrElse(graft.core.yaml.YMap.empty)
+          val entry = node.patchPath.flatMap(pp =>
+            graft.core.yaml.Yaml.parseMap(readFile(pp)).named("models").get(modelName))
+            .getOrElse(graft.core.yaml.YMap.empty)
           val cs = command match {
             case "add-version" =>
               Versioner.addVersion(node, entry, definedIn)

@@ -31,8 +31,6 @@ object EntityType {
   case object Test extends EntityType("test", None)
   case object Macro extends EntityType("macro", None)
   case object Doc extends EntityType("doc", None)
-  case object Code extends EntityType("code", None)
-  case object Directory extends EntityType("directory", None)
   /** dependencies.yml entries live under `projects:` */
   case object Project extends EntityType("project", Some("projects"))
 }
@@ -63,15 +61,11 @@ final case class FileChange(
     path: String,
     data: Option[String] = None,
     source: Option[String] = None) extends Change {
-  def entityType: EntityType = EntityType.Code
   def describe = s"${op.verb} file $path"
 }
 
-final case class DirectoryChange(
-    op: Operation,
-    path: String,
-    source: Option[String] = None,
-    ignore: Seq[String] = Nil) extends Change {
+/** Creates the directory at `path`; Add is the only directory op. */
+final case class DirectoryChange(op: Operation, path: String) extends Change {
   def describe = s"${op.verb} directory $path"
 }
 

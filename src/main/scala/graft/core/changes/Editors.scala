@@ -1,12 +1,13 @@
 package graft.core.changes
 
 import graft.core.yaml._
-import java.nio.file.{Files, Path, Paths, StandardOpenOption}
-import scala.jdk.CollectionConverters._
+import java.nio.ByteBuffer
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{Files, NoSuchFileException, Path, StandardCopyOption}
+import scala.collection.mutable
 
-/** Pure YAML-entry edit kernels (testable without I/O) + the file-backed
-  * editors dispatched by the processor (`storage/file_content_editors.py`,
-  * `storage/file_manager.py`).
+/** Pure YAML-entry edit kernels (testable without I/O) — the only YAML
+  * logic the processor applies (`storage/file_content_editors.py`).
   */
 object ResourceFileEditor {
 
@@ -101,116 +102,141 @@ object ResourceFileEditor {
   }
 }
 
-/** Executes changes against the filesystem. Root-relative paths. */
-final class FileEditors(root: Path) {
-
-  private def abs(p: String): Path = {
-    val raw = Paths.get(p)
-    if (raw.isAbsolute) raw else root.resolve(p)
-  }
-
-  private def readDoc(p: Path): YMap =
-    if (Files.exists(p)) Yaml.parseMap(Files.readString(p)) else YMap.empty
-
-  private def writeDoc(p: Path, doc: YMap): Unit = {
-    Files.createDirectories(p.getParent)
-    Files.writeString(p, Yaml.dump(doc))
-  }
-
-  def apply(change: Change): Unit = change match {
-    case rc: ResourceChange =>
-      val plural = rc.entityType.pluralKey.getOrElse(
-        throw new IllegalArgumentException(s"${rc.entityType.name} is not YAML-backed"))
-      val p = abs(rc.path)
-      rc.op match {
-        case Operation.Add | Operation.Update | Operation.Append =>
-          writeDoc(p, ResourceFileEditor.upsertEntry(
-            readDoc(p), plural, rc.identifier, rc.data, rc.sourceName))
-        case Operation.Remove =>
-          ResourceFileEditor.removeEntry(readDoc(p), plural, rc.identifier, rc.sourceName) match {
-            case Some(doc) => writeDoc(p, doc)
-            case None => Files.deleteIfExists(p)
-          }
-        case Operation.Move =>
-          // move = remove from source file (sourceName carries it) handled
-          // by planners as Remove+Add pairs; direct Move unsupported here
-          throw new IllegalArgumentException("ResourceChange Move must be planned as Remove+Add")
-        case Operation.Copy =>
-          throw new IllegalArgumentException("ResourceChange Copy is not defined")
-      }
-
-    case fc: FileChange =>
-      val p = abs(fc.path)
-      fc.op match {
-        case Operation.Add | Operation.Update =>
-          Files.createDirectories(p.getParent)
-          Files.writeString(p, fc.data.getOrElse(""))
-        case Operation.Append =>
-          Files.createDirectories(p.getParent)
-          Files.writeString(p, fc.data.getOrElse(""),
-            StandardOpenOption.CREATE, StandardOpenOption.APPEND)
-        case Operation.Copy =>
-          val src = abs(fc.source.getOrElse(throw new IllegalArgumentException("Copy needs source")))
-          Files.createDirectories(p.getParent)
-          Files.copy(src, p, java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-        case Operation.Move =>
-          val src = abs(fc.source.getOrElse(throw new IllegalArgumentException("Move needs source")))
-          Files.createDirectories(p.getParent)
-          Files.move(src, p, java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-        case Operation.Remove =>
-          Files.deleteIfExists(p)
-      }
-
-    case dc: DirectoryChange =>
-      val p = abs(dc.path)
-      dc.op match {
-        case Operation.Copy =>
-          val src = abs(dc.source.getOrElse(throw new IllegalArgumentException("Copy needs source")))
-          copyTree(src, p, dc.ignore)
-        case Operation.Add => Files.createDirectories(p)
-        case Operation.Remove => deleteTree(p)
-        case other => throw new IllegalArgumentException(s"directory op ${other.verb} unsupported")
-      }
-  }
-
-  private def copyTree(src: Path, dst: Path, ignore: Seq[String]): Unit = {
-    Files.walk(src).iterator().asScala.foreach { s =>
-      val rel = src.relativize(s).toString
-      val skip = ignore.exists(pat => rel.split('/').exists(seg =>
-        if (pat.contains("*")) seg.matches(pat.replace(".", "\\.").replace("*", ".*")) else seg == pat))
-      if (!skip && rel.nonEmpty) {
-        val d = dst.resolve(rel)
-        if (Files.isDirectory(s)) Files.createDirectories(d)
-        else {
-          Files.createDirectories(d.getParent)
-          Files.copy(s, d, java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-        }
-      }
-    }
-  }
-
-  private def deleteTree(p: Path): Unit =
-    if (Files.exists(p))
-      Files.walk(p).sorted(java.util.Comparator.reverseOrder[Path]())
-        .iterator().asScala.foreach(Files.deleteIfExists(_))
-}
-
 final case class ChangeSetProcessorException(step: Change, cause: Throwable)
   extends RuntimeException(s"failed applying: ${step.describe}", cause)
 
-/** Sequential, fail-fast interpreter (`change_set_processor.py:24-61`).
-  * Dry-run logs the plan without touching the filesystem. */
+/** Pending content of a path a ChangeSet touches. */
+private sealed trait Pending
+private final case class Doc(doc: YMap) extends Pending
+private final case class Bytes(bytes: Array[Byte]) extends Pending
+private case object Dir extends Pending
+private case object Deleted extends Pending
+
+/** Staged, all-or-nothing interpreter (`change_set_processor.py:24-61`,
+  * `storage/file_manager.py`). Each change folds into an in-memory view of
+  * the paths it touches, so a properties file is parsed at most once and
+  * dumped at most once per call, and the first step that cannot stage
+  * fails before anything is written. The commit then writes each touched
+  * path once (a sibling temp file, then an atomic move), deletes last, and
+  * on failure restores the files it replaced and removes the files and
+  * directories it created. Dry-run stages too, so it fails on the same
+  * step a real run would, but never commits. */
 final class ChangeSetProcessor(root: Path, dryRun: Boolean = false,
     log: String => Unit = _ => ()) {
+
   def process(sets: Seq[ChangeSet]): Unit = {
-    val editors = new FileEditors(root)
     val flat = sets.flatMap(_.changes)
-    val steps = flat.size
+    val stage = new Stage
     flat.zipWithIndex.foreach { case (c, i) =>
-      log(s"[${i + 1}/$steps] ${c.describe}")
-      if (!dryRun) {
-        try editors(c)
-        catch { case e: Throwable => throw ChangeSetProcessorException(c, e) }
+      log(s"[${i + 1}/${flat.size}] ${c.describe}")
+      try stage(c)
+      catch { case e: Throwable => throw ChangeSetProcessorException(c, e) }
+    }
+    if (!dryRun) stage.commit()
+  }
+
+  private final class Stage {
+    /** Touched paths in first-touch order, each with the last step on it. */
+    private val pending = mutable.LinkedHashMap.empty[Path, (Pending, Change)]
+    /** Each path's bytes as first read from disk (None = no file): the
+      * staging input and the commit's rollback copy. */
+    private val disk = mutable.HashMap.empty[Path, Option[Array[Byte]]]
+
+    private def abs(p: String): Path = root.resolve(p).normalize()
+
+    private def onDisk(p: Path): Option[Array[Byte]] = disk.getOrElseUpdate(p,
+      if (Files.isRegularFile(p)) Some(Files.readAllBytes(p)) else None)
+
+    private def current(p: Path): Option[Pending] =
+      pending.get(p).map(_._1).orElse(onDisk(p).map(Bytes))
+
+    private def doc(p: Path): YMap = current(p) match {
+      case Some(Doc(d)) => d
+      case Some(Bytes(b)) => Yaml.parseMap(UTF_8.newDecoder.decode(ByteBuffer.wrap(b)).toString)
+      case _ => YMap.empty
+    }
+
+    private def bytes(p: Path): Option[Array[Byte]] = current(p) match {
+      case Some(Doc(d)) => Some(Yaml.dump(d).getBytes(UTF_8))
+      case Some(Bytes(b)) => Some(b)
+      case _ => None
+    }
+
+    def apply(change: Change): Unit = {
+      val p = abs(change.path)
+      val next = change match {
+        case rc: ResourceChange =>
+          val plural = rc.entityType.pluralKey.getOrElse(
+            throw new IllegalArgumentException(s"${rc.entityType.name} is not YAML-backed"))
+          rc.op match {
+            case Operation.Add | Operation.Update | Operation.Append =>
+              Doc(ResourceFileEditor.upsertEntry(doc(p), plural, rc.identifier, rc.data, rc.sourceName))
+            case Operation.Remove =>
+              ResourceFileEditor.removeEntry(doc(p), plural, rc.identifier, rc.sourceName)
+                .fold[Pending](Deleted)(Doc)
+            case op => throw new IllegalArgumentException(
+              s"ResourceChange ${op.verb} is not defined (plan a move as Remove+Add)")
+          }
+        case fc: FileChange => fc.op match {
+          case Operation.Add | Operation.Update => Bytes(fc.data.getOrElse("").getBytes(UTF_8))
+          case Operation.Append => Bytes(bytes(p).getOrElse(Array.emptyByteArray) ++
+            fc.data.getOrElse("").getBytes(UTF_8))
+          case Operation.Copy | Operation.Move =>
+            val src = abs(fc.source.getOrElse(
+              throw new IllegalArgumentException(s"${fc.op.verb} needs source")))
+            val b = bytes(src).getOrElse(throw new NoSuchFileException(src.toString))
+            if (fc.op == Operation.Move) pending(src) = (Deleted, fc)
+            Bytes(b)
+          case Operation.Remove => Deleted
+        }
+        case dc: DirectoryChange if dc.op == Operation.Add => Dir
+        case dc => throw new IllegalArgumentException(s"directory op ${dc.op.verb} unsupported")
+      }
+      pending(p) = (next, change)
+    }
+
+    def commit(): Unit = {
+      // every path this commit created, replaced or deleted, with its bytes
+      // before (None = it did not exist), in commit order
+      val journal = mutable.ArrayBuffer.empty[(Path, Option[Array[Byte]])]
+      def mkdirs(d: Path): Unit =
+        Iterator.iterate(d)(_.getParent).takeWhile(x => x != null && !Files.exists(x))
+          .toVector.reverse.foreach { x => Files.createDirectory(x); journal += x -> None }
+      def write(p: Path, b: Array[Byte]): Unit = {
+        mkdirs(p.getParent)
+        val tmp = p.resolveSibling(s".${p.getFileName}.graft-staged")
+        journal += tmp -> None
+        Files.write(tmp, b)
+        val prior = onDisk(p)
+        Files.move(tmp, p, StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+        journal += p -> prior
+      }
+
+      var step: Change = null
+      try {
+        for ((p, (state, c)) <- pending) {
+          step = c
+          state match {
+            case Dir => mkdirs(p)
+            case Doc(d) => write(p, Yaml.dump(d).getBytes(UTF_8))
+            case Bytes(b) => write(p, b)
+            case Deleted =>
+          }
+        }
+        for ((p, (Deleted, c)) <- pending) {
+          step = c
+          val prior = onDisk(p)
+          if (Files.deleteIfExists(p)) journal += p -> prior
+        }
+      } catch {
+        case e: Throwable =>
+          journal.reverseIterator.foreach { case (p, prior) =>
+            try prior match {
+              case Some(b) => Files.write(p, b)
+              case None => Files.deleteIfExists(p)
+            } catch { case u: Throwable => e.addSuppressed(u) }
+          }
+          throw ChangeSetProcessorException(step, e)
       }
     }
   }

@@ -1,5 +1,9 @@
 package graft.core.yaml
 
+import org.yaml.snakeyaml.LoaderOptions
+import org.yaml.snakeyaml.constructor.SafeConstructor
+import org.yaml.snakeyaml.nodes.{NodeId, Tag}
+import org.yaml.snakeyaml.resolver.Resolver
 import scala.jdk.CollectionConverters._
 
 /** Order-preserving YAML value ADT.
@@ -38,6 +42,14 @@ final case class YMap(entries: Vector[(String, Y)]) extends Y {
     if (contains(k)) YMap(entries.map { case (key, old) => (key, if (key == k) v else old) })
     else YMap(entries :+ (k -> v))
   def removed(k: String): YMap = YMap(entries.filterNot(_._1 == k))
+  /** The maps listed under `k`, by their `name` (the first of a name wins):
+    * a properties file's models, sources, groups, or a source's tables. */
+  def named(k: String): Map[String, YMap] = get(k) match {
+    case Some(YList(items)) => items.reverseIterator.collect {
+      case m: YMap if m.contains("name") => m("name").asStr -> m
+    }.toMap
+    case _ => Map.empty
+  }
   def isEmpty: Boolean = entries.isEmpty
 }
 
@@ -49,11 +61,15 @@ object YList { def of(ys: Y*): YList = YList(ys.toVector) }
 
 object Yaml {
 
-  /** Parse YAML text (snakeyaml) into the Y ADT, preserving key order. */
-  def parse(text: String): Y = {
-    val yaml = new org.yaml.snakeyaml.Yaml()
-    fromJava(yaml.load[AnyRef](text))
+  /** Safe construction, with timestamps kept as their source text: an
+    * unquoted `2023-01-01` stays that string, not a `java.util.Date`. */
+  private final class TextTimestamps extends SafeConstructor(new LoaderOptions) {
+    yamlConstructors.put(Tag.TIMESTAMP, new ConstructYamlStr)
   }
+
+  /** Parse YAML text (snakeyaml) into the Y ADT, preserving key order. */
+  def parse(text: String): Y =
+    fromJava(new org.yaml.snakeyaml.Yaml(new TextTimestamps).load[AnyRef](text))
 
   def parseMap(text: String): YMap = parse(text) match {
     case m: YMap => m
@@ -77,7 +93,6 @@ object Yaml {
       })
     case l: java.util.List[_] =>
       YList(l.asScala.toVector.map(v => fromJava(v.asInstanceOf[AnyRef])))
-    case d: java.util.Date => YStr(d.toString)
     case other => YStr(other.toString)
   }
 
@@ -88,7 +103,9 @@ object Yaml {
     def scalar(v: Y): String = v match {
       case YStr(s) => quoteIfNeeded(s)
       case YInt(i) => i.toString
-      case YDbl(d) => if (d == d.floor && !d.isInfinite) f"$d%.1f" else d.toString
+      case YDbl(d) =>
+        if (d == d.floor && !d.isInfinite) "%.1f".formatLocal(java.util.Locale.ROOT, d)
+        else d.toString
       case YBool(b) => b.toString
       case YNull => "null"
       case _ => throw new IllegalStateException("not a scalar")
@@ -97,7 +114,7 @@ object Yaml {
       case m: YMap if m.entries.isEmpty => sb.append(" {}\n")
       case m: YMap =>
         if (inline) sb.append("\n")
-        m.entries.zipWithIndex.foreach { case ((k, value), _) =>
+        m.entries.foreach { case (k, value) =>
           sb.append(" " * indent).append(k).append(":")
           value match {
             case _: YMap | _: YList => write(value, indent + 2, inline = true)
@@ -107,30 +124,16 @@ object Yaml {
       case YList(items) if items.isEmpty => sb.append(" []\n")
       case YList(items) =>
         if (inline) sb.append("\n")
-        items.foreach { item =>
-          item match {
-            case m: YMap if m.entries.nonEmpty =>
-              sb.append(" " * indent).append("- ")
-              // first entry on the dash line, rest indented +2
-              val (k0, v0) = m.entries.head
-              sb.append(k0).append(":")
-              v0 match {
-                case _: YMap | _: YList => write(v0, indent + 4, inline = true)
-                case s => sb.append(" ").append(scalar(s)).append("\n")
-              }
-              m.entries.tail.foreach { case (k, value) =>
-                sb.append(" " * (indent + 2)).append(k).append(":")
-                value match {
-                  case _: YMap | _: YList => write(value, indent + 4, inline = true)
-                  case s => sb.append(" ").append(scalar(s)).append("\n")
-                }
-              }
-            case l: YList =>
-              sb.append(" " * indent).append("-")
-              write(l, indent + 2, inline = true)
-            case s =>
-              sb.append(" " * indent).append("- ").append(scalar(s)).append("\n")
-          }
+        items.foreach {
+          case m: YMap if m.entries.nonEmpty =>
+            // the map's entries at +2, its first entry on the dash line
+            val start = sb.length
+            write(m, indent + 2, inline = false)
+            sb.replace(start, start + indent + 2, " " * indent + "- ")
+          case l: YList =>
+            sb.append(" " * indent).append("-")
+            write(l, indent + 2, inline = true)
+          case s => sb.append(" " * indent).append("- ").append(scalar(s)).append("\n")
         }
       case s => sb.append(scalar(s)).append("\n")
     }
@@ -139,9 +142,18 @@ object Yaml {
   }
 
   private val plainRe = "^[A-Za-z0-9_][A-Za-z0-9_\\- ./()<>=]*$".r
+  private val resolver = new Resolver
+  private val escapes = Map('\\' -> "\\\\", '"' -> "\\\"", '\n' -> "\\n", '\r' -> "\\r", '\t' -> "\\t")
+
+  /** Plain only when the scalar reads back as this same string (not a
+    * number, bool, null or date); otherwise double-quoted with every
+    * character YAML would fold or reject escaped. */
   private def quoteIfNeeded(s: String): String =
     if (s.isEmpty) "''"
-    else if (plainRe.matches(s) && !Set("true", "false", "null", "yes", "no", "on", "off")
-      .contains(s.toLowerCase) && s.trim == s) s
-    else "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
+    else if (plainRe.matches(s) && s.trim == s &&
+      resolver.resolve(NodeId.scalar, s, true) == Tag.STR) s
+    else s.map(c => escapes.getOrElse(c,
+      if (Character.isISOControl(c) || "\u2028\u2029\ufeff\ufffe\uffff".contains(c))
+        "\\u%04x".format(c.toInt)
+      else c.toString)).mkString("\"", "", "\"")
 }

@@ -106,18 +106,15 @@ object Commands {
           rc.data.get("access").exists(_.asStr != AccessType.Private.name) =>
         rc.identifier
     }
-    val contracts = contractTargets.sorted.flatMap { name =>
-      manifest.nodes.values.find(_.name == name).map { m =>
-        val existing = m.patchPath.flatMap(readFile).map { text =>
-          Yaml.parseMap(text).get("models").collect {
-            case YList(ms) => ms.collectFirst {
-              case e: YMap if e.get("name").exists(_.asStr == name) => e
-            }
-          }.flatten.getOrElse(YMap.empty)
-        }.getOrElse(YMap.empty)
-        Contractor.generateContract(spark, m, viewName(m.name), existing)
-      }
+    val byName = manifest.nodes.values.map(m => m.name -> m).toMap
+    val targets = contractTargets.sorted.flatMap(byName.get)
+    // each distinct patch file is read and parsed once
+    val entries = targets.flatMap(_.patchPath).distinct.map(pp =>
+      pp -> readFile(pp).fold(Map.empty[String, YMap])(Yaml.parseMap(_).named("models"))).toMap
+    val contracts = targets.map { m =>
+      val existing = m.patchPath.flatMap(entries(_).get(m.name)).getOrElse(YMap.empty)
+      Contractor.generateContract(spark, m, viewName(m.name), existing)
     }
-    groupChanges ++ ChangeSet(contracts.toVector)
+    groupChanges ++ ChangeSet(contracts)
   }
 }

@@ -43,6 +43,12 @@ object SubprojectCreator {
           "the subproject both feeds and consumes the parent")
 
     val subDir = (p: String) => s"$targetDir/$p"
+    // a parent properties file is parsed once however many entries move
+    // out of it; a missing or unparseable file yields no entry
+    val docs = scala.collection.mutable.HashMap.empty[String, YMap]
+    def readNamedEntry(path: String, pluralKey: String, name: String): Option[YMap] =
+      scala.util.Try(docs.getOrElseUpdate(path, Yaml.parseMap(readFile(path)))
+        .named(pluralKey).get(name)).toOption.flatten
     val moved = selected.filter(id =>
       id.startsWith("model.") || id.startsWith("test.") || id.startsWith("seed."))
 
@@ -67,7 +73,7 @@ object SubprojectCreator {
     val fileMoves = movedModels.foldLeft(ChangeSet()) { (cs, m) =>
       val cs1 = cs + FileChange(Operation.Move, subDir(m.filePath), None, Some(m.filePath))
       m.patchPath.fold(cs1) { pp =>
-        val entry = readModelEntry(readFile, pp, m.name)
+        val entry = readNamedEntry(pp, "models", m.name)
         cs1 +
           ResourceChange(Operation.Remove, EntityType.Model, m.name, pp) +
           ResourceChange(Operation.Add, EntityType.Model, m.name, subDir(pp),
@@ -85,7 +91,12 @@ object SubprojectCreator {
     // never held the entry (`move_resource_yml_entry` skips the same way).
     val sourceMoves = selected.filter(_.startsWith("source."))
       .toSeq.sorted.flatMap(manifest.sources.get).foldLeft(ChangeSet()) { (cs, src) =>
-        readSourceEntry(readFile, src.filePath, src.sourceName, src.name).fold(cs) { entry =>
+        // the source entry reduced to the one moving table
+        // (`load_resource_yml`, dbt_project_editors.py:78-86)
+        readNamedEntry(src.filePath, "sources", src.sourceName).map { stanza =>
+          stanza.updated("tables", YList.of(stanza.named("tables")
+            .getOrElse(src.name, YMap.of("name" -> YStr(src.name)))))
+        }.fold(cs) { entry =>
           cs +
             ResourceChange(Operation.Add, EntityType.Source, src.name,
               subDir(src.filePath), entry, Some(src.sourceName)) +
@@ -95,7 +106,7 @@ object SubprojectCreator {
       }
     val exposureMoves = selected.filter(_.startsWith("exposure."))
       .toSeq.sorted.flatMap(manifest.exposures.get).foldLeft(ChangeSet()) { (cs, e) =>
-        readNamedEntry(readFile, e.filePath, "exposures", e.name).fold(cs) { entry =>
+        readNamedEntry(e.filePath, "exposures", e.name).fold(cs) { entry =>
           cs +
             ResourceChange(Operation.Add, EntityType.Exposure, e.name,
               subDir(e.filePath), entry) +
@@ -104,7 +115,7 @@ object SubprojectCreator {
       }
     val semanticMoves = selected.filter(_.startsWith("semantic_model."))
       .toSeq.sorted.flatMap(manifest.semanticModels.get).foldLeft(ChangeSet()) { (cs, sm) =>
-        readNamedEntry(readFile, sm.filePath, "semantic_models", sm.name).fold(cs) { entry =>
+        readNamedEntry(sm.filePath, "semantic_models", sm.name).fold(cs) { entry =>
           cs +
             ResourceChange(Operation.Add, EntityType.SemanticModel, sm.name,
               subDir(sm.filePath), entry) +
@@ -113,7 +124,7 @@ object SubprojectCreator {
       }
     val metricMoves = selected.filter(_.startsWith("metric."))
       .toSeq.sorted.flatMap(manifest.metrics.get).foldLeft(ChangeSet()) { (cs, met) =>
-        readNamedEntry(readFile, met.filePath, "metrics", met.name).fold(cs) { entry =>
+        readNamedEntry(met.filePath, "metrics", met.name).fold(cs) { entry =>
           cs +
             ResourceChange(Operation.Add, EntityType.Metric, met.name,
               subDir(met.filePath), entry) +
@@ -151,7 +162,7 @@ object SubprojectCreator {
     val groupIds = Dag.indirectGroups(manifest, moved)
     val groupMoves = groupIds.toSeq.sorted.flatMap(manifest.groups.get)
       .foldLeft(ChangeSet()) { (cs, g) =>
-        readNamedEntry(readFile, g.filePath, "groups", g.name).fold(cs) { entry =>
+        readNamedEntry(g.filePath, "groups", g.name).fold(cs) { entry =>
           cs + ResourceChange(Operation.Add, EntityType.Group, g.name,
             subDir(g.filePath), entry)
         }
@@ -220,27 +231,4 @@ object SubprojectCreator {
       parentRewrites ++ ChangeSet(macroRewrites.toVector) ++
       parentGovernance ++ packagesCopy ++ depChange
   }
-
-  private def readModelEntry(readFile: String => String, path: String,
-      name: String): Option[YMap] =
-    readNamedEntry(readFile, path, "models", name)
-
-  private def readNamedEntry(readFile: String => String, path: String,
-      pluralKey: String, name: String): Option[YMap] =
-    try {
-      Yaml.parseMap(readFile(path)).get(pluralKey).collect { case YList(ms) =>
-        ms.collectFirst { case m: YMap if m.get("name").exists(_.asStr == name) => m }
-      }.flatten
-    } catch { case _: Throwable => None }
-
-  /** The source entry at `path` reduced to the single table `table`
-    * (`load_resource_yml`, dbt_project_editors.py:78-86). */
-  private def readSourceEntry(readFile: String => String, path: String,
-      sourceName: String, table: String): Option[YMap] =
-    readNamedEntry(readFile, path, "sources", sourceName).map { src =>
-      val one = src.get("tables").collect { case YList(ts) =>
-        ts.collectFirst { case t: YMap if t.get("name").exists(_.asStr == table) => t }
-      }.flatten.getOrElse(YMap.of("name" -> YStr(table)))
-      src.updated("tables", YList.of(one))
-    }
 }

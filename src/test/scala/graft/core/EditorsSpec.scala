@@ -1,11 +1,15 @@
 package graft.core
 
 import graft.core.changes._
+import graft.core.model.ProjectConfig
 import graft.core.yaml._
+import graft.mesh.SubprojectCreator
 import org.scalatest.funsuite.AnyFunSuite
-import java.nio.file.Files
+import java.nio.file.{Files, Path}
+import scala.jdk.CollectionConverters._
+import scala.util.Using
 
-/** E2–E8 — YAML entry edit kernels + the file-backed processor
+/** E2–E8 — YAML entry edit kernels + the staged, all-or-nothing processor
   * (`storage/file_content_editors.py`, `change_set_processor.py`). */
 class EditorsSpec extends AnyFunSuite {
 
@@ -115,28 +119,122 @@ class EditorsSpec extends AnyFunSuite {
 
   test("processor is fail-fast and wraps the failing step") {
     val root = Files.createTempDirectory("graft_editors2")
+    Files.writeString(root.resolve("keep.sql"), "select 1")
+    val before = tree(root)
     val bad = ChangeSet(Vector(
       FileChange(Operation.Move, "x.sql", None, Some("missing.sql")),
       FileChange(Operation.Add, "never.sql", Some("x"))))
+    val logged = Vector.newBuilder[String]
     val e = intercept[ChangeSetProcessorException](
-      new ChangeSetProcessor(root).process(Seq(bad)))
+      new ChangeSetProcessor(root, log = logged += _).process(Seq(bad)))
     assert(e.getMessage.contains("x.sql"))
-    assert(!Files.exists(root.resolve("never.sql"))) // later steps not applied
+    assert(e.step == bad.changes.head)
+    assert(e.getCause.isInstanceOf[java.nio.file.NoSuchFileException])
+    assert(logged.result() == Vector("[1/2] Move file x.sql")) // later steps not reached
+    assert(!Files.exists(root.resolve("never.sql")))
+    // dry-run stages too: same failing step, nothing written
+    val dry = intercept[ChangeSetProcessorException](
+      new ChangeSetProcessor(root, dryRun = true).process(Seq(bad)))
+    assert(dry.step == e.step)
+    assert(tree(root) == before)
   }
 
-  test("E7: directory copy honors ignore patterns") {
-    val root = Files.createTempDirectory("graft_dircopy")
-    Files.createDirectories(root.resolve("tpl/models"))
-    Files.createDirectories(root.resolve("tpl/target"))
-    Files.writeString(root.resolve("tpl/models/a.sql"), "select 1")
-    Files.writeString(root.resolve("tpl/target/junk.json"), "{}")
-    Files.writeString(root.resolve("tpl/readme.md"), "hi")
+  test("a step that fails to stage leaves a real split plan's tree byte-identical") {
+    val root = Files.createTempDirectory("graft_split_fault")
+    write(root, Map(
+      "dbt_project.yml" -> "name: jaffle\n",
+      "packages.yml" -> "packages: []\n",
+      "models/stg_orders.sql" -> "select * from {{ source('raw', 'orders') }}",
+      "models/orders.sql" -> "select * from {{ ref('stg_orders') }}",
+      "models/report.sql" -> "select count(*) from {{ ref('orders') }}",
+      "models/__models.yml" -> "models:\n  - name: orders\n    description: mart\n",
+      "models/__exposures.yml" ->
+        "exposures:\n  - name: dash\n    type: dashboard\n    depends_on:\n      - ref('orders')\n",
+      "models/staging/__sources.yml" ->
+        "sources:\n  - name: raw\n    tables:\n      - name: orders\n"))
+    val plan = SubprojectCreator.initialize(graft.mesh.Fixtures.chain(),
+      ProjectConfig("jaffle"), "sub", Set("model.jaffle.orders", "model.jaffle.report",
+        "exposure.jaffle.dash"), "sub_proj", p => Files.readString(root.resolve(p)))
+    val ghost = FileChange(Operation.Move, "sub_proj/ghost.sql", None, Some("models/ghost.sql"))
+    val before = tree(root)
+    val e = intercept[ChangeSetProcessorException](
+      new ChangeSetProcessor(root).process(Seq(plan + ghost)))
+    assert(e.step == ghost)
+    assert(tree(root) == before)
+    // the same plan without the fault does rewrite the tree
+    new ChangeSetProcessor(root).process(Seq(plan))
+    assert(Files.exists(root.resolve("sub_proj/models/orders.sql")))
+    assert(!Files.exists(root.resolve("models/orders.sql")))
+  }
+
+  test("a commit that fails midway rolls back every replaced, created and deleted path") {
+    val root = Files.createTempDirectory("graft_commit_fault")
+    write(root, Map(
+      "models/_m.yml" -> "version: 2\nmodels:\n  - name: a\n",
+      "models/a.sql" -> "select 1",
+      "models/old.sql" -> "select 0",
+      "blocker" -> "a regular file",
+      "full/f.sql" -> "select 9"))
+    val before = tree(root)
+    val edits = Vector(
+      ResourceChange(Operation.Update, EntityType.Model, "a", "models/_m.yml",
+        YMap.of("access" -> YStr("public"))),
+      FileChange(Operation.Update, "models/a.sql", Some("select 2")),
+      FileChange(Operation.Add, "new/deep/b.sql", Some("select 3")),
+      DirectoryChange(Operation.Add, "made/here"),
+      FileChange(Operation.Remove, "models/old.sql"))
+    // the write phase fails on the last file: its parent is a regular file
+    val blocked = FileChange(Operation.Add, "blocker/x.sql", Some("x"))
+    val e = intercept[ChangeSetProcessorException](
+      new ChangeSetProcessor(root).process(Seq(ChangeSet(edits :+ blocked))))
+    assert(e.step == blocked)
+    assert(tree(root) == before)
+    // the delete phase fails after models/old.sql is gone: a non-empty directory
+    val stuck = FileChange(Operation.Remove, "full")
+    val e2 = intercept[ChangeSetProcessorException](
+      new ChangeSetProcessor(root).process(Seq(ChangeSet(edits :+ stuck))))
+    assert(e2.step == stuck)
+    assert(tree(root) == before)
+  }
+
+  test("same-path order: a Move then an Append to the moved file, bytes kept exactly") {
+    val root = Files.createTempDirectory("graft_order_move")
+    val raw = Array[Byte](-1, -2, 0) ++ "sql".getBytes("UTF-8") // not valid UTF-8
+    Files.createDirectories(root.resolve("models"))
+    Files.write(root.resolve("models/a.sql"), raw)
     new ChangeSetProcessor(root).process(Seq(ChangeSet(Vector(
-      DirectoryChange(Operation.Copy, "out", Some("tpl"),
-        ignore = Seq("target", "*.md"))))))
-    assert(Files.readString(root.resolve("out/models/a.sql")) == "select 1")
-    assert(!Files.exists(root.resolve("out/target")))
-    assert(!Files.exists(root.resolve("out/readme.md")))
+      FileChange(Operation.Move, "sub/models/a.sql", None, Some("./models/a.sql")),
+      FileChange(Operation.Append, "sub/models/a.sql", Some("\n-- tail")),
+      FileChange(Operation.Copy, "sub/models/copy.sql", None, Some("sub/models/a.sql"))))))
+    val expected = raw ++ "\n-- tail".getBytes("UTF-8")
+    assert(tree(root) == Map(
+      "" -> None, "models" -> None, "sub" -> None, "sub/models" -> None,
+      "sub/models/a.sql" -> Some(expected.toVector),
+      "sub/models/copy.sql" -> Some(expected.toVector)))
+  }
+
+  test("same-path order: a Remove that empties a file, then an Add re-creates it") {
+    val root = Files.createTempDirectory("graft_order_readd")
+    write(root, Map("models/_m.yml" -> "version: 2\nmodels:\n  - name: a\n"))
+    new ChangeSetProcessor(root).process(Seq(ChangeSet(Vector(
+      ResourceChange(Operation.Remove, EntityType.Model, "a", "models/_m.yml"),
+      // `./models/_m.yml` and `models/_m.yml` are one path
+      ResourceChange(Operation.Add, EntityType.Model, "b", "./models/_m.yml",
+        YMap.of("access" -> YStr("public")))))))
+    assert(text(root) == Map("models/_m.yml" ->
+      "version: 2\nmodels:\n  - name: b\n    access: public\n"))
+  }
+
+  test("same-path order: a file Update to a .yml, then a ResourceChange on it") {
+    val root = Files.createTempDirectory("graft_order_update")
+    write(root, Map("models/_m.yml" -> "version: 2\nmodels:\n  - name: old\n"))
+    new ChangeSetProcessor(root).process(Seq(ChangeSet(Vector(
+      FileChange(Operation.Update, "models/_m.yml",
+        Some("models:\n  - name: a\n    description: from text\n")),
+      ResourceChange(Operation.Update, EntityType.Model, "a", "models/_m.yml",
+        YMap.of("access" -> YStr("public")))))))
+    assert(text(root) == Map("models/_m.yml" ->
+      "version: 2\nmodels:\n  - name: a\n    description: from text\n    access: public\n"))
   }
 
   test("yaml dump round-trips through parse") {
@@ -148,5 +246,23 @@ class EditorsSpec extends AnyFunSuite {
         "columns" -> YList.of(
           YMap.of("name" -> YStr("id"), "data_type" -> YStr("integer"))))))
     assert(Yaml.parseMap(Yaml.dump(doc)) == doc)
+  }
+
+  private def write(root: Path, files: Map[String, String]): Unit =
+    files.foreach { case (rel, body) =>
+      Files.createDirectories(root.resolve(rel).getParent)
+      Files.writeString(root.resolve(rel), body)
+    }
+
+  /** Every path under `root` (relative), with its bytes when a file. */
+  private def tree(root: Path): Map[String, Option[Vector[Byte]]] =
+    Using.resource(Files.walk(root))(_.iterator.asScala.map { p =>
+      root.relativize(p).toString ->
+        Option.when(Files.isRegularFile(p))(Files.readAllBytes(p).toVector)
+    }.toMap)
+
+  /** The files under `root` as text. */
+  private def text(root: Path): Map[String, String] = tree(root).collect {
+    case (rel, Some(bytes)) => rel -> new String(bytes.toArray, "UTF-8")
   }
 }
