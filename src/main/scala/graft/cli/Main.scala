@@ -234,8 +234,8 @@ object Main {
       case "run" =>
         val (cfg, m) = ProjectLoader.load(root)
         val sel = if (!selectionActive) None else Some(selection(m))
-        // dbt's --threads: level-parallel model execution (independent
-        // DAG subtrees run concurrently on the shared session)
+        // dbt's --threads: up to N models run at once on the shared
+        // session, each starting as soon as its parents settle
         val threads = args.flags("threads").headOption.map(_.toInt).getOrElse(1)
         // dbt's --defer: refs outside the selection serve from the state
         // manifest's relations (requires --state, like state: selectors)

@@ -61,9 +61,18 @@ object YList { def of(ys: Y*): YList = YList(ys.toVector) }
 
 object Yaml {
 
+  /** No document-size cap: snakeyaml's default rejects documents over
+    * 3 MiB of code points, which a single `schema.yml` of an ordinary
+    * large dbt project exceeds (dbt-core's PyYAML loader has no cap). */
+  private def loaderOptions: LoaderOptions = {
+    val o = new LoaderOptions
+    o.setCodePointLimit(Int.MaxValue)
+    o
+  }
+
   /** Safe construction, with timestamps kept as their source text: an
     * unquoted `2023-01-01` stays that string, not a `java.util.Date`. */
-  private final class TextTimestamps extends SafeConstructor(new LoaderOptions) {
+  private final class TextTimestamps extends SafeConstructor(loaderOptions) {
     yamlConstructors.put(Tag.TIMESTAMP, new ConstructYamlStr)
   }
 

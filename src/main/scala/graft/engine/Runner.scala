@@ -139,7 +139,7 @@ final class Runner(
     JinjaLite.render(
       code,
       resolveRef = refResolver,
-      resolveSource = sourceResolver(where),
+      resolveSource = sourceRelation(_, where),
       vars = vars,
       thisRelation = thisRel,
       macros = macroDefs,
@@ -151,22 +151,29 @@ final class Runner(
       deferTargets.getOrElse(rc.name, refView(rc))
     else refView(rc)
 
-  /** The canonical source() resolution: a same-project seed with the
-    * source table's name materializes it in-session (the jaffle pattern:
-    * seeds stand in for raw tables); an `external:` source registers its
-    * file read; otherwise the configured resolver (default: raw table
-    * name). */
-  private def sourceResolver(where: String): JinjaLite.SourceCall => String =
-    sc => {
-      val src = manifest.sources.values
-        .find(s => s.sourceName == sc.sourceName && s.name == sc.table)
-        .getOrElse(throw new IllegalArgumentException(
-          s"unknown source ${sc.sourceName}.${sc.table} in $where"))
-      val seedId = s"seed.${manifest.projectName}.${src.name}"
-      if (manifest.nodes.contains(seedId)) viewName(src.name)
-      else if (src.external.isDefined) externalView(src)
-      else sourceView(src)
-    }
+  /** (source name, table) → definition, built once per Runner. */
+  private val sourcesByName: Map[(String, String), SourceDefinition] =
+    manifest.sources.values.map(s => (s.sourceName, s.name) -> s).toMap
+
+  /** The same-project seed whose table a source call names, if any (the
+    * jaffle pattern: seeds stand in for raw tables). */
+  private def sourceSeed(sc: JinjaLite.SourceCall): Option[String] =
+    sourcesByName.get((sc.sourceName, sc.table))
+      .map(s => s"seed.${manifest.projectName}.${s.name}")
+      .filter(manifest.nodes.contains)
+
+  /** The canonical source() resolution, for SQL and Python models alike:
+    * a same-project seed materializes the table in-session; an
+    * `external:` source registers its file read; otherwise the
+    * configured resolver (default: raw table name). */
+  private def sourceRelation(sc: JinjaLite.SourceCall, where: String): String = {
+    val src = sourcesByName.getOrElse((sc.sourceName, sc.table),
+      throw new IllegalArgumentException(
+        s"unknown source ${sc.sourceName}.${sc.table} in $where"))
+    if (sourceSeed(sc).isDefined) viewName(src.name)
+    else if (src.external.isDefined) externalView(src)
+    else sourceView(src)
+  }
 
   // ------------------------------------------------------------- hooks
   /** dbt's hook surface (the reference's own source-hack fixture declares
@@ -274,11 +281,13 @@ final class Runner(
         case y => Seq(y.asStr)
       }
 
-  /** Execute all models in topological order; returns produced frames.
-    * With `parallelism > 1`, each dependency level's models run as
-    * concurrent Spark jobs on this session (sessions are thread-safe;
-    * independent subtrees keep the executors busy while slow models
-    * materialize — the scheduler a 1000-executor cluster needs). */
+  /** Execute all models in dependency order; returns produced frames.
+    * A model becomes ready once every in-run parent has settled, and up
+    * to `parallelism` ready models run as concurrent Spark jobs on this
+    * session (sessions are thread-safe). There is no level barrier: a
+    * model never waits for unrelated models at its depth, so independent
+    * subtrees keep the executors busy while slow models materialize. At
+    * `parallelism = 1` the run order is exactly the topological order. */
   def run(selected: Option[Set[String]] = None,
       parallelism: Int = 1): Map[String, DataFrame] =
     runWithStatus(selected, parallelism, continueOnError = false)._1
@@ -289,7 +298,8 @@ final class Runner(
     * running — the statuses feed target/run_results.json, which
     * `graft retry` and `result:` selectors consume. With
     * `continueOnError = false` the first failure propagates (the
-    * library contract [[run]] keeps). */
+    * library contract [[run]] keeps): no further model starts, the
+    * models already running settle, then that failure is rethrown. */
   def runWithStatus(selected: Option[Set[String]] = None,
       parallelism: Int = 1, continueOnError: Boolean = true,
       /** Pre-materialization gate (dbt 1.8 build: a model's unit tests
@@ -372,10 +382,7 @@ final class Runner(
             if (m.language == "python")
               graft.core.parse.JinjaLite.findPythonSources(m.rawCode)
             else graft.core.parse.JinjaLite.findSources(m.rawCode)
-          val seeds = calls.flatMap(sc => manifest.sources.values
-            .find(s => s.sourceName == sc.sourceName && s.name == sc.table))
-            .map(s => s"seed.${manifest.projectName}.${s.name}")
-            .filter(manifest.nodes.contains).toSet
+          val seeds = calls.flatMap(sourceSeed).toSet
           if (seeds.isEmpty) None else Some(id -> seeds)
         }
       }
@@ -400,63 +407,29 @@ final class Runner(
     def parentBad(id: String): Boolean =
       parentMapSched.getOrElse(id, Set.empty).exists(pid =>
         status.get(pid).exists(s => s == "error" || s == "skipped"))
-    def execute(id: String, m: ModelNode): Unit =
-      if (reused(id)) {
-        // warehouse fast path: read the existing table back (sidecar
-        // schema honored), re-check the contract, register the view —
-        // and run NO hooks. Guarded like the normal path: a corrupt /
-        // partially-written table or a contract mismatch marks the node
-        // "error" (descendants skip via parentBad) instead of crashing
-        // the whole retry past the on-run-end hooks.
-        try {
-          val df = readTable(tablePath(m))
-          for (contract <- m.contract if m.contractEnforced)
-            Contracts.check(m.name, df.schema, contract)
-          df.createOrReplaceTempView(viewName(m.name))
-          out(id) = df; status(id) = "success"
-        } catch {
-          case e: Throwable if continueOnError =>
-            System.err.println(s"[run] $id failed: ${e.getMessage}")
-            status(id) = "error"
-        }
+    def settle(id: String, body: => DataFrame): Unit =
+      try { out(id) = body; status(id) = "success" }
+      catch {
+        case e: Throwable if continueOnError =>
+          System.err.println(s"[run] $id failed: ${e.getMessage}")
+          status(id) = "error"
       }
+    // a reused node reads its table back and runs NO hooks; a corrupt /
+    // partially-written table or a contract mismatch marks it "error"
+    // (descendants skip via parentBad) like any failing model
+    def execute(id: String, m: ModelNode): Unit =
+      if (reused(id)) settle(id, runModelBody(m, reuse = true))
       else if (parentBad(id)) status(id) = "skipped"
       else gate(m) match {
         case Some(reason) =>
           System.err.println(s"[run] $id skipped: $reason")
           status(id) = "skipped"
-        case None =>
-          try { out(id) = runModel(m); status(id) = "success" }
-          catch {
-            case e: Throwable if continueOnError =>
-              System.err.println(s"[run] $id failed: ${e.getMessage}")
-              status(id) = "error"
-          }
+        case None => settle(id, runModel(m))
       }
-    if (parallelism <= 1)
-      order.foreach(id => manifest.nodes.get(id).foreach(execute(id, _)))
-    else {
-      // Kahn levels: a model's level = 1 + max level of its in-set parents
-      val level = scala.collection.mutable.Map.empty[String, Int]
-      order.foreach { id =>
-        val ps = parentMapSched.getOrElse(id, Set.empty).filter(all)
-        level(id) = if (ps.isEmpty) 0 else ps.map(level).max + 1
-      }
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      import scala.concurrent.duration.Duration
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(parallelism)
-      implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-      try
-        // a level's models are mutually independent; every parent's
-        // status is final before its level launches, so parentBad inside
-        // execute reads settled state
-        order.groupBy(level).toSeq.sortBy(_._1).foreach { case (_, ids) =>
-          val fs = ids.flatMap(id => manifest.nodes.get(id).map(m =>
-            Future(execute(id, m))))
-          fs.foreach(Await.result(_, Duration.Inf))
-        }
-      finally pool.shutdown()
-    }
+    // a model starts only after all its in-run parents settled, so
+    // parentBad inside execute reads final statuses
+    Runner.schedule(order, parentMapSched.getOrElse(_, Set.empty),
+      parallelism)(id => manifest.nodes.get(id).foreach(execute(id, _)))
     // on-run-end: after every node settles; {{ results }} carries the
     // run's outcomes (id=status, comma-joined in id order). Reaching
     // this line on the fail-fast path means nothing threw, so running
@@ -489,76 +462,25 @@ final class Runner(
     out
   }
 
-  private def runModelBody(m: ModelNode): DataFrame = {
-    if (m.language == "python") {
-      // --read-catalog applies language-independently: a persisted python
-      // table model is read back, not recomputed
-      val pyCached =
-        if (readCatalog && !fullRefresh &&
-            Set("table", "incremental")(m.materialized) &&
-            Files.exists(tablePath(m)))
-          // readTable, not a raw parquet read: a partitioned python
-          // model's sidecar schema must round-trip here too
-          Some(readTable(tablePath(m)))
-        else None
-      pyCached match {
-        case Some(df) =>
-          // the cached frame is still contract-bound (the SQL cached
-          // path flows through the check below; mirror it)
-          for (contract <- m.contract if m.contractEnforced)
-            Contracts.check(m.name, df.schema, contract)
-          df.createOrReplaceTempView(viewName(m.name))
-          return df
-        case None => ()
-      }
-      // the pandas-idiom interpreter resolves dbt.ref/dbt.source to the
-      // same session views SQL models use, so mixed-language DAGs chain.
-      // Access enforcement mirrors the SQL path: SQL models are checked
-      // by the analysis rule over the rendered plan; python refs resolve
-      // here, so each target is checked at resolution time — a private
-      // cross-group ref fails identically in both languages.
-      val out = PyModelPort.run(
-        m.rawCode,
-        resolveRef = name => deferTargets.get(name) match {
-          case Some(rel) => spark.table(rel) // deferred to the state relation
-          case None =>
-            if (enforceAccess)
-              graft.enforce.AccessControl.forSession(spark).checkRelation(
-                viewName(name),
-                graft.enforce.AccessControl.Context(m.packageName, m.group))
-            spark.table(viewName(name))
-        },
-        resolveSource = (sn, tbl) => {
-          val src = manifest.sources.values
-            .find(s => s.sourceName == sn && s.name == tbl)
-            .getOrElse(throw new IllegalArgumentException(
-              s"unknown source $sn.$tbl in ${m.name}"))
-          val seedId = s"seed.${manifest.projectName}.${src.name}"
-          if (manifest.nodes.contains(seedId)) spark.table(viewName(src.name))
-          else if (src.external.isDefined) spark.table(externalView(src))
-          else spark.table(sourceView(src))
-        })
-      val res = m.materialized match {
-        case "table" | "incremental" => persist(m, out)
-        case _ => out
-      }
-      // contracts bind to the model, not its language — enforce the
-      // produced schema exactly like the SQL path below
-      for (contract <- m.contract if m.contractEnforced)
-        Contracts.check(m.name, res.schema, contract)
-      res.createOrReplaceTempView(viewName(m.name))
-      return res
-    }
+  /** The model body and its one tail: the contract check and the
+    * session view. `reuse` serves a table-backed model from its
+    * warehouse table (retry's healthy parents). */
+  private def runModelBody(m: ModelNode, reuse: Boolean = false): DataFrame = {
     // --read-catalog: any already-materialized persistent model is read
     // back instead of recomputed (and, for incremental/snapshot, not
     // advanced — the catalog is treated as current, like the reference
-    // skipping `dbt docs generate`)
+    // skipping `dbt docs generate`); language-independent
     def cached: Option[DataFrame] = {
       val p = tablePath(m)
-      if (readCatalog && !fullRefresh && Files.exists(p)) Some(readTable(p))
+      if ((reuse || readCatalog && !fullRefresh) && Files.exists(p))
+        Some(readTable(p))
       else None
     }
+    val python = m.language == "python"
     val out = m.materialized match {
+      case "table" | "incremental" if python =>
+        cached.getOrElse(persist(m, runPython(m)))
+      case _ if python => runPython(m)
       // Ephemeral lowers to a session TEMP VIEW rather than dbt's CTE
       // inlining — semantically equivalent on Spark: a temp view is a
       // named LAZY logical plan, so referencing models splice the
@@ -604,6 +526,27 @@ final class Runner(
     out
   }
 
+  /** A Python model's body: the pandas-idiom interpreter resolves
+    * dbt.ref/dbt.source to the same session views SQL models use, so
+    * mixed-language DAGs chain. Access enforcement mirrors the SQL path:
+    * SQL models are checked by the analysis rule over the rendered plan;
+    * python refs resolve here, so each target is checked at resolution
+    * time — a private cross-group ref fails identically in both
+    * languages. */
+  private def runPython(m: ModelNode): DataFrame =
+    PyModelPort.run(
+      m.rawCode,
+      resolveRef = name => deferTargets.get(name) match {
+        case Some(rel) => spark.table(rel) // deferred to the state relation
+        case None =>
+          if (enforceAccess)
+            AccessControl.forSession(spark).checkRelation(viewName(name),
+              AccessControl.Context(m.packageName, m.group))
+          spark.table(viewName(name))
+      },
+      resolveSource = (sn, tbl) =>
+        spark.table(sourceRelation(JinjaLite.SourceCall(sn, tbl), m.name)))
+
   private def execSql(m: ModelNode, isIncremental: Boolean): DataFrame = {
     val sql = renderSql(m, isIncremental)
     // explicit per-model identity — no ambient mutable context, so
@@ -618,13 +561,6 @@ final class Runner(
 
   private def schemaSidecar(p: Path): Path = p.resolve("_graft_schema.json")
 
-  /** Write a persisted table, honoring `partition_by` (Hive directory
-    * layout — downstream filters on the partition columns land in
-    * PartitionFilters and skip whole directories). Partitioned reads
-    * re-infer partition-column types from the directory names and move
-    * those columns last, so the model's declared schema is pinned in an
-    * underscore-prefixed sidecar (ignored by Spark's file index, like
-    * _SUCCESS) and re-applied on every read-back. */
   /** dbt-spark's `file_format` config: the storage format a `table`
     * model materializes as. Parquet (default) everywhere; csv/json/orc
     * are honored for plain table materializations only — the
@@ -638,6 +574,13 @@ final class Runner(
 
   private def formatSidecar(p: Path): Path = p.resolve("_graft_format")
 
+  /** Write a persisted table, honoring `partition_by` (Hive directory
+    * layout — downstream filters on the partition columns land in
+    * PartitionFilters and skip whole directories). The written schema is
+    * pinned in an underscore-prefixed sidecar (ignored by Spark's file
+    * index, like _SUCCESS) and re-applied on every read-back: partitioned
+    * reads would otherwise re-infer partition-column types from the
+    * directory names and move those columns last. */
   private def writeTable(m: ModelNode, df: DataFrame, p: Path): Unit = {
     val fmt = fileFormat(m)
     if (fmt != "parquet" && m.materialized != "table")
@@ -649,9 +592,9 @@ final class Runner(
     (if (m.partitionBy.nonEmpty) w.partitionBy(m.partitionBy: _*) else w)
       .save(p.toString)
     // schema-lossy formats (csv: all strings; json: no decimals/ordering
-    // guarantees) and partitioned layouts round-trip through the sidecar
-    if (m.partitionBy.nonEmpty || fmt != "parquet")
-      Files.writeString(schemaSidecar(p), df.schema.json)
+    // guarantees) and partitioned layouts need the sidecar; for plain
+    // parquet it spares the read-back a schema-inference job
+    Files.writeString(schemaSidecar(p), df.schema.json)
     if (fmt != "parquet") Files.writeString(formatSidecar(p), fmt)
   }
 
@@ -659,16 +602,20 @@ final class Runner(
     val fmtSc = formatSidecar(p)
     val fmt = if (Files.exists(fmtSc)) Files.readString(fmtSc).trim else "parquet"
     val sc = schemaSidecar(p)
-    if (Files.exists(sc)) {
-      val st = org.apache.spark.sql.types.DataType.fromJson(Files.readString(sc))
-        .asInstanceOf[org.apache.spark.sql.types.StructType]
-      // the user-provided schema pins partition-column TYPES (no
-      // inference), but Spark still appends partition columns last —
-      // the select restores the model's declared column order
-      val r0 = spark.read.schema(st).format(fmt)
-      val r = if (fmt == "csv") r0.option("header", "true") else r0
-      r.load(p.toString).select(st.fieldNames.map(col): _*)
-    } else spark.read.format(fmt).load(p.toString)
+    // only a parquet table written before every table carried the
+    // sidecar lacks one; its schema is inferred (a Spark job)
+    val st =
+      if (Files.exists(sc))
+        org.apache.spark.sql.types.DataType.fromJson(Files.readString(sc))
+          .asInstanceOf[org.apache.spark.sql.types.StructType]
+      else spark.read.format(fmt).load(p.toString).schema
+    // the user-provided schema pins partition-column TYPES (no
+    // inference), but Spark still appends partition columns last — the
+    // select restores the model's declared column order. File sources
+    // read every column as nullable, as inference would.
+    val r0 = spark.read.schema(st).format(fmt)
+    val r = if (fmt == "csv") r0.option("header", "true") else r0
+    r.load(p.toString).select(st.fieldNames.map(col): _*)
   }
 
   /** dbt's `clone`: materialize `df` (a state relation's current rows)
@@ -1224,7 +1171,7 @@ final class Runner(
     val refs = JinjaLite.findBareRefs(input)
     val srcs = JinjaLite.findBareSources(input)
     if (refs.nonEmpty) refResolver(refs.head)
-    else if (srcs.nonEmpty) sourceResolver(s"unit test $utName")(srcs.head)
+    else if (srcs.nonEmpty) sourceRelation(srcs.head, s"unit test $utName")
     else throw new IllegalArgumentException(
       s"unit test $utName: given input '$input' is neither ref() nor source()")
   }
@@ -1302,7 +1249,7 @@ final class Runner(
       val sql = JinjaLite.render(m.rawCode,
         resolveRef = rc => { val v = refResolver(rc); fixtures.getOrElse(v, v) },
         resolveSource = sc => {
-          val v = sourceResolver(where)(sc); fixtures.getOrElse(v, v) },
+          val v = sourceRelation(sc, where); fixtures.getOrElse(v, v) },
         vars = vars,
         thisRelation = Some(viewName(m.name)),
         macros = macroDefs,
@@ -1425,7 +1372,7 @@ final class Runner(
                 val p = storeFailuresPath(t)
                 Files.createDirectories(p.getParent)
                 frame.write.mode("overwrite").parquet(p.toString)
-                spark.read.parquet(p.toString).count()
+                spark.read.schema(frame.schema).parquet(p.toString).count()
               } else frame.count()
             (testStatus(t, v), v)
           } catch {
@@ -1588,6 +1535,54 @@ final class Runner(
 
 object Runner {
   private type ExtKey = (String, String, Seq[(String, String)])
+
+  /** Ready-queue DAG scheduler (Kahn's algorithm with bounded
+    * concurrency): `order` is a topological order of the nodes to run;
+    * a node is ready once every parent in `order` has settled, and ready
+    * nodes start in `order` position, at most `parallelism` at once. At
+    * `parallelism = 1` nodes therefore run exactly in `order`. After the
+    * first throw no node starts; the running ones settle and then that
+    * throw is rethrown, so nothing writes after the caller sees it. */
+  private[engine] def schedule(order: Vector[String],
+      parents: String => Set[String], parallelism: Int)(
+      run: String => Unit): Unit = {
+    val pos = order.zipWithIndex.toMap
+    val waiting = scala.collection.mutable.Map.empty[String, Int]
+    val children = scala.collection.mutable.Map.empty[String, List[String]]
+    order.foreach { id =>
+      val ps = parents(id).filter(pos.contains)
+      waiting(id) = ps.size
+      ps.foreach(p => children(p) = id :: children.getOrElse(p, Nil))
+    }
+    val ready = scala.collection.mutable.PriorityQueue
+      .from(order.indices.filter(i => waiting(order(i)) == 0))(Ordering[Int].reverse)
+    val slots = math.max(1, parallelism)
+    val settled = new java.util.concurrent.LinkedBlockingQueue[(String, Option[Throwable])]
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(slots)
+    var running = 0
+    var failure: Option[Throwable] = None
+    def launch(): Unit =
+      while (failure.isEmpty && running < slots && ready.nonEmpty) {
+        val id = order(ready.dequeue())
+        running += 1
+        pool.execute(() => settled.put(id ->
+          (try { run(id); None } catch { case e: Throwable => Some(e) })))
+      }
+    try {
+      launch()
+      while (running > 0) {
+        val (id, err) = settled.take()
+        running -= 1
+        if (err.isDefined) failure = failure.orElse(err)
+        else children.getOrElse(id, Nil).foreach { c =>
+          waiting(c) -= 1
+          if (waiting(c) == 0) ready.enqueue(pos(c))
+        }
+        launch()
+      }
+    } finally pool.shutdown()
+    failure.foreach(throw _)
+  }
 
   /** Per-session view name → the resolved (location, format, options)
     * the external-source temp view was registered from. See

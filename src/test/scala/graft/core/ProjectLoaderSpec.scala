@@ -1,6 +1,9 @@
 package graft.core
 
+import graft.core.changes._
+import graft.core.model.AccessType
 import graft.core.parse.ProjectLoader
+import graft.core.yaml.{YMap, YStr}
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.{Files, Path}
@@ -250,5 +253,31 @@ class ProjectLoaderSpec extends AnyFunSuite {
       "test.jaffle.not_null_orders_id", "test.jaffle.unique_orders_id"))
     m.tests.values.foreach(t =>
       assert(t.dependsOn.nodes.contains("model.jaffle.orders")))
+  }
+
+  test("a single properties file over 3 MiB loads and takes an upsert") {
+    // dbt-core's PyYAML loader has no document-size cap, so one
+    // schema.yml for a couple of thousand models is an ordinary project
+    val n = 2000
+    val cols = (1 to 10).map(c =>
+      s"      - name: col_$c\n        description: ${"column text " * 8}\n").mkString
+    val props = new StringBuilder("version: 2\nmodels:\n")
+    (0 until n).foreach(i =>
+      props ++= f"  - name: m_$i%04d\n    description: ${"model text " * 20}\n" +
+        "    columns:\n" + cols)
+    assert(props.length > 3 * 1024 * 1024)
+    val root = writeProject(Map(
+      "dbt_project.yml" -> "name: big\n",
+      "models/schema.yml" -> props.toString) ++
+      (0 until n).map(i => f"models/m_$i%04d.sql" -> "select 1 as id"))
+    val (_, m) = ProjectLoader.load(root)
+    assert(m.nodes.size == n)
+    assert(m.nodes("model.big.m_0007").patchPath.isDefined)
+    new ChangeSetProcessor(root).process(Seq(ChangeSet(Vector(
+      ResourceChange(Operation.Update, EntityType.Model, "m_0007",
+        "models/schema.yml", YMap.of("access" -> YStr("public")))))))
+    val (_, after) = ProjectLoader.load(root)
+    assert(after.nodes("model.big.m_0007").access == AccessType.Public)
+    assert(after.nodes("model.big.m_0008").access == AccessType.Protected)
   }
 }

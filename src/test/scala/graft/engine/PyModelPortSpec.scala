@@ -129,6 +129,22 @@ class PyModelPortSpec extends AnyFunSuite with SparkFixture {
     assert(out.collect().map(_.getString(1)).toSeq == Seq("#promo"))
   }
 
+  test("groupby().cumsum() is a running sum per key in the frame's sort order") {
+    val s = spark
+    import s.implicits._
+    val code =
+      """def model(dbt, session):
+        |    df = dbt.ref("m").df()
+        |    df.sort_values(by="ord", inplace=True)
+        |    df["cum"] = df.groupby("k")["v"].cumsum()
+        |    return df
+        |""".stripMargin
+    val m = Seq((1L, 1, 10.0), (1L, 2, 5.0), (2L, 1, 3.0)).toDF("k", "ord", "v")
+    val out = PyModelPort.run(code, _ => m, (_, _) => fail("no sources"))
+      .orderBy("k", "ord").collect().map(r => (r.getLong(0), r.getDouble(3)))
+    assert(out.toSeq == Seq((1L, 10.0), (1L, 15.0), (2L, 3.0)))
+  }
+
   test("a sort on one frame does not leak into another frame's windows") {
     val s = spark
     import s.implicits._

@@ -6,6 +6,8 @@ import graft.core.catalog.Contracts
 import graft.enforce.AccessControl
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.{Files, Path}
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger}
 
 /** End-to-end data plane: load a mini dbt-shaped project, run it in DAG
   * order on Spark, enforce contracts + access, run generic tests, and
@@ -627,6 +629,111 @@ class RunnerSpec extends AnyFunSuite with SparkFixture {
     assert(out.keySet.size == 4)
     val row = out("model.jaffle.top").collect().head
     assert((row.getLong(0), row.getLong(1)) == (300L, 2L))
+  }
+
+  test("ready queue: a model starts once its parents settle, not its whole level") {
+    val root = writeProject(Map(
+      "dbt_project.yml" -> "name: rq\n",
+      "models/a.sql" -> "select 1 as id",
+      "models/b.sql" -> "select id from {{ ref('a') }}",
+      "models/s.sql" -> "select 2 as id"))
+    val (runner, _) = mkRunner(root, enforceAccess = false)
+    // s (depth 0) waits for b (depth 1): behind a barrier after each
+    // depth, b could not start until s settled and s would time out
+    val bStarted = new CountDownLatch(1)
+    val (_, status) = runner.runWithStatus(parallelism = 2, gate = m =>
+      m.name match {
+        case "s" =>
+          if (bStarted.await(20, TimeUnit.SECONDS)) None else Some("timeout")
+        case "b" => bStarted.countDown(); None
+        case _ => None
+      })
+    assert(status == Map("model.rq.a" -> "success", "model.rq.b" -> "success",
+      "model.rq.s" -> "success"))
+  }
+
+  test("ready queue: the same statuses at parallelism 1 and 4") {
+    val root = writeProject(Map(
+      "dbt_project.yml" -> "name: rs\n",
+      "models/bad.sql" -> "select * from missing_table_rs",
+      "models/c1.sql" -> "select * from {{ ref('bad') }}",
+      "models/c2.sql" -> "select * from {{ ref('c1') }}",
+      "models/ok1.sql" -> "select 1 as id",
+      "models/ok2.sql" -> "select id from {{ ref('ok1') }}"))
+    val (runner, _) = mkRunner(root, enforceAccess = false)
+    val expected = Map("model.rs.bad" -> "error", "model.rs.c1" -> "skipped",
+      "model.rs.c2" -> "skipped", "model.rs.ok1" -> "success",
+      "model.rs.ok2" -> "success")
+    Seq(1, 4).foreach(p =>
+      assert(runner.runWithStatus(parallelism = p)._2 == expected, s"parallelism $p"))
+  }
+
+  test("fail-fast at parallelism 4: running models settle, none starts after the failure") {
+    val names = "a_bad" +: (1 to 7).map(i => s"m$i")
+    val root = writeProject(Map("dbt_project.yml" -> "name: ff4\n") ++
+      names.map(n => s"models/$n.sql" -> "select 1 as id"))
+    val (runner, _) = mkRunner(root, enforceAccess = false)
+    val boom = new IllegalStateException("boom")
+    val othersIn = new CountDownLatch(3)
+    val failed = new AtomicBoolean(false)
+    val lateGates = new AtomicInteger(0)
+    val inGate = new AtomicInteger(0)
+    val e = intercept[IllegalStateException](runner.runWithStatus(
+      parallelism = 4, continueOnError = false, gate = m => {
+        if (failed.get) lateGates.incrementAndGet()
+        if (m.name == "a_bad") {
+          // fail while the three models started beside it are running
+          othersIn.await(20, TimeUnit.SECONDS)
+          failed.set(true)
+          throw boom
+        }
+        inGate.incrementAndGet(); othersIn.countDown()
+        Thread.sleep(200)
+        inGate.decrementAndGet()
+        None
+      }))
+    assert(e eq boom)
+    assert(inGate.get == 0, "models running at the failure settle before the rethrow")
+    Thread.sleep(300)
+    assert(lateGates.get == 0, "no model starts after the failure")
+  }
+
+  test("table read-back: the written schema equals what parquet inference gives") {
+    val root = writeProject(Map(
+      "dbt_project.yml" -> "name: rb\n",
+      "models/wide.sql" -> ("{{ config(materialized='table') }}\n" +
+        """select cast(1.5 as decimal(18,2)) as d, date'2024-01-02' as dt,
+          |  timestamp'2024-01-02 03:04:05' as ts,
+          |  timestamp_ntz'2024-01-02 03:04:05' as tsn,
+          |  cast('abc' as varchar(10)) as vc, array(1, 2) as arr,
+          |  named_struct('a', 1, 'b', 'x') as st, 42 as nn""".stripMargin)))
+    val (cfg, manifest) = ProjectLoader.load(root)
+    val wh = Files.createTempDirectory("graft_wh_rb")
+    val out = new Runner(spark, manifest, cfg, wh, enforceAccess = false)
+      .run()("model.rb.wide")
+    assert(out.schema == spark.read.parquet(wh.resolve("wide").toString).schema)
+    assert(out.collect().head.getDecimal(0).toString == "1.50")
+  }
+
+  test("--read-catalog serves a warehouse table written without a schema sidecar") {
+    val root = writeProject(Map(
+      "dbt_project.yml" -> "name: ns\n",
+      "models/t.sql" ->
+        "{{ config(materialized='table') }}\nselect 7 as id, 'x' as v"))
+    val (cfg, manifest) = ProjectLoader.load(root)
+    val wh = Files.createTempDirectory("graft_wh_ns")
+    val first = new Runner(spark, manifest, cfg, wh, enforceAccess = false)
+      .run()("model.ns.t")
+    // every table writes the sidecar; a warehouse from before that
+    // change has none, and must still be served
+    val sidecar = wh.resolve("t").resolve("_graft_schema.json")
+    assert(Files.exists(sidecar))
+    Files.delete(sidecar)
+    val back = new Runner(spark, manifest, cfg, wh, enforceAccess = false,
+      readCatalog = true).run()("model.ns.t")
+    assert(back.schema == first.schema)
+    assert(back.collect().map(r => (r.getInt(0), r.getString(1))).toSeq == Seq((7, "x")))
+    assert(!Files.exists(sidecar), "served from the catalog, not rebuilt")
   }
 
   test("seeds: CSV becomes a table and models ref() it") {
