@@ -61,9 +61,17 @@ object BenchConf {
     .flatMap(_.split(";")).map(_.split("=", 2))
     .collect { case Array(k, v) => k -> v }
 
+  /** The builder every graft session starts from: the harness mains and
+    * the perfbench worker (through `builderOf`), the `graft` CLI and the
+    * test fixture. It registers [[graft.engine.LocalFs]] for `file:`
+    * paths. That has to happen in the session conf, before the first
+    * `file:` lookup: Hadoop caches one FileSystem per scheme JVM-wide. */
+  def base(): SparkSession.Builder = SparkSession.builder()
+    .config("spark.hadoop.fs.file.impl", classOf[graft.engine.LocalFs].getName)
+
   /** A session builder for `profile` plus the overlay. */
   def builderOf(profile: Seq[(String, String)]): SparkSession.Builder = {
-    val b = SparkSession.builder()
+    val b = base()
     (profile ++ overlay).foreach { case (k, v) => b.config(k, v) }
     b
   }

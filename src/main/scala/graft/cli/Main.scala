@@ -223,7 +223,7 @@ object Main {
         parts.mkString(", ") + " ==")
     }
     def spark(): SparkSession = {
-      val s = SparkSession.builder()
+      val s = graft.BenchConf.base()
         .master(sys.env.getOrElse("GRAFT_MASTER", "local[*]"))
         .appName("graft").config("spark.ui.enabled", "false").getOrCreate()
       s.sparkContext.setLogLevel(logLevel)

@@ -14,7 +14,7 @@ trait SparkFixture extends BeforeAndAfterAll { self: Suite =>
 }
 
 object SparkFixture {
-  lazy val session: SparkSession = SparkSession.builder()
+  lazy val session: SparkSession = BenchConf.base()
     .master("local[4]")
     .appName("graft-test")
     .config("spark.sql.shuffle.partitions", "4")

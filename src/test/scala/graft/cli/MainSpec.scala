@@ -120,7 +120,7 @@ class MainSpec extends AnyFunSuite {
     val audit = Files.list(auditDir).iterator().asScala
       .find(_.getFileName.toString.startsWith("unique_stg_id"))
       .getOrElse(fail(s"no unique_stg_id audit under $auditDir"))
-    val s = org.apache.spark.sql.SparkSession.builder()
+    val s = graft.BenchConf.base()
       .master("local[*]").getOrCreate()
     val rows = s.read.parquet(audit.toString).collect()
     assert(rows.length == 1 && rows.head.getInt(0) == 1, rows.toSeq)
@@ -196,7 +196,7 @@ class MainSpec extends AnyFunSuite {
     }
     assert(code == 0, out.toString)
     assert(out.toString.contains("ran operation mk"), out.toString)
-    val s = org.apache.spark.sql.SparkSession.builder()
+    val s = graft.BenchConf.base()
       .master("local[*]").getOrCreate()
     assert(s.table("cli_op_out").collect().map(_.getInt(0)).toSeq == Seq(42))
     intercept[IllegalArgumentException] {
@@ -1008,7 +1008,7 @@ class MainSpec extends AnyFunSuite {
       "models/stg_c.sql" ->
         "{{ config(materialized='table') }}\nselect * from missing_prod_only_table",
       "models/mart_c.sql" -> "select id, v from {{ ref('stg_c') }} where id > 1"))
-    val s = org.apache.spark.sql.SparkSession.builder()
+    val s = graft.BenchConf.base()
       .master(sys.env.getOrElse("GRAFT_MASTER", "local[*]"))
       .appName("graft").config("spark.ui.enabled", "false").getOrCreate()
     import s.implicits._

@@ -54,7 +54,7 @@ class ReferenceFixtureSpec extends AnyFunSuite {
 
   test("the whole fixture RUNS on Spark: every seed and model materializes") {
     assume(Files.isDirectory(fixture), "reference checkout not present")
-    val spark = org.apache.spark.sql.SparkSession.builder()
+    val spark = graft.BenchConf.base()
       .master("local[8]")
       .config("spark.sql.shuffle.partitions", "8")
       .config("spark.ui.enabled", "false").getOrCreate()
@@ -113,7 +113,7 @@ class ReferenceFixtureSpec extends AnyFunSuite {
     // loop-generated refs are real manifest dependencies
     assert(m.nodes("model.loopy.unioned").dependsOn.nodes.toSet == Set(
       "model.loopy.src_a", "model.loopy.src_b", "model.loopy.src_c"))
-    val spark = org.apache.spark.sql.SparkSession.builder()
+    val spark = graft.BenchConf.base()
       .master("local[4]")
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.ui.enabled", "false").getOrCreate()

@@ -15,7 +15,7 @@ class AccessRuleSpec extends AnyFunSuite {
   private lazy val session: SparkSession = {
     SparkSession.clearDefaultSession()
     SparkSession.clearActiveSession()
-    SparkSession.builder()
+    graft.BenchConf.base()
       .master("local[2]")
       .appName("graft-access-rule")
       .config("spark.sql.shuffle.partitions", "2")

@@ -793,6 +793,13 @@ class PlanAuditSpec extends AnyFunSuite with SparkFixture {
     val p = simplePlan(GraphOps.g17(spark, dir))
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
       s"wedge/support join degraded:\n$p")
+    // the SHUFFLE_HASH hints hold: the wedge join (x.db < y.db) and the
+    // closing join both hash the edge list (build right), neither sorts
+    val inner = p.linesIterator.filter(l => l.contains("Join ") && l.contains("Inner")).toSeq
+    assert(inner.size == 2 &&
+      inner.forall(l => l.contains("ShuffledHashJoin ") && l.contains("Inner, BuildRight")) &&
+      inner.exists(_.matches(""".*\(db#\d+L < db#\d+L\)""")),
+      s"wedge/support join strategy moved:\n$p")
   }
 
   test("t40: the LM joins are hint-free; AQE broadcasts the small tables at this SF") {
