@@ -214,7 +214,8 @@ object Selector {
   }
 
   /** Model config lookup for `config.<key>:` — the dedicated typed
-    * fields first (materialized lives there), then the raw config map. */
+    * fields first (materialized lives there), then the resolved config
+    * map (inline `config()` values included). */
   private def configValue(n: graft.core.model.ModelNode, key: String): Option[String] =
     key match {
       case "materialized" => Some(n.materialized)

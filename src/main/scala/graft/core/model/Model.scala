@@ -62,14 +62,19 @@ final case class ModelNode(
     uniqueKey: Option[String] = None,
     /** dbt-spark `partition_by`: directory-partition the persisted table
       * by these columns (Hive layout) so downstream filters prune at the
-      * source. Inline `config(partition_by='col')` or a patch-YAML
-      * string/list. */
+      * source. Read from [[config]] (a string or a list). */
     partitionBy: Vector[String] = Vector.empty,
     contractEnforced: Boolean = false,
     contract: Option[StructType] = None,
     tags: Vector[String] = Vector.empty,
     /** database.schema.identifier this model materializes to. */
     relationName: Option[String] = None,
+    /** The RESOLVED config, as in dbt-core's Manifest: the patch YAML
+      * `config:` with the inline `config()` / `dbt.config()` kwargs laid
+      * over it (hooks and tags append), built by `ProjectLoader` or read
+      * as-is from a dbt-core `manifest.json`. The typed fields above
+      * (materialized, uniqueKey, partitionBy, tags) are read from it;
+      * every other consumer reads config here, never from the SQL. */
     config: YMap = YMap.empty) extends Resource
 
 /** A file-backed source table (the dbt-external-tables pattern): the

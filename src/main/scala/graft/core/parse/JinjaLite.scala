@@ -29,6 +29,29 @@ object JinjaLite {
   // brackets must not split the kwarg), or a bare token
   private val kwargRe = """([A-Za-z_][A-Za-z0-9_]*)\s*=\s*('[^']*'|"[^"]*"|\[[^\]]*\]|[^,)\s]+)""".r
 
+  private def unquote(s: String): String =
+    s.trim.stripPrefix("'").stripSuffix("'").stripPrefix("\"").stripSuffix("\"")
+
+  /** The items of a `['a', "b, c"]` list literal (the form kwargRe
+    * captures whole), quote-aware: a comma inside quotes does not split.
+    * Items are trimmed and unquoted, empty ones dropped. None when `raw`
+    * is not bracketed. */
+  def parseList(raw: String): Option[Vector[String]] = {
+    val t = raw.trim
+    if (!(t.startsWith("[") && t.endsWith("]"))) return None
+    val items = Vector.newBuilder[String]
+    val cur = new StringBuilder
+    var quote: Char = 0
+    t.substring(1, t.length - 1).foreach { c =>
+      if (quote != 0) { if (c == quote) quote = 0; cur += c }
+      else if (c == '\'' || c == '"') { quote = c; cur += c }
+      else if (c == ',') { items += cur.result(); cur.clear() }
+      else cur += c
+    }
+    items += cur.result()
+    Some(items.result().map(unquote).filter(_.nonEmpty))
+  }
+
   def findRefs(code: String): Vector[RefCall] =
     refRe.findAllMatchIn(code).map { m =>
       val (proj, name) = if (m.group(2) != null) (Some(m.group(1)), m.group(2)) else (None, m.group(1))
@@ -76,22 +99,16 @@ object JinjaLite {
     pySourceRe.findAllMatchIn(code).map(m => SourceCall(m.group(1), m.group(2))).toVector
 
   /** `{{ config(k=v, ...) }}` kwargs as raw strings (quotes stripped). */
-  def findConfig(code: String): Map[String, String] =
-    configRe.findFirstMatchIn(code).map { m =>
-      kwargRe.findAllMatchIn(m.group(1)).map { k =>
-        k.group(1) -> k.group(2).stripPrefix("'").stripSuffix("'")
-          .stripPrefix("\"").stripSuffix("\"")
-      }.toMap
-    }.getOrElse(Map.empty)
+  def findConfig(code: String): Map[String, String] = kwargs(configRe, code)
 
   /** Python models configure via `dbt.config(k=v, ...)`. */
   private val pyConfigRe: Regex = """dbt\s*\.\s*config\s*\(([\s\S]*?)\)""".r
-  def findPythonConfig(code: String): Map[String, String] =
-    pyConfigRe.findFirstMatchIn(code).map { m =>
-      kwargRe.findAllMatchIn(m.group(1)).map { k =>
-        k.group(1) -> k.group(2).stripPrefix("'").stripSuffix("'")
-          .stripPrefix("\"").stripSuffix("\"")
-      }.toMap
+  def findPythonConfig(code: String): Map[String, String] = kwargs(pyConfigRe, code)
+
+  private def kwargs(call: Regex, code: String): Map[String, String] =
+    call.findFirstMatchIn(code).map { m =>
+      kwargRe.findAllMatchIn(m.group(1))
+        .map(k => k.group(1) -> unquote(k.group(2))).toMap
     }.getOrElse(Map.empty)
 
   /** `{% docs name %}…{% enddocs %}` / macro / test block spans
@@ -679,9 +696,7 @@ object JinjaLite {
 
   def expandDbtUtils(code: String): String = {
     var out = surrogateKeyRe.replaceAllIn(code, m => {
-      val cols = m.group(1).split(",").toVector.map(_.trim)
-        .map(_.stripPrefix("'").stripSuffix("'").stripPrefix("\"").stripSuffix("\""))
-        .filter(_.nonEmpty)
+      val cols = parseList(s"[${m.group(1)}]").getOrElse(Vector.empty)
       val parts = cols.map(c =>
         s"coalesce(cast($c as string), '_dbt_utils_surrogate_key_null_')")
       Regex.quoteReplacement(s"md5(concat_ws('-', ${parts.mkString(", ")}))")

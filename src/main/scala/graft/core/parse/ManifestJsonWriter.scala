@@ -82,6 +82,8 @@ object ManifestJsonWriter {
       n.relationName.foreach(o.put("relation_name", _))
       val c = o.putObject("config")
       // dbt writes the FULL default config dict; a representative slice
+      // of defaults first, then the model's resolved config over it (a
+      // default fills only what the model leaves unset)
       c.put("enabled", true)
       c.putArray("tags")
       c.putObject("meta")
@@ -95,8 +97,12 @@ object ManifestJsonWriter {
       n.uniqueKey.foreach(c.put("unique_key", _))
       if (n.partitionBy.nonEmpty) strs(c.putArray("partition_by"), n.partitionBy)
       c.putObject("contract").put("enforced", n.contractEnforced)
+      // hooks stay `[]`: dbt's hook entries are {sql, transaction}
+      // objects, which the resolved config's plain SQL strings are not
       n.config.entries.foreach { case (k, v) =>
-        if (!c.has(k)) { c.set[com.fasterxml.jackson.databind.JsonNode](k, yToJson(v)); () }
+        if (k != "pre-hook" && k != "post-hook") {
+          c.set[com.fasterxml.jackson.databind.JsonNode](k, yToJson(v)); ()
+        }
       }
     }
     m.tests.toSeq.sortBy(_._1).foreach { case (id, t) =>

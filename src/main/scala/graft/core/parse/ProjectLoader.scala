@@ -64,16 +64,46 @@ object ProjectLoader {
     case YStr(s) => Vector(s)
   }
 
-  /** An inline-config value that may be a ['a', 'b'] list literal (the
-    * kwarg regex captures brackets whole) or a bare string. */
-  private def parseInlineStrList(s: String): Vector[String] = {
-    val t = s.trim
-    if (t.startsWith("["))
-      t.stripPrefix("[").stripSuffix("]").split(",").toVector
-        .map(_.trim.stripPrefix("'").stripSuffix("'")
-          .stripPrefix("\"").stripSuffix("\""))
-        .filter(_.nonEmpty)
-    else Vector(t)
+  /** The config keys that accumulate (patch first, then inline) rather
+    * than override. */
+  private val appendKeys = Set("pre-hook", "post-hook", "tags")
+
+  /** A model's (or seed's) resolved config — the map dbt-core's Manifest
+    * carries as `config`, and the ONLY place config precedence is
+    * decided: the Runner, the Selector and the manifest writer read it
+    * as-is. dbt's rule: start from the patch YAML `config:`, lay the
+    * inline `config()` / `dbt.config()` kwargs over it; `pre-hook`,
+    * `post-hook` and `tags` append instead (patch first), with the
+    * `pre_hook`/`post_hook` spellings folded onto the dash key. A string
+    * holding a `['a', 'b']` literal becomes a YList, and an inline
+    * `true`/`false` a YBool, so every reader sees YAML-shaped values. */
+  private def resolveConfig(patch: YMap, inline: Map[String, String]): YMap = {
+    val inlineYs = inline.toVector.map { case (k, v) =>
+      k -> (v.toLowerCase match {
+        case "true" => YBool(true)
+        case "false" => YBool(false)
+        case _ => YStr(v)
+      })
+    }
+    (patch.entries ++ inlineYs).foldLeft(YMap.empty) { case (acc, (k0, y)) =>
+      val k = k0 match {
+        case "pre_hook" => "pre-hook"
+        case "post_hook" => "post-hook"
+        case other => other
+      }
+      val v = y match {
+        case YStr(s) => JinjaLite.parseList(s).fold(y)(is => YList(is.map(YStr)))
+        case other => other
+      }
+      if (appendKeys(k)) acc.updated(k, YList(acc.get(k).toVector.flatMap(items) ++ items(v)))
+      else acc.updated(k, v)
+    }
+  }
+
+  /** A list value's items; a scalar is a list of one. */
+  private def items(y: Y): Vector[Y] = y match {
+    case YList(is) => is
+    case other => Vector(other)
   }
 
   private def walk(dir: Path, ext: String): Vector[Path] =
@@ -317,7 +347,7 @@ object ProjectLoader {
           materialized = "seed",
           patchPath = patch.map(_._1),
           relationName = Some(s"main.$baseSchema.$name"),
-          config = patchConfig)
+          config = resolveConfig(patchConfig, Map.empty))
       }.toMap
 
     // ---- model files
@@ -426,31 +456,34 @@ object ProjectLoader {
       val srcDeps = (srcCalls ++ macroSrcCalls)
         .flatMap(sc => sourceByPair.get((sc.sourceName, sc.table)))
       val macroDeps = JinjaLite.findMacroCalls(code).filter(macroNames).map(n => s"macro.$proj.$n")
-      val conf =
-        if (lang == "python") JinjaLite.findPythonConfig(code)
-        else JinjaLite.findConfig(code)
       val patch = modelPatches.get(name)
       val patchEntry = patch.map(_._2).getOrElse(YMap.empty)
       val patchConfig = patchEntry.get("config").collect { case m: YMap => m }.getOrElse(YMap.empty)
+      val config = resolveConfig(patchConfig,
+        if (lang == "python") JinjaLite.findPythonConfig(code)
+        else JinjaLite.findConfig(code))
+      // a scalar config value; a list (e.g. a composite unique_key) joins
+      def str(k: String): Option[String] = config.get(k).map {
+        case YList(is) => is.map(_.asStr).mkString(",")
+        case y => y.asStr
+      }
       // dbt drops disabled models from the manifest — whether disabled
       // inline (the fixture's dbt.config(enabled=False)) or via the
       // properties yml `config: {enabled: false}`
-      if (conf.get("enabled").exists(_.equalsIgnoreCase("false")) ||
-        patchConfig.get("enabled").contains(YBool(false))) ()
+      if (str("enabled").exists(_.equalsIgnoreCase("false"))) ()
       else {
       val access = patchEntry.get("access").map(a => AccessType.parse(a.asStr))
         .getOrElse(AccessType.Protected)
       // dbt's default generate_schema_name: the target schema, or
       // `<target>_<custom>` when the model sets a custom schema
-      val schema = conf.get("schema")
-        .orElse(patchConfig.get("schema").map(_.asStr))
-        .map(c => s"${baseSchema}_$c")
+      val schema = str("schema").map(c => s"${baseSchema}_$c")
         .getOrElse(baseSchema)
       // Contract columns are parsed only for enforced contracts: a
       // non-enforced model's data_type strings are docs/catalog vocabulary
       // (varchar(255), array<string>, …) that must not abort the load.
       // For enforced contracts, every declared column needs a data_type
-      // (dbt-core errors on partially-typed contracts too).
+      // (dbt-core errors on partially-typed contracts too). Read from the
+      // patch: the inline kwarg regex cannot parse a dict value.
       val contractEnforced = patchConfig.get("contract").collect {
         case cm: YMap => cm.get("enforced").contains(YBool(true))
       }.getOrElse(false)
@@ -475,25 +508,15 @@ object ProjectLoader {
               .flatMap(v => scala.util.Try(v.toLong).toOption).maxOption
           }.flatten),
         latestVersion = patchEntry.get("latest_version").collect { case YInt(i) => i },
-        materialized = conf.getOrElse("materialized",
-          patchConfig.get("materialized").map(_.asStr).getOrElse("view")),
-        uniqueKey = conf.get("unique_key").orElse(patchConfig.get("unique_key").map(_.asStr)),
-        partitionBy = conf.get("partition_by")
-          .map(parseInlineStrList)
-          .orElse(patchConfig.get("partition_by").map {
-            case YList(items) => items.map(_.asStr)
-            case y => Vector(y.asStr)
-          })
-          .getOrElse(Vector.empty),
+        materialized = str("materialized").getOrElse("view"),
+        uniqueKey = str("unique_key"),
+        partitionBy = config.get("partition_by").toVector.flatMap(items).map(_.asStr),
         contractEnforced = contractEnforced,
         contract = contract,
-        tags = (patchEntry.get("tags").toSeq ++ patchConfig.get("tags").toSeq)
-          .flatMap {
-            case YList(ts) => ts.map(_.asStr)
-            case t => Seq(t.asStr)
-          }.toVector.distinct,
+        tags = (patchEntry.get("tags") ++ config.get("tags")).toVector
+          .flatMap(items).map(_.asStr).distinct,
         relationName = Some(s"main.$schema.$name"),
-        config = patchConfig)
+        config = config)
 
       // generic tests declared on columns of this model's patch
       patchEntry.get("columns").collect { case YList(cols) => cols }.getOrElse(Vector.empty).foreach {

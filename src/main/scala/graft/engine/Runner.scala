@@ -5,8 +5,10 @@ import graft.core.graph.Dag
 import graft.core.model._
 import graft.core.parse.JinjaLite
 import graft.enforce.AccessControl
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.core.yaml.YList
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, NumericType, TimestampType}
 import java.nio.file.{Files, Path}
 
 /** Data-plane executor (SURVEY §4 item 4): runs a loaded project's models
@@ -180,9 +182,10 @@ final class Runner(
     * `on-run-end: "select true as col"`, dbt_project.yml:27 — dbt runs it,
     * so graft must too):
     *
-    *  - model-level `pre-hook` / `post-hook` (patch-YAML `config:` or
-    *    inline `config(pre_hook=...)`; string or list; both dash and
-    *    underscore spellings). Pre-hooks run immediately before the
+    *  - model-level `pre-hook` / `post-hook`, read from the resolved
+    *    config (the loader appends inline `config(pre_hook=...)` hooks
+    *    after the patch-YAML ones and folds both spellings onto the
+    *    dash key). Pre-hooks run immediately before the
     *    model executes, post-hooks after it materializes and its view is
     *    registered; both render through the model's full Jinja context
     *    ({{ this }} = the model's relation) and a throwing hook fails
@@ -237,47 +240,11 @@ final class Runner(
     rendered
   }
 
-  /** Accumulated hook strings for `dashKey` ∈ {pre-hook, post-hook}:
-    * patch-YAML config first, then inline config; each value may be a
-    * YAML list, a `['a', 'b']` literal, or a bare SQL string. The
-    * bracket-literal split is QUOTE-AWARE — hook SQL routinely contains
-    * commas inside quotes (`insert into audit values ('x', 1)`), which
-    * the naive check_cols splitter would mangle. */
-  private def hookList(m: ModelNode, dashKey: String): Seq[String] = {
-    val keys = Seq(dashKey, dashKey.replace('-', '_'))
-    val fromPatch = keys.flatMap(k => m.config.get(k)).flatMap {
-      case graft.core.yaml.YList(items) => items.map(_.asStr)
-      case y => splitBracketList(y.asStr)
-    }
-    val fromInline = keys.flatMap(k => inlineConfig(m).get(k))
-      .flatMap(splitBracketList)
-    fromPatch ++ fromInline
-  }
-
-  /** "[ 'a', 'b' ]" → Seq(a, b) respecting quotes; anything else → Seq(it). */
-  private def splitBracketList(raw: String): Seq[String] = {
-    val t = raw.trim
-    if (!(t.startsWith("[") && t.endsWith("]"))) return Seq(raw)
-    val body = t.stripPrefix("[").stripSuffix("]")
-    val out = Vector.newBuilder[String]
-    val cur = new StringBuilder
-    var quote: Char = 0
-    body.foreach { c =>
-      if (quote != 0) { if (c == quote) quote = 0; cur += c }
-      else if (c == '\'' || c == '"') { quote = c; cur += c }
-      else if (c == ',') { out += cur.toString; cur.clear() }
-      else cur += c
-    }
-    out += cur.toString
-    out.result().map(_.trim.stripPrefix("'").stripSuffix("'")
-      .stripPrefix("\"").stripSuffix("\"")).filter(_.nonEmpty)
-  }
-
   /** Project-level hooks from dbt_project.yml (string or list). */
   private def projectHooks(dashKey: String): Seq[String] =
     Seq(dashKey, dashKey.replace('-', '_'))
       .flatMap(k => cfg.raw.get(k)).flatMap {
-        case graft.core.yaml.YList(items) => items.map(_.asStr)
+        case YList(items) => items.map(_.asStr)
         case y => Seq(y.asStr)
       }
 
@@ -453,11 +420,11 @@ final class Runner(
   def runModel(m: ModelNode): DataFrame = {
     val hooksOn = m.materialized != "ephemeral"
     if (hooksOn)
-      hookList(m, "pre-hook").foreach(h =>
+      strListConfig(m, "pre-hook").foreach(h =>
         runHookSql(renderStr(h, Some(viewName(m.name)), s"pre-hook of ${m.name}")))
     val out = runModelBody(m)
     if (hooksOn)
-      hookList(m, "post-hook").foreach(h =>
+      strListConfig(m, "post-hook").foreach(h =>
         runHookSql(renderStr(h, Some(viewName(m.name)), s"post-hook of ${m.name}")))
     out
   }
@@ -508,7 +475,7 @@ final class Runner(
         val colTypes = m.config.get("column_types").collect {
           case ct: graft.core.yaml.YMap =>
             ct.entries.map { case (c, t) => c -> Contracts.parseType(t.asStr) }.toMap
-        }.getOrElse(Map.empty[String, org.apache.spark.sql.types.DataType])
+        }.getOrElse(Map.empty[String, DataType])
         if (colTypes.isEmpty) reader.option("inferSchema", "true").csv(path)
         else {
           val inferred = reader.option("inferSchema", "true").csv(path).schema
@@ -568,9 +535,7 @@ final class Runner(
     * overwrite + sidecar machinery is parquet-shaped, and that is also
     * dbt-spark's own v2-format restriction in spirit). */
   private def fileFormat(m: ModelNode): String =
-    m.config.get("file_format").map(_.asStr)
-      .orElse(inlineConfig(m).get("file_format"))
-      .getOrElse("parquet")
+    strConfig(m, "file_format").getOrElse("parquet")
 
   private def formatSidecar(p: Path): Path = p.resolve("_graft_format")
 
@@ -606,7 +571,7 @@ final class Runner(
     // sidecar lacks one; its schema is inferred (a Spark job)
     val st =
       if (Files.exists(sc))
-        org.apache.spark.sql.types.DataType.fromJson(Files.readString(sc))
+        DataType.fromJson(Files.readString(sc))
           .asInstanceOf[org.apache.spark.sql.types.StructType]
       else spark.read.format(fmt).load(p.toString).schema
     // the user-provided schema pins partition-column TYPES (no
@@ -640,16 +605,6 @@ final class Runner(
     readTable(p)
   }
 
-  /** Incremental: first run = full build; subsequent runs compute the
-    * post-watermark batch (with `{{ this }}` bound to the existing table)
-    * and merge by unique_key (delete-insert semantics — the parquet
-    * analog of MERGE; with a Delta-style sink this becomes MERGE INTO).
-    *
-    * `incremental_strategy='insert_overwrite'` (dbt-spark spelling, needs
-    * `partition_by`) replaces ONLY the partitions present in the batch —
-    * Spark's dynamic partition overwrite — which is the backfill-safe
-    * shape at scale: re-running one day rewrites one directory, never
-    * the table, and needs no key join against the existing data. */
   /** dbt's `on_schema_change` policy for incremental models. Returns the
     * (existing, batch) pair aligned onto ONE column set and order:
     *  - ignore (default): the target schema wins — new batch columns are
@@ -667,10 +622,7 @@ final class Runner(
     if (ex == b) return (existing, batch)
     val added = b.filterNot(ex.contains)
     val removed = ex.filterNot(b.contains)
-    val policy = m.config.get("on_schema_change").map(_.asStr)
-      .orElse(inlineConfig(m).get("on_schema_change"))
-      .getOrElse("ignore")
-    policy match {
+    strConfig(m, "on_schema_change").getOrElse("ignore") match {
       case "fail" => throw new IllegalStateException(
         s"incremental model ${m.name}: schema changed (added: [${added.mkString(", ")}], " +
           s"removed: [${removed.mkString(", ")}]) and on_schema_change=fail")
@@ -695,42 +647,36 @@ final class Runner(
     }
   }
 
-  /** Inline `{{ config(...) }}` of a model, parsed ONCE per model per
-    * Runner (the raw-SQL re-parse showed up ~6x per incremental/snapshot
-    * run across fileFormat/strategy/updated_at/check_cols lookups). */
-  private val inlineConfigCache =
-    scala.collection.concurrent.TrieMap.empty[String, Map[String, String]]
-  private def inlineConfig(m: ModelNode): Map[String, String] =
-    inlineConfigCache.getOrElseUpdate(m.uniqueId, JinjaLite.findConfig(m.rawCode))
+  /** Config readers over the loader-resolved `m.config` (inline config
+    * already laid over the patch, list literals already YLists). */
+  private def strConfig(m: ModelNode, key: String): Option[String] =
+    m.config.get(key).map(_.asStr)
 
-  /** Config value that may be a YAML list, an inline `['a','b']`
-    * literal, or a bare string (check_cols / merge_exclude_columns). */
-  private def strListConfig(m: ModelNode, key: String): Seq[String] = {
-    val conf = m.config.get(key)
-      .orElse(inlineConfig(m).get(key)
-        .map(graft.core.yaml.YStr.apply))
-    conf match {
-      case Some(graft.core.yaml.YList(items)) => items.map(_.asStr)
-      case Some(y) if y.asStr.trim.startsWith("[") =>
-        y.asStr.trim.stripPrefix("[").stripSuffix("]").split(",").toSeq
-          .map(_.trim.stripPrefix("'").stripSuffix("'")
-            .stripPrefix("\"").stripSuffix("\""))
-          .filter(_.nonEmpty)
-      case Some(y) => Seq(y.asStr)
-      case None => Seq.empty
+  /** A list-or-scalar config value (hooks, check_cols,
+    * merge_exclude_columns); a scalar is a list of one. */
+  private def strListConfig(m: ModelNode, key: String): Seq[String] =
+    m.config.get(key).toSeq.flatMap {
+      case YList(items) => items.map(_.asStr)
+      case y => Seq(y.asStr)
     }
-  }
 
   private def boolConfig(m: ModelNode, key: String): Boolean =
-    m.config.get(key).map(_.asStr)
-      .orElse(inlineConfig(m).get(key))
-      .exists(v => v.equalsIgnoreCase("true"))
+    strConfig(m, key).exists(_.equalsIgnoreCase("true"))
 
+  /** Incremental: first run = full build; subsequent runs compute the
+    * post-watermark batch (with `{{ this }}` bound to the existing table)
+    * and merge by unique_key (delete-insert semantics — the parquet
+    * analog of MERGE; with a Delta-style sink this becomes MERGE INTO).
+    *
+    * `incremental_strategy='insert_overwrite'` (dbt-spark spelling, needs
+    * `partition_by`) replaces ONLY the partitions present in the batch —
+    * Spark's dynamic partition overwrite — which is the backfill-safe
+    * shape at scale: re-running one day rewrites one directory, never
+    * the table, and needs no key join against the existing data. */
   private def runIncremental(m: ModelNode): DataFrame = {
     recoverSwap(m)
     val p = tablePath(m)
-    val strategy = m.config.get("incremental_strategy").map(_.asStr)
-      .orElse(inlineConfig(m).get("incremental_strategy"))
+    val strategy = strConfig(m, "incremental_strategy")
     // dbt-spark's strategy vocabulary — an unknown spelling must fail
     // loudly (a typo silently landing in the merge path would change
     // row counts), and 'append' must NOT dedupe by unique_key
@@ -740,30 +686,21 @@ final class Runner(
           s"incremental model ${m.name}: unknown incremental_strategy '$s'")
     }
     if (fullRefresh || !Files.exists(p))
-      persist(m, execSql(m, isIncremental = false))
-    else if (strategy.contains("insert_overwrite")) {
-      if (m.partitionBy.isEmpty) throw new IllegalArgumentException(
-        s"incremental model ${m.name}: insert_overwrite needs partition_by")
-      val existing = readTable(p)
-      existing.createOrReplaceTempView(viewName(m.name))
-      val (_, batch) = alignSchemas(m, existing,
-        execSql(m, isIncremental = true))
-      overwritePartitions(m, batch, p)
-      readTable(p)
-    } else {
-      val existing0 = readTable(p)
-      existing0.createOrReplaceTempView(viewName(m.name))
-      val (existing, batch) = alignSchemas(m, existing0,
-        execSql(m, isIncremental = true))
-      if (strategy.contains("append")) {
-        // dbt-spark 'append': insert the batch as-is, even when a
-        // unique_key is configured (the key is merge-path metadata)
-        val merged = existing.unionByName(batch)
-        val tmp = warehouseDir.resolve(m.name + "__tmp")
-        writeTable(m, merged, tmp)
-        swapDirs(p, tmp)
+      return persist(m, execSql(m, isIncremental = false))
+    val existing0 = readTable(p)
+    existing0.createOrReplaceTempView(viewName(m.name))
+    val (existing, batch) = alignSchemas(m, existing0,
+      execSql(m, isIncremental = true))
+    strategy match {
+      case Some("insert_overwrite") =>
+        if (m.partitionBy.isEmpty) throw new IllegalArgumentException(
+          s"incremental model ${m.name}: insert_overwrite needs partition_by")
+        overwritePartitions(m, batch, p)
         readTable(p)
-      } else if (m.partitionBy.nonEmpty && m.uniqueKey.isDefined) {
+      // dbt-spark 'append': insert the batch as-is, even when a
+      // unique_key is configured (the key is merge-path metadata)
+      case Some("append") => replace(m, existing.unionByName(batch))
+      case _ if m.partitionBy.nonEmpty && m.uniqueKey.isDefined =>
         // Partition-scoped MERGE — the 100 TB shape: only the partitions
         // the batch touches are read, merged and dynamically overwritten;
         // every other partition's files are never opened (the touched-
@@ -801,16 +738,7 @@ final class Runner(
           spark.sparkContext.getPersistentRDDs.get(id)
             .foreach(_.unpersist(blocking = false)))
         out
-      } else {
-        val merged = mergeByKey(m, existing, batch)
-        // write to a temp dir then crash-safely swap the directories
-        // (merged reads from p, so p can't be overwritten in place; the
-        // swap costs renames instead of a second full write)
-        val tmp = warehouseDir.resolve(m.name + "__tmp")
-        writeTable(m, merged, tmp)
-        swapDirs(p, tmp)
-        readTable(p)
-      }
+      case _ => replace(m, mergeByKey(m, existing, batch))
     }
   }
 
@@ -871,57 +799,69 @@ final class Runner(
     }
   }
 
-  /** Snapshot materialization (dbt's SCD2, timestamp strategy): track row
-    * versions over time. The target carries `dbt_valid_from` /
-    * `dbt_valid_to` (null = current). Each run, against the CURRENT rows:
-    *  - new keys insert as current;
-    *  - rows whose `updated_at` advanced close the old version (valid_to =
-    *    new updated_at) and insert the new one;
-    *  - unchanged rows and already-closed history pass through untouched.
-    * One shuffle on the key; history never rewrites more than the touched
-    * keys' rows (the full-outer join is key-partitioned). */
+  /** Snapshot materialization (dbt's SCD2): track row versions over
+    * time. The target carries `dbt_valid_from` / `dbt_valid_to` (null =
+    * current). The two strategies differ only in when a version starts
+    * and when a key's incoming row counts as changed:
+    *  - `timestamp` (default): a version starts at the row's `updated_at`;
+    *    a row changed when `updated_at` advanced;
+    *  - `check` (for sources with NO reliable updated_at): a version
+    *    starts at the run's clock (`snapshotAt`, injectable for
+    *    determinism); a row changed when any `check_cols` column differs
+    *    null-safely (NULL→value and value→NULL are changes);
+    *    `check_cols='all'` compares every non-key column.
+    * Both then share one merge, [[scd2]]. */
   private def runSnapshot(m: ModelNode): DataFrame = {
     val key = m.uniqueKey.getOrElse(throw new IllegalArgumentException(
       s"snapshot ${m.name} needs unique_key"))
-    val strategy = m.config.get("strategy").map(_.asStr)
-      .orElse(inlineConfig(m).get("strategy"))
-      .getOrElse("timestamp")
-    if (strategy == "check") return runSnapshotCheck(m, key)
+    val updatedAt = strConfig(m, "strategy") match {
+      case Some("check") => None
+      case _ => Some(strConfig(m, "updated_at").getOrElse(
+        throw new IllegalArgumentException(s"snapshot ${m.name} needs updated_at")))
+    }
     recoverSwap(m)
-    val updatedAt = m.config.get("updated_at").map(_.asStr)
-      .orElse(inlineConfig(m).get("updated_at"))
-      .getOrElse(throw new IllegalArgumentException(
-        s"snapshot ${m.name} needs updated_at"))
     val p = tablePath(m)
+    val runClock = lit(snapshotAt.getOrElse(
+      new java.sql.Timestamp(System.currentTimeMillis())))
     val source = execSql(m, isIncremental = false)
+    val (validFrom, changed) = updatedAt match {
+      case Some(u) => (col(u), col("in.dbt_valid_from") > col("cur.dbt_valid_from"))
+      case None =>
+        val checkCols: Seq[String] = strListConfig(m, "check_cols") match {
+          case Seq("all") => source.columns.filterNot(_ == key).toSeq
+          case cols if cols.nonEmpty => cols
+          case _ => throw new IllegalArgumentException(
+            s"snapshot ${m.name}: strategy='check' needs check_cols")
+        }
+        (runClock.cast(TimestampType),
+          checkCols.map(c => !(col("cur." + c) <=> col("in." + c)))
+            .reduceOption(_ || _).getOrElse(lit(false)))
+    }
+    val stampType =
+      updatedAt.fold[DataType](TimestampType)(source.schema(_).dataType)
     val stamped = source
-      .withColumn("dbt_valid_from", col(updatedAt))
-      .withColumn("dbt_valid_to", lit(null).cast(source.schema(updatedAt).dataType))
+      .withColumn("dbt_valid_from", validFrom)
+      .withColumn("dbt_valid_to", lit(null).cast(stampType))
     // a NULL updated_at would NULL every <=/>-comparison in the SCD2
     // merge and silently DROP that key's rows from the rewritten
     // snapshot (it falls out of keptCurrent, closedNow and inserted
     // alike) — data loss must be loud, like the numeric-updated_at case
-    if (source.schema(updatedAt).nullable &&
-        stamped.filter(col(updatedAt).isNull).limit(1).count() > 0)
-      throw new IllegalArgumentException(
-        s"snapshot ${m.name}: updated_at '$updatedAt' is NULL for some " +
-          "source rows — their keys would silently vanish from the " +
-          "snapshot; filter or coalesce them in the snapshot query")
+    updatedAt.foreach { u =>
+      if (source.schema(u).nullable &&
+          stamped.filter(col(u).isNull).limit(1).count() > 0)
+        throw new IllegalArgumentException(
+          s"snapshot ${m.name}: updated_at '$u' is NULL for some " +
+            "source rows — their keys would silently vanish from the " +
+            "snapshot; filter or coalesce them in the snapshot query")
+    }
     if (fullRefresh || !Files.exists(p)) persist(m, stamped)
     else {
-      val existing = readTable(p)
-      val closed = existing.filter(col("dbt_valid_to").isNotNull)
-      val current = existing.filter(col("dbt_valid_to").isNull)
-      val incoming = stamped.select(
-        col(key).as("_k"), col(updatedAt).as("_ts"), col("*"))
-      val joined = current.as("cur").join(
-        incoming.as("in"), col("cur." + key) === col("_k"), "full_outer")
       // dbt's invalidate_hard_deletes: a current row whose key vanished
       // from the source closes at the RUN's clock (the source carries no
       // event time for a deletion); default false = deleted keys stay
       // open, dbt's default
       val hardDelete = boolConfig(m, "invalidate_hard_deletes")
-      // The deletion stamp is a wall-clock Timestamp cast to updated_at's
+      // The deletion stamp is the run clock cast to the version stamp's
       // dtype. For a NUMERIC updated_at (e.g. an epoch-nanos long) that
       // cast yields epoch SECONDS — dbt_valid_to would land in different
       // units than dbt_valid_from, closing rows decades in the past. No
@@ -929,116 +869,54 @@ final class Runner(
       // updated_at to a timestamp (see graft.ops.Tables.normalizeTs)
       // before enabling invalidate_hard_deletes. Timestamp/date/string
       // casts are unit-safe.
-      val updatedAtType = source.schema(updatedAt).dataType
-      if (hardDelete && updatedAtType.isInstanceOf[
-          org.apache.spark.sql.types.NumericType])
+      if (hardDelete && stampType.isInstanceOf[NumericType])
         throw new IllegalArgumentException(
           s"snapshot ${m.name}: invalidate_hard_deletes requires a " +
-            s"timestamp/date updated_at column; '$updatedAt' is " +
-            s"${updatedAtType.simpleString}. Cast it in the snapshot query " +
+            s"timestamp/date updated_at column; '${updatedAt.mkString}' is " +
+            s"${stampType.simpleString}. Cast it in the snapshot query " +
             "(epoch-long encodings are ambiguous: sec/ms/ns).")
-      val delStamp = lit(snapshotAt.getOrElse(
-        new java.sql.Timestamp(System.currentTimeMillis())))
-        .cast(updatedAtType)
-      val keptCurrent = joined // unchanged or no new row: keep as-is
-        .filter(col("cur." + key).isNotNull &&
-          (col("_k").isNull || col("_ts") <= col("cur.dbt_valid_from")))
-        .filter(if (hardDelete) col("_k").isNotNull else lit(true))
-        .select(current.columns.map(c => col("cur." + c)): _*)
-      val hardClosed = joined // key gone from the source: close at run time
-        .filter(lit(hardDelete) && col("cur." + key).isNotNull && col("_k").isNull)
-        .select(current.columns.map {
-          case "dbt_valid_to" => delStamp.as("dbt_valid_to")
-          case c => col("cur." + c)
-        }: _*)
-      val closedNow = joined // superseded: close with the new timestamp
-        .filter(col("cur." + key).isNotNull && col("_k").isNotNull &&
-          col("_ts") > col("cur.dbt_valid_from"))
-        .select(current.columns.map {
-          case "dbt_valid_to" => col("_ts").as("dbt_valid_to")
-          case c => col("cur." + c)
-        }: _*)
-      val inserted = joined // new key or new version: insert as current
-        .filter(col("_k").isNotNull &&
-          (col("cur." + key).isNull || col("_ts") > col("cur.dbt_valid_from")))
-        .select(current.columns.map(c => col("in." + c)): _*)
-      val merged = closed.unionByName(keptCurrent).unionByName(hardClosed)
-        .unionByName(closedNow).unionByName(inserted)
-      val tmp = warehouseDir.resolve(m.name + "__tmp")
-      writeTable(m, merged, tmp)
-      swapDirs(p, tmp)
-      readTable(p)
+      replace(m, scd2(readTable(p), stamped, key, changed,
+        if (hardDelete) Some(runClock.cast(stampType)) else None))
     }
   }
 
-  /** Snapshot `strategy='check'` (dbt's column-compare SCD2): a new
-    * version opens whenever any check column differs null-safely from
-    * the key's current version — the strategy for sources with NO
-    * reliable updated_at. Versions are stamped with the run's clock
-    * (`snapshotAt`, injectable for determinism) since the source carries
-    * no event time. `check_cols='all'` compares every non-key column. */
-  private def runSnapshotCheck(m: ModelNode, key: String): DataFrame = {
-    recoverSwap(m)
-    val p = tablePath(m)
-    val at = snapshotAt.getOrElse(
-      new java.sql.Timestamp(System.currentTimeMillis()))
-    val source = execSql(m, isIncremental = false)
-    val tsType = org.apache.spark.sql.types.TimestampType
-    val stamped = source
-      .withColumn("dbt_valid_from", lit(at).cast(tsType))
-      .withColumn("dbt_valid_to", lit(null).cast(tsType))
-    // strListConfig owns the YList / inline-bracket / bare-string
-    // parsing (it names check_cols in its own doc); only the 'all'
-    // expansion and the missing-config error live here
-    val checkCols: Seq[String] = strListConfig(m, "check_cols") match {
-      case Seq("all") => source.columns.filterNot(_ == key).toSeq
-      case cols if cols.nonEmpty => cols
-      case _ => throw new IllegalArgumentException(
-        s"snapshot ${m.name}: strategy='check' needs check_cols")
+  /** dbt's SCD2 merge of a snapshot's stamped source rows into its stored
+    * versions, shared by both strategies. Against the CURRENT rows:
+    *  - new keys insert as current;
+    *  - keys whose incoming row is `changed` (a predicate over the
+    *    joined `cur.` and `in.` columns) close the old version at the new
+    *    version's dbt_valid_from and insert the new one;
+    *  - with `deleteAt` set (invalidate_hard_deletes), a current key gone
+    *    from the source closes at that stamp;
+    *  - unchanged rows and already-closed history pass through untouched.
+    * One shuffle on the key; history never rewrites more than the touched
+    * keys' rows (the full-outer join is key-partitioned). */
+  private def scd2(existing: DataFrame, stamped: DataFrame, key: String,
+      changed: Column, deleteAt: Option[Column]): DataFrame = {
+    val closed = existing.filter(col("dbt_valid_to").isNotNull)
+    val current = existing.filter(col("dbt_valid_to").isNull)
+    val joined = current.as("cur").join(
+      stamped.select(col(key).as("_k"), col("*")).as("in"),
+      col("cur." + key) === col("_k"), "full_outer")
+    val isCur = col("cur." + key).isNotNull
+    val isIn = col("_k").isNotNull
+    def closedAt(validTo: Column) = current.columns.toSeq.map {
+      case "dbt_valid_to" => validTo.as("dbt_valid_to")
+      case c => col("cur." + c)
     }
-    if (fullRefresh || !Files.exists(p)) persist(m, stamped)
-    else {
-      val existing = readTable(p)
-      val closed = existing.filter(col("dbt_valid_to").isNotNull)
-      val current = existing.filter(col("dbt_valid_to").isNull)
-      val incoming = stamped.select(col(key).as("_k"), col("*"))
-      val joined = current.as("cur").join(
-        incoming.as("in"), col("cur." + key) === col("_k"), "full_outer")
-      // null-safe "any check column differs" — NULL→value and
-      // value→NULL transitions are real changes
-      val changed = checkCols
-        .map(c => !(col("cur." + c) <=> col("in." + c)))
-        .reduceOption(_ || _).getOrElse(lit(false))
-      // invalidate_hard_deletes composes with strategy='check' the same
-      // way: vanished keys close at the run clock (`at` IS the run clock
-      // here — check-strategy versions are always stamped with it)
-      val hardDelete = boolConfig(m, "invalidate_hard_deletes")
-      val keptCurrent = joined
-        .filter(col("cur." + key).isNotNull && (col("_k").isNull || !changed))
-        .filter(if (hardDelete) col("_k").isNotNull else lit(true))
-        .select(current.columns.map(c => col("cur." + c)): _*)
-      val hardClosed = joined
-        .filter(lit(hardDelete) && col("cur." + key).isNotNull && col("_k").isNull)
-        .select(current.columns.map {
-          case "dbt_valid_to" => lit(at).cast(tsType).as("dbt_valid_to")
-          case c => col("cur." + c)
-        }: _*)
-      val closedNow = joined
-        .filter(col("cur." + key).isNotNull && col("_k").isNotNull && changed)
-        .select(current.columns.map {
-          case "dbt_valid_to" => lit(at).cast(tsType).as("dbt_valid_to")
-          case c => col("cur." + c)
-        }: _*)
-      val inserted = joined
-        .filter(col("_k").isNotNull && (col("cur." + key).isNull || changed))
-        .select(current.columns.map(c => col("in." + c)): _*)
-      val merged = closed.unionByName(keptCurrent).unionByName(hardClosed)
-        .unionByName(closedNow).unionByName(inserted)
-      val tmp = warehouseDir.resolve(m.name + "__tmp")
-      writeTable(m, merged, tmp)
-      swapDirs(p, tmp)
-      readTable(p)
-    }
+    val keptCurrent = joined // unchanged or no new row: keep as-is
+      .filter(isCur && (!isIn || !changed) && (if (deleteAt.isDefined) isIn else lit(true)))
+      .select(current.columns.toSeq.map(c => col("cur." + c)): _*)
+    val hardClosed = deleteAt.map(at => joined // key gone from the source
+      .filter(isCur && !isIn).select(closedAt(at): _*))
+    val closedNow = joined // superseded: close at the new version's start
+      .filter(isCur && isIn && changed)
+      .select(closedAt(col("in.dbt_valid_from")): _*)
+    val inserted = joined // new key or new version: insert as current
+      .filter(isIn && (!isCur || changed))
+      .select(current.columns.toSeq.map(c => col("in." + c)): _*)
+    (Seq(closed, keptCurrent) ++ hardClosed ++ Seq(closedNow, inserted))
+      .reduce(_ unionByName _)
   }
 
   private def deleteTree(p: Path): Unit =
@@ -1048,29 +926,35 @@ final class Runner(
         .iterator().asScala.foreach(Files.deleteIfExists(_))
     }
 
-  /** Crash-safe directory swap: a COMPLETE `tmp` replaces `p` by
-    * move-aside (p → __old, tmp → p, drop __old) — never
-    * delete-then-move, whose crash window leaves NO table at p (for a
-    * snapshot that silently rebuilt a fresh baseline, losing all SCD2
-    * history). Every window here leaves a complete table recoverable by
-    * [[recoverSwap]] on the next run. */
-  private def swapDirs(p: Path, tmp: Path): Unit = {
-    val old = p.resolveSibling(p.getFileName.toString + "__old")
+  /** The sibling directories a table replace stages through. */
+  private def tmpPath(m: ModelNode): Path = warehouseDir.resolve(m.name + "__tmp")
+  private def oldPath(m: ModelNode): Path = warehouseDir.resolve(m.name + "__old")
+
+  /** Replace a model's table with `df`, which may read from it (so the
+    * table cannot be overwritten in place): write a sibling `__tmp`, then
+    * swap it in crash-safely by move-aside (p → __old, tmp → p, drop
+    * __old) — never delete-then-move, whose crash window leaves NO table
+    * at p (for a snapshot that silently rebuilt a fresh baseline, losing
+    * all SCD2 history). Every window here leaves a complete table
+    * recoverable by [[recoverSwap]] on the next run. The swap costs
+    * renames instead of a second full write. */
+  private def replace(m: ModelNode, df: DataFrame): DataFrame = {
+    val (p, tmp, old) = (tablePath(m), tmpPath(m), oldPath(m))
+    writeTable(m, df, tmp)
     deleteTree(old)
     Files.move(p, old)
     Files.move(tmp, p)
     deleteTree(old)
+    readTable(p)
   }
 
-  /** Finish an interrupted [[swapDirs]] before any exists(p) decision:
+  /** Finish an interrupted [[replace]] before any exists(p) decision:
     * p missing + complete leftovers ⇒ restore (tmp is newest — it was
     * complete before p moved aside; __old is the pre-swap table); p
     * intact ⇒ any leftover __old is stale and any leftover __tmp is an
     * incomplete write the coming overwrite replaces anyway. */
   private def recoverSwap(m: ModelNode): Unit = {
-    val p = tablePath(m)
-    val tmp = warehouseDir.resolve(m.name + "__tmp")
-    val old = p.resolveSibling(p.getFileName.toString + "__old")
+    val (p, tmp, old) = (tablePath(m), tmpPath(m), oldPath(m))
     if (!Files.exists(p)) {
       if (Files.exists(tmp)) Files.move(tmp, p)
       else if (Files.exists(old)) Files.move(old, p)
@@ -1099,7 +983,7 @@ final class Runner(
           // stale source reports 'pass' forever; ambiguous units fail
           // loudly like the snapshot invalidate_hard_deletes path
           val dt = table.schema(src.loadedAtField.get).dataType
-          if (dt.isInstanceOf[org.apache.spark.sql.types.NumericType])
+          if (dt.isInstanceOf[NumericType])
             throw new IllegalArgumentException(
               s"source freshness $id: loaded_at_field " +
                 s"'${src.loadedAtField.get}' is ${dt.simpleString} — " +
@@ -1474,20 +1358,13 @@ final class Runner(
           df.filter(col(colName).isNotNull)
             .groupBy(col(colName)).count().filter(col("count") > 1)
         case "accepted_values" =>
-          // accept the same shapes strListConfig does for model configs:
-          // a parsed YAML list, an inline ['a','b'] literal the lite
-          // parser surfaces as a bare string, or a single value — and
-          // fail loudly when values are missing (an empty list would
-          // flag EVERY non-null row)
+          // a parsed YAML list, a `['a', 'b']` literal the lite parser
+          // surfaces as a bare string (split quote-aware), or a single
+          // value — and fail loudly when values are missing (an empty
+          // list would flag EVERY non-null row)
           val vals = t.config.get("values") match {
-            case Some(graft.core.yaml.YList(vs)) => vs.map(_.asStr)
-            case Some(y) if y.asStr.trim.startsWith("[") =>
-              y.asStr.trim.stripPrefix("[").stripSuffix("]").split(",")
-                .toVector
-                .map(_.trim.stripPrefix("'").stripSuffix("'")
-                  .stripPrefix("\"").stripSuffix("\""))
-                .filter(_.nonEmpty)
-            case Some(y) => Vector(y.asStr)
+            case Some(YList(vs)) => vs.map(_.asStr)
+            case Some(y) => JinjaLite.parseList(y.asStr).getOrElse(Vector(y.asStr))
             case None => throw new IllegalArgumentException(
               s"accepted_values test $tid needs `values`")
           }

@@ -3,7 +3,7 @@ package graft.core
 import graft.core.changes._
 import graft.core.model.AccessType
 import graft.core.parse.ProjectLoader
-import graft.core.yaml.{YMap, YStr}
+import graft.core.yaml.{YBool, YList, YMap, YStr}
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.{Files, Path}
@@ -279,5 +279,43 @@ class ProjectLoaderSpec extends AnyFunSuite {
     val (_, after) = ProjectLoader.load(root)
     assert(after.nodes("model.big.m_0007").access == AccessType.Public)
     assert(after.nodes("model.big.m_0008").access == AccessType.Protected)
+  }
+
+  test("config resolves once: inline overrides the patch, hooks and tags append") {
+    val root = writeProject(Map(
+      "dbt_project.yml" -> "name: rc\n",
+      "models/_props.yml" ->
+        """version: 2
+          |models:
+          |  - name: m
+          |    tags: [top]
+          |    config:
+          |      enabled: false
+          |      materialized: view
+          |      file_format: json
+          |      on_schema_change: fail
+          |      tags: [patch]
+          |      pre_hook: "select 'p1'"
+          |      post-hook: ["select 'q1'"]
+          |""".stripMargin,
+      "models/m.sql" ->
+        ("{{ config(enabled=true, materialized='table', file_format='csv', " +
+          "tags=['inline'], pre_hook=\"select 'i1'\", " +
+          "check_cols=['a, b', 'c']) }}\nselect 1 as id")))
+    val (_, man) = ProjectLoader.load(root)
+    // inline enabled=true overrides the patch's enabled: false
+    val n = man.nodes("model.rc.m")
+    assert(n.materialized == "table")
+    assert(n.tags == Vector("top", "patch", "inline"))
+    val c = n.config
+    assert(c.get("enabled").contains(YBool(true)))
+    assert(c.get("file_format").contains(YStr("csv")))
+    assert(c.get("on_schema_change").contains(YStr("fail")))
+    assert(c.get("pre-hook").contains(
+      YList.of(YStr("select 'p1'"), YStr("select 'i1'"))))
+    assert(c.get("post-hook").contains(YList.of(YStr("select 'q1'"))))
+    assert(!c.contains("pre_hook"))
+    // a list literal parses once, quote-aware
+    assert(c.get("check_cols").contains(YList.of(YStr("a, b"), YStr("c"))))
   }
 }

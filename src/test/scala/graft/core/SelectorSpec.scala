@@ -201,6 +201,24 @@ class SelectorSpec extends AnyFunSuite {
     assert(Selector.select(m2, Seq("config.file_format:orc")).isEmpty)
   }
 
+  test("config.<key>: and tag: see inline config() values") {
+    val root = java.nio.file.Files.createTempDirectory("graft_sel")
+    Map(
+      "dbt_project.yml" -> "name: p\n",
+      "models/a.sql" -> "{{ config(file_format='csv', tags=['x']) }}\nselect 1",
+      "models/b.py" ->
+        "def model(dbt, session):\n    dbt.config(file_format=\"csv\")\n",
+      "models/c.sql" -> "select 1"
+    ).foreach { case (rel, text) =>
+      val p = root.resolve(rel)
+      java.nio.file.Files.createDirectories(p.getParent)
+      java.nio.file.Files.writeString(p, text)
+    }
+    val (_, m) = graft.core.parse.ProjectLoader.load(root)
+    assert(ids(Selector.select(m, Seq("config.file_format:csv"))) == Set("a", "b"))
+    assert(ids(Selector.select(m, Seq("tag:x"))) == Set("a"))
+  }
+
   test("state:modified and state:new against a stored manifest") {
     // b's SQL changed, f is brand new; everything else is untouched
     val changedB = manifest.nodes("model.p.b").copy(rawCode = "select 2")

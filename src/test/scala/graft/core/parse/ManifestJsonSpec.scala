@@ -92,6 +92,32 @@ class ManifestJsonSpec extends AnyFunSuite {
       Set("model.split_proj.stg_orders"))
   }
 
+  test("a model's own config wins over the writer's defaults through a round trip") {
+    val root = Files.createTempDirectory("graft_mjw")
+    Map(
+      "dbt_project.yml" -> "name: p\n",
+      "models/_props.yml" ->
+        """version: 2
+          |models:
+          |  - name: m
+          |    config:
+          |      on_schema_change: fail
+          |      pre-hook: "select 1"
+          |""".stripMargin,
+      "models/m.sql" -> "{{ config(materialized='incremental') }}\nselect 1 as id"
+    ).foreach { case (rel, text) =>
+      Files.createDirectories(root.resolve(rel).getParent)
+      Files.writeString(root.resolve(rel), text)
+    }
+    val (_, native) = ProjectLoader.load(root)
+    val c = ManifestJson.parse(ManifestJsonWriter.emit(native))
+      .nodes("model.p.m").config
+    assert(c.get("on_schema_change").contains(YStr("fail")))
+    assert(c.get("materialized").contains(YStr("incremental")))
+    // hook lists keep the default: dbt's entries are {sql, transaction}
+    assert(c.get("pre-hook").contains(YList(Vector.empty)))
+  }
+
   test("missing required fields on consumed resource types fail loudly") {
     val bad =
       """{"metadata":{"project_name":"p"},

@@ -1673,4 +1673,60 @@ class RunnerSpec extends AnyFunSuite with SparkFixture {
     assert(status.values.forall(_ == "success"), status.toString)
     assert(hooks.isEmpty, hooks.toString)
   }
+
+  test("resolved config: inline file_format beats the patch, in SQL and Python models alike") {
+    val s = spark
+    import s.implicits._
+    Seq((1L, "a")).toDF("id", "v").createOrReplaceTempView("rc_src")
+    val root = writeProject(Map(
+      "dbt_project.yml" -> "name: rcfg\n",
+      "models/_props.yml" ->
+        """version: 2
+          |models:
+          |  - name: sql_m
+          |    config:
+          |      materialized: view
+          |      file_format: json
+          |""".stripMargin,
+      "models/sql_m.sql" ->
+        ("{{ config(materialized='table', file_format='csv') }}\n" +
+          "select * from rc_src"),
+      "models/py_m.py" ->
+        """def model(dbt, session):
+          |    dbt.config(materialized="table", file_format="csv")
+          |    df = dbt.ref("sql_m").df()
+          |    return df
+          |""".stripMargin))
+    val (cfg, manifest) = ProjectLoader.load(root)
+    // inline materialized still wins over the patch's
+    assert(manifest.nodes("model.rcfg.sql_m").materialized == "table")
+    val wh = Files.createTempDirectory("graft_wh_rcfg")
+    val out = new Runner(spark, manifest, cfg, wh, enforceAccess = false).run()
+    assert(out("model.rcfg.py_m").as[(Long, String)].collect().toSeq ==
+      Seq((1L, "a")))
+    for (m <- Seq("sql_m", "py_m"))
+      assert(Files.readString(wh.resolve(m).resolve("_graft_format")) == "csv", m)
+  }
+
+  test("accepted_values: a comma inside a quoted value does not split it") {
+    val s = spark
+    import s.implicits._
+    Seq("x, y", "z").toDF("status").createOrReplaceTempView("av_input")
+    val root = writeProject(Map(
+      "dbt_project.yml" -> "name: av\n",
+      "models/m.sql" -> "select * from av_input",
+      "models/_props.yml" ->
+        """version: 2
+          |models:
+          |  - name: m
+          |    columns:
+          |      - name: status
+          |        tests:
+          |          - accepted_values:
+          |              values: "['x, y', 'z']"
+          |""".stripMargin))
+    val (runner, _) = mkRunner(root, enforceAccess = false)
+    runner.run()
+    assert(runner.runTests() == Map("test.av.accepted_values_m_status" -> 0L))
+  }
 }
