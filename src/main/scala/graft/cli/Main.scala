@@ -134,23 +134,26 @@ object Main {
     def apply(cs: ChangeSet, at: Path = root): Unit =
       new ChangeSetProcessor(at, dryRun = dryRun, log = println).process(Seq(cs))
     def readFile(p: String): String = Files.readString(root.resolve(p))
+    // --state <path>: a dbt-core manifest.json, or a directory holding one
+    // (dbt's --state convention)
+    def stateManifest: Option[Path] = args.flags("state").headOption.map { p =>
+      val path = Paths.get(p)
+      if (Files.isDirectory(path)) path.resolve("manifest.json") else path
+    }
+    // an inline-YAML map flag (`--vars '{key: value}'`, `--args`)
+    def yamlMapFlag(flag: String): Map[String, String] =
+      args.flags(flag).headOption.map(graft.core.yaml.Yaml.parseMap(_).entries
+        .map { case (k, v) => k -> v.asStr }.toMap).getOrElse(Map.empty)
     // selection = --select/--exclude grammar ∪ --selector (named selector
     // from selectors.yml, like the reference's pass-through to dbt ls)
     def selection(m: graft.core.model.Manifest): Set[String] = {
-      // --state <path>: comparison manifest for state:modified/state:new —
-      // a dbt-core manifest.json (or a directory containing one, dbt's
-      // --state convention), loaded through the artifact-interop front end
-      val state = args.flags("state").headOption.flatMap { p =>
-        val path = Paths.get(p)
-        val mf =
-          if (Files.isDirectory(path)) path.resolve("manifest.json") else path
-        // a --state dir may carry only run_results.json (the retry flow);
-        // state:modified then fails loudly in the selector rather than
-        // here with a bare NoSuchFileException
-        if (Files.isRegularFile(mf))
-          Some(graft.core.parse.ManifestJson.load(mf))
-        else None
-      }
+      // --state: comparison manifest for state:modified/state:new, loaded
+      // through the artifact-interop front end. A --state dir may carry
+      // only run_results.json (the retry flow); state:modified then fails
+      // loudly in the selector rather than here with a bare
+      // NoSuchFileException
+      val state = stateManifest.filter(Files.isRegularFile(_))
+        .map(graft.core.parse.ManifestJson.load)
       // run_results.json rides the same --state directory (dbt's retry
       // convention); absent file → None, and `result:` then fails loudly
       val results = args.flags("state").headOption.flatMap { p =>
@@ -239,19 +242,13 @@ object Main {
         val threads = args.flags("threads").headOption.map(_.toInt).getOrElse(1)
         // dbt's --defer: refs outside the selection serve from the state
         // manifest's relations (requires --state, like state: selectors)
-        val deferM = if (args.switches("defer")) {
-          val p = args.flags("state").headOption.getOrElse(
-            throw new IllegalArgumentException("--defer requires --state"))
-          val path = Paths.get(p)
-          Some(graft.core.parse.ManifestJson.load(
-            if (Files.isDirectory(path)) path.resolve("manifest.json") else path))
-        } else None
+        val deferM = if (args.switches("defer"))
+          Some(graft.core.parse.ManifestJson.load(stateManifest.getOrElse(
+            throw new IllegalArgumentException("--defer requires --state"))))
+        else None
         // dbt's --vars '{key: value}' — an inline YAML map overriding
         // dbt_project.yml vars for this invocation
-        val varOv = args.flags("vars").headOption.map { y =>
-          graft.core.yaml.Yaml.parseMap(y).entries
-            .map { case (k, v) => k -> v.asStr }.toMap
-        }.getOrElse(Map.empty[String, String])
+        val varOv = yamlMapFlag("vars")
         val (out, status) = new Runner(spark(), m, cfg,
           warehouse(), projectRoot = Some(root),
           readCatalog = readCatalog,
@@ -685,11 +682,8 @@ object Main {
         // from the clones, and `run --read-catalog` reuses them as
         // already-materialized catalog tables.
         val (cfg, m) = ProjectLoader.load(root)
-        val stateP = args.flags("state").headOption.map(Paths.get(_))
-          .getOrElse(throw new IllegalArgumentException("clone requires --state"))
-        val stateM = graft.core.parse.ManifestJson.load(
-          if (Files.isDirectory(stateP)) stateP.resolve("manifest.json")
-          else stateP)
+        val stateM = graft.core.parse.ManifestJson.load(stateManifest.getOrElse(
+          throw new IllegalArgumentException("clone requires --state")))
         val sel = if (selectionActive) selection(m) else m.nodes.keySet
         val persistent = Set("table", "incremental", "snapshot", "seed")
         val s = spark()
@@ -852,17 +846,10 @@ object Main {
           throw new IllegalArgumentException(
             "run-operation requires a macro name"))
         val (cfg, m) = ProjectLoader.load(root)
-        val macroArgs = args.flags("args").headOption.map { y =>
-          graft.core.yaml.Yaml.parseMap(y).entries
-            .map { case (k, v) => k -> v.asStr }.toMap
-        }.getOrElse(Map.empty[String, String])
-        val varOv = args.flags("vars").headOption.map { y =>
-          graft.core.yaml.Yaml.parseMap(y).entries
-            .map { case (k, v) => k -> v.asStr }.toMap
-        }.getOrElse(Map.empty[String, String])
+        val macroArgs = yamlMapFlag("args")
         val runner = new Runner(spark(), m, cfg, warehouse(),
           projectRoot = Some(root), readCatalog = readCatalog,
-          varOverrides = varOv)
+          varOverrides = yamlMapFlag("vars"))
         runner.runOperation(name, macroArgs)
         println(s"ran operation $name")
 

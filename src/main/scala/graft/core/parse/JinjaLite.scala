@@ -2,23 +2,103 @@ package graft.core.parse
 
 import scala.util.matching.Regex
 
-/** Jinja-lite: the template subset dbt model files actually use, handled
-  * with the same regex approach as the reference's rewrite/extraction
-  * passes (`utilities/references.py:58-148`, `storage/jinja_blocks.py`).
-  * No general Jinja evaluation — the fixture set bounds the surface
-  * (SURVEY §7 "Jinja subset").
+/** Jinja-lite: the template subset dbt model files actually use
+  * (`utilities/references.py:58-148`, `storage/jinja_blocks.py`). It owns
+  * the one `ref()`/`source()` call grammar: [[scan]], [[rewrite]] and
+  * [[print]] serve the loader's DAG, the renderer, the split/connect
+  * rewrites and the manifest writer alike. No general Jinja evaluation —
+  * the fixture set bounds the surface (SURVEY §7 "Jinja subset").
   */
 object JinjaLite {
 
-  final case class RefCall(project: Option[String], name: String, version: Option[Int])
-  final case class SourceCall(sourceName: String, table: String)
+  sealed trait CallTarget
+  final case class RefCall(project: Option[String], name: String, version: Option[Int]) extends CallTarget
+  final case class SourceCall(sourceName: String, table: String) extends CallTarget
   final case class JinjaBlock(kind: String, name: String, start: Int, end: Int, content: String)
 
-  // quote-and-whitespace tolerant, like the reference's patterns
-  val refRe: Regex =
-    """\{\{\s*ref\s*\(\s*['"]([A-Za-z0-9_.\-]+)['"]\s*(?:,\s*['"]([A-Za-z0-9_.\-]+)['"]\s*)?(?:,\s*(?:v|version)\s*=\s*(\d+)\s*)?\)\s*\}\}""".r
-  val sourceRe: Regex =
-    """\{\{\s*source\s*\(\s*['"]([A-Za-z0-9_.\-]+)['"]\s*,\s*['"]([A-Za-z0-9_.\-]+)['"]\s*\)\s*\}\}""".r
+  /** How a `ref()`/`source()` call is written: `{{ ref(..) }}` in SQL,
+    * bare `ref(..)` in YAML strings and inside SQL `{% %}` tags,
+    * `dbt.ref(..)` in Python models. */
+  sealed trait Framing
+  object Framing {
+    case object Sql extends Framing
+    case object Bare extends Framing
+    case object Python extends Framing
+    /** A model's framing, by its language. */
+    def of(language: String): Framing = if (language == "python") Python else Sql
+  }
+
+  /** One call found by [[scan]]: `[start, end)` is its span in the
+    * scanned text and `framing` how that span is written (a bare call
+    * inside a SQL `{% %}` tag is `Bare`). */
+  final case class Call(target: CallTarget, framing: Framing, start: Int, end: Int)
+
+  // THE call grammar: ref(<name>[, <name>][, v|version=N]) and
+  // source(<name>, <name>), whitespace tolerant, each name in matching
+  // quotes of either kind. Groups: 1 kind, 3 and 5 the names, 6 version.
+  private val callCore =
+    """(ref|source)\s*\(\s*(['"])([A-Za-z0-9_.\-]+)\2\s*(?:,\s*(['"])([A-Za-z0-9_.\-]+)\4\s*)?(?:,\s*(?:v|version)\s*=\s*(\d+)\s*)?\)"""
+  private val bareCallRe: Regex = ("""\b""" + callCore).r
+  private val pyCallRe: Regex = ("""dbt\s*\.\s*""" + callCore).r
+  // a whole `{% %}` tag (its bare calls scan separately) or a `{{ call }}`
+  private val tagSpan = """\{%(?:[^%]|%(?!\}))*%\}"""
+  private val sqlCallRe: Regex = (tagSpan + """|\{\{\s*""" + callCore + """\s*\}\}""").r
+
+  /** Every call in `text` under `framing`, in order. SQL framing sees
+    * `{{ call }}` spans and bare calls inside `{% %}` tags — exactly
+    * the calls [[render]] resolves. */
+  def scan(text: String, framing: Framing): Vector[Call] = framing match {
+    case Framing.Sql => sqlCallRe.findAllMatchIn(text).flatMap { m =>
+      if (m.group(1) == null) calls(bareCallRe, m.matched, Framing.Bare, m.start)
+      else toCall(m, Framing.Sql, 0)
+    }.toVector
+    case Framing.Bare => calls(bareCallRe, text, framing, 0).toVector
+    case Framing.Python => calls(pyCallRe, text, framing, 0).toVector
+  }
+
+  private def calls(re: Regex, text: String, framing: Framing, offset: Int): Iterator[Call] =
+    re.findAllMatchIn(text).flatMap(toCall(_, framing, offset))
+
+  private def toCall(m: Regex.Match, framing: Framing, offset: Int): Option[Call] = {
+    val v = Option(m.group(6)).map(_.toInt)
+    ((m.group(1), Option(m.group(5)), v) match {
+      case ("ref", None, _) => Some(RefCall(None, m.group(3), v))
+      case ("ref", Some(n), _) => Some(RefCall(Some(m.group(3)), n, v))
+      case ("source", Some(t), None) => Some(SourceCall(m.group(3), t))
+      case _ => None
+    }).map(Call(_, framing, offset + m.start, offset + m.end))
+  }
+
+  /** `text` with each scanned call that `f` maps to Some replaced by it. */
+  def rewrite(text: String, framing: Framing)(f: Call => Option[String]): String = {
+    val sb = new StringBuilder
+    var pos = 0
+    scan(text, framing).foreach(c => f(c).foreach { s =>
+      sb ++= text.substring(pos, c.start) ++= s
+      pos = c.end
+    })
+    (sb ++= text.substring(pos)).toString
+  }
+
+  /** `r` written in `framing`: single quotes in SQL and YAML, double in
+    * Python, the version as `v=N`. */
+  def print(r: RefCall, framing: Framing): String = {
+    val q = if (framing == Framing.Python) "\"" else "'"
+    val args = (r.project.toVector :+ r.name).map(a => q + a + q) ++ r.version.map(v => s"v=$v")
+    val call = args.mkString("ref(", ", ", ")")
+    framing match {
+      case Framing.Sql => s"{{ $call }}"
+      case Framing.Bare => call
+      case Framing.Python => s"dbt.$call"
+    }
+  }
+
+  def refs(text: String, framing: Framing): Vector[RefCall] =
+    scan(text, framing).collect { case Call(r: RefCall, _, _, _) => r }
+  def findRefs(code: String): Vector[RefCall] = refs(code, Framing.Sql)
+  def findSources(code: String): Vector[SourceCall] =
+    scan(code, Framing.Sql).collect { case Call(s: SourceCall, _, _, _) => s }
+
   val varRe: Regex =
     """\{\{\s*var\s*\(\s*['"]([A-Za-z0-9_.\-]+)['"]\s*(?:,\s*([^)]*?)\s*)?\)\s*\}\}""".r
   val configRe: Regex = """\{\{\s*config\s*\(([\s\S]*?)\)\s*\}\}""".r
@@ -51,52 +131,6 @@ object JinjaLite {
     items += cur.result()
     Some(items.result().map(unquote).filter(_.nonEmpty))
   }
-
-  def findRefs(code: String): Vector[RefCall] =
-    refRe.findAllMatchIn(code).map { m =>
-      val (proj, name) = if (m.group(2) != null) (Some(m.group(1)), m.group(2)) else (None, m.group(1))
-      RefCall(proj, name, Option(m.group(3)).map(_.toInt))
-    }.toVector
-
-  /** Bare `ref('x')` / `ref('p', 'x')` strings (no `{{ }}`) — the form
-    * YAML fields use (exposure depends_on, semantic-model/metric model). */
-  private val bareRefRe: Regex =
-    """ref\s*\(\s*['"]([A-Za-z0-9_.\-]+)['"]\s*(?:,\s*['"]([A-Za-z0-9_.\-]+)['"]\s*)?(?:,\s*(?:v|version)\s*=\s*(\d+)\s*)?\)""".r
-  def findBareRefs(text: String): Vector[RefCall] =
-    bareRefRe.findAllMatchIn(text).map { m =>
-      val (proj, name) =
-        if (m.group(2) != null) (Some(m.group(1)), m.group(2)) else (None, m.group(1))
-      RefCall(proj, name, Option(m.group(3)).map(_.toInt))
-    }.toVector
-
-  private val bareSourceRe: Regex =
-    """source\s*\(\s*['"]([A-Za-z0-9_.\-]+)['"]\s*,\s*['"]([A-Za-z0-9_.\-]+)['"]\s*\)""".r
-
-  /** Bare `source('s', 't')` strings (no `{{ }}`) — unit-test `given:`
-    * inputs use this form, like exposure depends_on uses bare refs. */
-  def findBareSources(text: String): Vector[SourceCall] =
-    bareSourceRe.findAllMatchIn(text)
-      .map(m => SourceCall(m.group(1), m.group(2))).toVector
-
-  def findSources(code: String): Vector[SourceCall] =
-    sourceRe.findAllMatchIn(code).map(m => SourceCall(m.group(1), m.group(2))).toVector
-
-  // Python models call `dbt.ref("m")` / `dbt.source("s", "t")` instead of
-  // jinja expressions (`references.py:102-148` rewrites these forms)
-  private val pyRefRe: Regex =
-    """dbt\s*\.\s*ref\s*\(\s*['"]([A-Za-z0-9_.\-]+)['"]\s*(?:,\s*['"]([A-Za-z0-9_.\-]+)['"]\s*)?\)""".r
-  private val pySourceRe: Regex =
-    """dbt\s*\.\s*source\s*\(\s*['"]([A-Za-z0-9_.\-]+)['"]\s*,\s*['"]([A-Za-z0-9_.\-]+)['"]\s*\)""".r
-
-  def findPythonRefs(code: String): Vector[RefCall] =
-    pyRefRe.findAllMatchIn(code).map { m =>
-      val (proj, name) =
-        if (m.group(2) != null) (Some(m.group(1)), m.group(2)) else (None, m.group(1))
-      RefCall(proj, name, None)
-    }.toVector
-
-  def findPythonSources(code: String): Vector[SourceCall] =
-    pySourceRe.findAllMatchIn(code).map(m => SourceCall(m.group(1), m.group(2))).toVector
 
   /** `{{ config(k=v, ...) }}` kwargs as raw strings (quotes stripped). */
   def findConfig(code: String): Map[String, String] = kwargs(configRe, code)
@@ -830,32 +864,19 @@ object JinjaLite {
     // (dbt itself resolves refs during render, so a set-bound ref is a
     // string there too); likewise target.name binds to the profile
     // target (vars override, 'default' like dbt's default profile).
-    val tagSpanRe = """\{%(?:[^%]|%(?!\}))*%\}""".r
-    out = tagSpanRe.replaceAllIn(out, tm => Regex.quoteReplacement {
-      var s = tm.matched
-      s = bareRefRe.replaceAllIn(s, m => {
-        val (proj, name) =
-          if (m.group(2) != null) (Some(m.group(1)), m.group(2))
-          else (None, m.group(1))
-        Regex.quoteReplacement(
-          "'" + resolveRef(RefCall(proj, name,
-            Option(m.group(3)).map(_.toInt))) + "'")
-      })
-      s = bareSourceRe.replaceAllIn(s, m => Regex.quoteReplacement(
-        "'" + resolveSource(SourceCall(m.group(1), m.group(2))) + "'"))
-      s
-    })
+    def resolved(c: Call): Option[String] = {
+      val rel = c.target match {
+        case r: RefCall => resolveRef(r)
+        case sc: SourceCall => resolveSource(sc)
+      }
+      Some(if (c.framing == Framing.Bare) s"'$rel'" else rel)
+    }
+    out = rewrite(out, Framing.Sql)(c => if (c.framing == Framing.Bare) resolved(c) else None)
     val cfEnv = typedEnv(vars) ++ Map(
       "target.name" -> JStr(vars.getOrElse("target.name",
         vars.getOrElse("target", "default"))))
     out = renderControlFlow(out, cfEnv, isIncremental)
-    out = refRe.replaceAllIn(out, m => {
-      val (proj, name) =
-        if (m.group(2) != null) (Some(m.group(1)), m.group(2)) else (None, m.group(1))
-      Regex.quoteReplacement(resolveRef(RefCall(proj, name, Option(m.group(3)).map(_.toInt))))
-    })
-    out = sourceRe.replaceAllIn(out, m =>
-      Regex.quoteReplacement(resolveSource(SourceCall(m.group(1), m.group(2)))))
+    out = rewrite(out, Framing.Sql)(resolved)
     out = varRe.replaceAllIn(out, m => {
       val name = m.group(1)
       val default = Option(m.group(2)).map(_.trim.stripPrefix("'").stripSuffix("'"))

@@ -65,7 +65,15 @@ object ManifestJson {
       // types (analysis/operation/…) tolerated even when malformed.
       rt match {
         case "model" | "seed" | "snapshot" =>
-          val config = cfg.map(toY(_).asMap).getOrElse(YMap.empty)
+          // dbt writes each hook as a {sql, transaction} object; the
+          // config keeps the plain SQL strings the native loader resolves
+          val config = YMap(cfg.map(toY(_).asMap.entries).getOrElse(Vector.empty).map {
+            case (k @ ("pre-hook" | "post-hook"), YList(hooks)) => k -> YList(hooks.map {
+              case h: YMap => h.get("sql").getOrElse(h)
+              case h => h
+            })
+            case kv => kv
+          })
           nodes += id -> ModelNode(
             uniqueId = id, name = str(n, "name", id),
             packageName = str(n, "package_name", id),
@@ -163,14 +171,13 @@ object ManifestJson {
 
     val exposures = fields("exposures").map { case (id, e) =>
       // the manifest stores resolved refs, not the YAML strings; rebuild
-      // the canonical ref('x') / ref('pkg', 'x') forms D5 rewrites
+      // the canonical bare ref('x') / ref('pkg', 'x', v=n) forms D5 rewrites
       val refStrings = opt(e, "refs").toVector
         .flatMap(_.elements().asScala).map { r =>
-          val nm = optStr(r, "name").getOrElse("")
-          optStr(r, "package") match {
-            case Some(p) => s"ref('$p', '$nm')"
-            case None => s"ref('$nm')"
-          }
+          JinjaLite.print(JinjaLite.RefCall(optStr(r, "package"),
+            optStr(r, "name").getOrElse(""),
+            optStr(r, "version").flatMap(_.stripSuffix(".0").toIntOption)),
+            JinjaLite.Framing.Bare)
         }
       id -> Exposure(
         uniqueId = id, name = str(e, "name", id),

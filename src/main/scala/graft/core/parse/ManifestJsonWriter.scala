@@ -97,12 +97,17 @@ object ManifestJsonWriter {
       n.uniqueKey.foreach(c.put("unique_key", _))
       if (n.partitionBy.nonEmpty) strs(c.putArray("partition_by"), n.partitionBy)
       c.putObject("contract").put("enforced", n.contractEnforced)
-      // hooks stay `[]`: dbt's hook entries are {sql, transaction}
-      // objects, which the resolved config's plain SQL strings are not
+      // dbt writes each hook as a {sql, transaction} object; the
+      // resolved config holds plain SQL strings
       n.config.entries.foreach { case (k, v) =>
-        if (k != "pre-hook" && k != "post-hook") {
-          c.set[com.fasterxml.jackson.databind.JsonNode](k, yToJson(v)); ()
+        val out = (k, v) match {
+          case ("pre-hook" | "post-hook", YList(hooks)) => YList(hooks.map {
+            case YStr(sql) => YMap.of("sql" -> YStr(sql), "transaction" -> YBool(true))
+            case h => h
+          })
+          case _ => v
         }
+        c.set[com.fasterxml.jackson.databind.JsonNode](k, yToJson(out)); ()
       }
     }
     m.tests.toSeq.sortBy(_._1).foreach { case (id, t) =>
@@ -175,14 +180,11 @@ object ManifestJsonWriter {
       o.put("unique_id", id)
       dependsOn(o, e.dependsOn)
       val refs = o.putArray("refs")
-      val refRe = """ref\(\s*'([^']+)'\s*(?:,\s*'([^']+)'\s*)?\)""".r
-      e.refStrings.foreach { s =>
-        refRe.findFirstMatchIn(s).foreach { mm =>
-          val r = refs.addObject()
-          if (mm.group(2) != null) {
-            r.put("package", mm.group(1)); r.put("name", mm.group(2))
-          } else r.put("name", mm.group(1))
-        }
+      e.refStrings.flatMap(JinjaLite.refs(_, JinjaLite.Framing.Bare)).foreach { r =>
+        val ro = refs.addObject()
+        ro.put("name", r.name)
+        r.project.foreach(ro.put("package", _))
+        r.version.foreach(ro.put("version", _))
       }
     }
 

@@ -1,6 +1,7 @@
 package graft.core.parse
 
 import graft.core.catalog.Contracts
+import graft.core.parse.JinjaLite.{Framing, RefCall, SourceCall}
 import graft.core.model._
 import graft.core.yaml._
 import java.nio.file.{Files, Path}
@@ -261,8 +262,8 @@ object ProjectLoader {
           val refStrings = e.get("depends_on").collect { case YList(ds) => ds.map(_.asStr) }
             .getOrElse(Vector.empty)
           // YAML ref strings are bare ref('x'), not {{ ref('x') }}
-          val deps = refStrings.flatMap(s =>
-            JinjaLite.findBareRefs(s).map(r => s"model.$proj.${r.name}"))
+          val deps = refStrings.flatMap(JinjaLite.refs(_, Framing.Bare))
+            .map(r => s"model.$proj.${r.name}").distinct
           val id = s"exposure.$proj.$n"
           exposures += id -> Exposure(id, n, proj, rel, DependsOn(nodes = deps), refStrings)
         case _ =>
@@ -271,7 +272,8 @@ object ProjectLoader {
         case sm: YMap =>
           val n = sm("name").asStr
           val modelRef = sm.get("model").map(_.asStr).getOrElse("")
-          val deps = JinjaLite.findBareRefs(modelRef).map(r => s"model.$proj.${r.name}")
+          val deps = JinjaLite.refs(modelRef, Framing.Bare)
+            .map(r => s"model.$proj.${r.name}").distinct
           val id = s"semantic_model.$proj.$n"
           semanticModels += id -> SemanticModel(id, n, proj, rel, modelRef, DependsOn(nodes = deps))
         case _ =>
@@ -281,8 +283,8 @@ object ProjectLoader {
           val n = met("name").asStr
           // metric model refs: `model: ref('x')` (simple metrics) or
           // nested measures — resolve whatever bare ref() strings appear
-          val deps = JinjaLite.findBareRefs(Yaml.dump(met))
-            .map(r => s"model.$proj.${r.name}")
+          val deps = JinjaLite.refs(Yaml.dump(met), Framing.Bare)
+            .map(r => s"model.$proj.${r.name}").distinct
           val id = s"metric.$proj.$n"
           metrics += id -> MetricNode(id, n, proj, rel, DependsOn(nodes = deps))
         case _ =>
@@ -411,6 +413,9 @@ object ProjectLoader {
       // only exist after rendering — `{% for t in [...] %}{{ ref(t) }}`
       // loops produce literal ref() calls dbt's own compile would see.
       // Best-effort: anything unrenderable falls back to the raw code.
+      // Calls inside `{% %}` tags become string literals first, as
+      // render() resolves them, so a `{% set rel = ref('x') %}` does not
+      // stop the evaluator (the depCode scan records that call).
       // {# ... #} comments vanish BEFORE dependency extraction — a
       // commented-out {{ ref('legacy') }} must not create a phantom DAG
       // edge (render() strips comments first for the same reason)
@@ -421,17 +426,12 @@ object ProjectLoader {
         if (lang == "python") code
         else scala.util.Try {
           JinjaLite.renderControlFlow(
-            JinjaLite.expandMacros(depCode, macroByName),
+            JinjaLite.rewrite(JinjaLite.expandMacros(depCode, macroByName), Framing.Sql)(c =>
+              if (c.framing == Framing.Bare) Some("''") else None),
             JinjaLite.typedEnv(cfg.vars.entries.map {
               case (k, v) => k -> v.asStr
             }.toMap))
         }.getOrElse(code)
-      val refCalls =
-        if (lang == "python") JinjaLite.findPythonRefs(code)
-        else (JinjaLite.findRefs(depCode) ++ JinjaLite.findRefs(compiled)).distinct
-      val srcCalls =
-        if (lang == "python") JinjaLite.findPythonSources(code)
-        else (JinjaLite.findSources(depCode) ++ JinjaLite.findSources(compiled)).distinct
       val pkgNames = pkgManifests.map(_.projectName).toSet + proj
       // refs/sources inside called macros (transitively) are the model's
       // dependencies too — dbt resolves them at compile time (e.g. the
@@ -449,12 +449,15 @@ object ProjectLoader {
         seen
       }
       val macroBodies = macroClosureIds.toVector.flatMap(macros.get).map(_.macroSql)
-      val macroRefCalls = macroBodies.flatMap(JinjaLite.findRefs)
-      val macroSrcCalls = macroBodies.flatMap(JinjaLite.findSources)
-      val refDeps = (refCalls ++ macroRefCalls).filter(_.project.forall(pkgNames))
-        .flatMap(r => nameToId.get(r.name))
-      val srcDeps = (srcCalls ++ macroSrcCalls)
-        .flatMap(sc => sourceByPair.get((sc.sourceName, sc.table)))
+      val calls = (Vector(depCode, compiled).distinct
+        .flatMap(JinjaLite.scan(_, Framing.of(lang))) ++
+        macroBodies.flatMap(JinjaLite.scan(_, Framing.Sql))).map(_.target)
+      val refDeps = calls.collect {
+        case r: RefCall if r.project.forall(pkgNames) => nameToId.get(r.name)
+      }.flatten
+      val srcDeps = calls.collect {
+        case sc: SourceCall => sourceByPair.get((sc.sourceName, sc.table))
+      }.flatten
       val macroDeps = JinjaLite.findMacroCalls(code).filter(macroNames).map(n => s"macro.$proj.$n")
       val patch = modelPatches.get(name)
       val patchEntry = patch.map(_._2).getOrElse(YMap.empty)
@@ -539,7 +542,7 @@ object ProjectLoader {
             // (same convention the exposure loader documents); the braced
             // form still matches
             val extraDeps = tConf.get("to").toSeq.flatMap(to =>
-              JinjaLite.findBareRefs(to.asStr).map(r => s"model.$proj.${r.name}"))
+              JinjaLite.refs(to.asStr, Framing.Bare).map(r => s"model.$proj.${r.name}"))
             tests += tid -> TestNode(tid, s"${tType}_${name}_$colName", proj,
               patch.map(_._1).getOrElse(rel),
               DependsOn(nodes = (id +: extraDeps).distinct.toVector),

@@ -159,10 +159,8 @@ final class Runner(
 
   /** The same-project seed whose table a source call names, if any (the
     * jaffle pattern: seeds stand in for raw tables). */
-  private def sourceSeed(sc: JinjaLite.SourceCall): Option[String] =
-    sourcesByName.get((sc.sourceName, sc.table))
-      .map(s => s"seed.${manifest.projectName}.${s.name}")
-      .filter(manifest.nodes.contains)
+  private def sourceSeed(src: SourceDefinition): Option[String] =
+    Some(s"seed.${manifest.projectName}.${src.name}").filter(manifest.nodes.contains)
 
   /** The canonical source() resolution, for SQL and Python models alike:
     * a same-project seed materializes the table in-session; an
@@ -172,7 +170,7 @@ final class Runner(
     val src = sourcesByName.getOrElse((sc.sourceName, sc.table),
       throw new IllegalArgumentException(
         s"unknown source ${sc.sourceName}.${sc.table} in $where"))
-    if (sourceSeed(sc).isDefined) viewName(src.name)
+    if (sourceSeed(src).isDefined) viewName(src.name)
     else if (src.external.isDefined) externalView(src)
     else sourceView(src)
   }
@@ -341,22 +339,11 @@ final class Runner(
     // from any model reading a source whose table a same-project seed
     // materializes (the jaffle pattern — dbt orders this via `dbt seed`
     // before `dbt run`; one scheduler here, so it's a real dependency)
-    val parentMapSched: Map[String, Set[String]] = {
-      val seedEdges = manifest.nodes.flatMap { case (id, m) =>
-        if (m.rawCode.isEmpty) None
-        else {
-          val calls =
-            if (m.language == "python")
-              graft.core.parse.JinjaLite.findPythonSources(m.rawCode)
-            else graft.core.parse.JinjaLite.findSources(m.rawCode)
-          val seeds = calls.flatMap(sourceSeed).toSet
-          if (seeds.isEmpty) None else Some(id -> seeds)
-        }
+    val parentMapSched: Map[String, Set[String]] =
+      manifest.nodes.foldLeft(manifest.parentMap) { case (pm, (id, m)) =>
+        val seeds = m.dependsOn.nodes.flatMap(manifest.sources.get).flatMap(sourceSeed)
+        if (seeds.isEmpty) pm else pm.updated(id, pm.getOrElse(id, Set.empty) ++ seeds)
       }
-      seedEdges.foldLeft(manifest.parentMap) { case (pm, (id, seeds)) =>
-        pm.updated(id, pm.getOrElse(id, Set.empty) ++ seeds)
-      }
-    }
     // ancestors pulled into the run stop at a deferred boundary: a
     // deferred parent serves from its state relation, so neither it nor
     // anything above it executes
@@ -1052,12 +1039,12 @@ final class Runner(
 
   /** The session view a `given:` input string stands for. */
   private def inputView(input: String, utName: String): String = {
-    val refs = JinjaLite.findBareRefs(input)
-    val srcs = JinjaLite.findBareSources(input)
-    if (refs.nonEmpty) refResolver(refs.head)
-    else if (srcs.nonEmpty) sourceRelation(srcs.head, s"unit test $utName")
-    else throw new IllegalArgumentException(
-      s"unit test $utName: given input '$input' is neither ref() nor source()")
+    JinjaLite.scan(input, JinjaLite.Framing.Bare).headOption.map(_.target) match {
+      case Some(r: JinjaLite.RefCall) => refResolver(r)
+      case Some(sc: JinjaLite.SourceCall) => sourceRelation(sc, s"unit test $utName")
+      case None => throw new IllegalArgumentException(
+        s"unit test $utName: given input '$input' is neither ref() nor source()")
+    }
   }
 
   /** Build one fixture frame: provided values parse as strings and cast
@@ -1376,7 +1363,7 @@ final class Runner(
           // when present; the tested frame is then the OTHER model dep
           val modelDeps = t.dependsOn.nodes.filter(_.startsWith("model."))
           val toModel = t.config.get("to").toSeq
-            .flatMap(to => JinjaLite.findRefs(to.asStr).map(_.name))
+            .flatMap(to => JinjaLite.refs(to.asStr, JinjaLite.Framing.Bare).map(_.name))
             .flatMap(nm => modelDeps.find(d =>
               manifest.nodes.get(d).exists(_.name == nm)))
             .headOption

@@ -108,13 +108,9 @@ object Linker {
           (cs, child) =>
             val code = References.currentCode(pending ++ cs, child.filePath,
               p => readFile(down.projectName, p))
-            val updated =
-              if (child.language == "python")
-                References.updatePythonSourceToRef(code, src.sourceName, src.name,
-                  up.projectName, upModel.name)
-              else
-                References.updateSqlSourceToRef(code, src.sourceName, src.name,
-                  up.projectName, upModel.name)
+            val updated = References.updateSourceToRef(code,
+              graft.core.parse.JinjaLite.Framing.of(child.language),
+              src.sourceName, src.name, up.projectName, upModel.name)
             cs + FileChange(Operation.Update, child.filePath, Some(updated))
         }
         rewritten + ResourceChange(Operation.Remove, EntityType.Source, src.name,

@@ -2,71 +2,54 @@ package graft.mesh
 
 import graft.core.changes._
 import graft.core.model._
-import scala.util.matching.Regex
+import graft.core.parse.JinjaLite
+import graft.core.parse.JinjaLite.{CallTarget, Framing, RefCall, SourceCall}
+import graft.core.yaml.{YList, YMap, YStr}
 
-/** Code-rewrite passes (SURVEY §2.D) — regex "compiler passes" over model
-  * code, whitespace/quote tolerant like the reference
-  * (`utilities/references.py:58-171`).
+/** Code-rewrite passes (SURVEY §2.D) over model code and YAML ref
+  * strings (`utilities/references.py:58-171`). Every pass is a
+  * [[JinjaLite.rewrite]] in the text's framing, so it sees exactly the
+  * calls the loader and the renderer see.
   */
 object References {
 
-  private def q(name: String) = Regex.quote(name)
+  /** Replace each call `to` maps with the ref it maps to, printed in
+    * the call's own framing (`{{ }}`, bare in a tag or YAML, `dbt.`). */
+  private def retarget(code: String, framing: Framing)(
+      to: PartialFunction[CallTarget, RefCall]): String =
+    JinjaLite.rewrite(code, framing)(c => to.lift(c.target).map(JinjaLite.print(_, c.framing)))
 
-  /** D1: `{{ ref('m') }}` / `{{ ref('m', v=n) }}` →
-    * `{{ ref('proj', 'm'[, v=n]) }}`. */
-  def updateSqlRefs(code: String, model: String, project: String): String = {
-    val re = (s"""\\{\\{\\s*ref\\s*\\(\\s*(['"])${q(model)}\\1\\s*(,\\s*(?:v|version)\\s*=\\s*\\d+\\s*)?\\)\\s*\\}\\}""").r
-    re.replaceAllIn(code, m => {
-      val v = Option(m.group(2)).getOrElse("")
-      Regex.quoteReplacement(s"{{ ref('$project', '$model'$v) }}")
-    })
-  }
+  /** D1/D3/D5a: each project-local `ref('m'[, v=n])` → `ref('proj', 'm'[, v=n])`. */
+  def updateRefs(code: String, framing: Framing, model: String, project: String): String =
+    retarget(code, framing) {
+      case r @ RefCall(None, `model`, _) => r.copy(project = Some(project)) }
 
-  /** D2: `{{ source('src','tbl') }}` → `{{ ref('proj','model') }}`. */
+  /** D2/D4: `source('src', 'tbl')` → `ref('proj', 'model')`. */
+  def updateSourceToRef(code: String, framing: Framing, sourceName: String,
+      table: String, project: String, model: String): String =
+    retarget(code, framing) {
+      case SourceCall(`sourceName`, `table`) => RefCall(Some(project), model, None) }
+
+  def updateSqlRefs(code: String, model: String, project: String): String =
+    updateRefs(code, Framing.Sql, model, project)
+  def updatePythonRefs(code: String, model: String, project: String): String =
+    updateRefs(code, Framing.Python, model, project)
   def updateSqlSourceToRef(code: String, sourceName: String, table: String,
-      project: String, model: String): String = {
-    val re = (s"""\\{\\{\\s*source\\s*\\(\\s*(['"])${q(sourceName)}\\1\\s*,\\s*(['"])${q(table)}\\2\\s*\\)\\s*\\}\\}""").r
-    re.replaceAllIn(code, Regex.quoteReplacement(s"{{ ref('$project', '$model') }}"))
-  }
-
-  /** D3: `dbt.ref('m')` → `dbt.ref('proj', 'm')` (Python models). */
-  def updatePythonRefs(code: String, model: String, project: String): String = {
-    val re = (s"""dbt\\.ref\\s*\\(\\s*(['"])${q(model)}\\1\\s*\\)""").r
-    re.replaceAllIn(code, Regex.quoteReplacement(s"""dbt.ref("$project", "$model")"""))
-  }
-
-  /** D4: `dbt.source('s','t')` → `dbt.ref("proj","model")`. */
+      project: String, model: String): String =
+    updateSourceToRef(code, Framing.Sql, sourceName, table, project, model)
   def updatePythonSourceToRef(code: String, sourceName: String, table: String,
-      project: String, model: String): String = {
-    val re = (s"""dbt\\.source\\s*\\(\\s*(['"])${q(sourceName)}\\1\\s*,\\s*(['"])${q(table)}\\2\\s*\\)""").r
-    re.replaceAllIn(code, Regex.quoteReplacement(s"""dbt.ref("$project", "$model")"""))
-  }
-
-  /** D5a: exposure depends_on ref-string swap. YAML ref strings are BARE
-    * `ref('m')` (no `{{ }}`), and the rewrite emits the bare two-arg form
-    * (`update_yml_resource_references`, utilities/references.py:150-171). */
-  def updateRefString(refString: String, model: String, project: String): String = {
-    val re = (s"""ref\\s*\\(\\s*(['"])${q(model)}\\1\\s*(,\\s*(?:v|version)\\s*=\\s*\\d+\\s*)?\\)""").r
-    re.replaceAllIn(refString, m => {
-      val v = Option(m.group(2)).getOrElse("")
-      Regex.quoteReplacement(s"ref('$project', '$model'$v)")
-    })
-  }
+      project: String, model: String): String =
+    updateSourceToRef(code, Framing.Python, sourceName, table, project, model)
 
   /** D6: dispatch by language (`utilities/references.py:173-213`),
     * threading any pending FileChange for the same file (D7/D8 chaining,
     * `utilities/references.py:24-42`). */
   def generateReferenceUpdate(project: String, upstream: ModelNode,
       downstream: Resource, codeNow: String): FileChange = {
-    val updated = downstream match {
-      case m: ModelNode if m.language == "python" =>
-        updatePythonRefs(codeNow, upstream.name, project)
-      case _ => updateSqlRefs(codeNow, upstream.name, project)
-    }
-    FileChange(Operation.Update, pathOf(downstream), Some(updated))
+    val framing = Framing.of(downstream match { case m: ModelNode => m.language; case _ => "sql" })
+    FileChange(Operation.Update, downstream.filePath,
+      Some(updateRefs(codeNow, framing, upstream.name, project)))
   }
-
-  private def pathOf(r: Resource): String = r.filePath
 
   /** current text of a resource's code file: the latest pending change in
     * `pending` wins over `readFile` (compose-over-unwritten-state). */
@@ -89,23 +72,17 @@ object References {
           // REBUILD the list like update_yml_resource_references
           // (references.py:150-171): normalize every ref string, drop the
           // one matching the moved model, append the cross-project ref
-          val kept = child.refStrings.flatMap(s =>
-            graft.core.parse.JinjaLite.findBareRefs(s).headOption)
-            .filterNot(r => r.project.isEmpty && r.name == up.name && r.version.isEmpty)
-            .map { r =>
-              val proj = r.project.fold("")(p => s"'$p', ")
-              val v = r.version.fold("")(v => s", v=$v")
-              s"ref($proj'${r.name}'$v)"
-            }
-          val newRefs = kept :+ s"ref('$subProject', '${up.name}')"
+          val kept = child.refStrings.flatMap(JinjaLite.refs(_, Framing.Bare).headOption)
+            .filterNot(_ == RefCall(None, up.name, None))
+          val newRefs = (kept :+ RefCall(Some(subProject), up.name, None))
+            .map(JinjaLite.print(_, Framing.Bare))
           cs + ResourceChange(Operation.Update, EntityType.Exposure, child.name,
-            child.filePath, graft.core.yaml.YMap.of(
-              "depends_on" -> graft.core.yaml.YList(newRefs.map(graft.core.yaml.YStr(_)))))
+            child.filePath, YMap.of("depends_on" -> YList(newRefs.map(YStr(_)))))
         case (cs, child: SemanticModel) =>
           cs + ResourceChange(Operation.Update, EntityType.SemanticModel, child.name,
-            child.filePath, graft.core.yaml.YMap.of(
-              "model" -> graft.core.yaml.YStr(
-                updateRefString(child.modelRef, up.name, subProject))))
+            child.filePath, YMap.of("model" -> YStr(
+              // YAML ref strings are bare `ref('m')` and stay bare
+              updateRefs(child.modelRef, Framing.Bare, up.name, subProject))))
         case (cs, _) => cs
       }
     }
@@ -129,10 +106,8 @@ object References {
         val target = pathFor(m)
         val code0 = acc.latestFileChange(target).flatMap(_.data)
           .getOrElse(readFile(m.filePath))
-        val updated = ups.foldLeft(code0) { (c, u) =>
-          if (m.language == "python") updatePythonRefs(c, u.name, parentProject)
-          else updateSqlRefs(c, u.name, parentProject)
-        }
+        val updated = ups.foldLeft(code0)((c, u) =>
+          updateRefs(c, Framing.of(m.language), u.name, parentProject))
         acc + FileChange(Operation.Update, target, Some(updated))
       }
     }
@@ -148,13 +123,11 @@ object References {
     val text = readFile(macroNode.filePath)
     // operate on THIS macro's block (the file may hold several macros —
     // the reference rewrites resource.macro_sql, not the file)
-    val block = graft.core.parse.JinjaLite.findBlocks(text, "macro")
+    val block = JinjaLite.findBlocks(text, "macro")
       .find(_.name == macroNode.name).map(_.content).getOrElse(text)
-    graft.core.parse.JinjaLite.findRefs(block).headOption
+    JinjaLite.findRefs(block).headOption
       .filter(r => r.project.isEmpty && leftBehindModels.contains(r.name))
-      .map { r =>
-        Some(FileChange(Operation.Update, targetPath.getOrElse(macroNode.filePath),
-          Some(updateSqlRefs(block, r.name, parentProject))))
-      }.getOrElse(None)
+      .map(r => FileChange(Operation.Update, targetPath.getOrElse(macroNode.filePath),
+        Some(updateSqlRefs(block, r.name, parentProject))))
   }
 }

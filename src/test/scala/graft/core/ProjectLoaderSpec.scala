@@ -318,4 +318,37 @@ class ProjectLoaderSpec extends AnyFunSuite {
     // a list literal parses once, quote-aware
     assert(c.get("check_cols").contains(YList.of(YStr("a, b"), YStr("c"))))
   }
+
+  test("a ref bound in a {% set %} tag and a versioned Python ref are DAG edges") {
+    val root = writeProject(Map(
+      "dbt_project.yml" -> "name: tp\n",
+      "models/orders.sql" -> "select 1 as id",
+      "models/report.sql" ->
+        "{% set rel = ref('orders') %}\nselect * from {{ rel }}",
+      // the set-bound ref must not stop the loop's refs from being seen
+      "models/mixed.sql" ->
+        ("{% set rel = ref('orders') %}select * from {{ rel }}\n" +
+          "{% for t in ['report'] %}union all select * from {{ ref(t) }}{% endfor %}"),
+      "models/py_report.py" ->
+        "def model(dbt, session):\n    return dbt.ref(\"orders\", v=1)\n",
+      "models/_exposures.yml" ->
+        """version: 2
+          |exposures:
+          |  - name: dash
+          |    type: dashboard
+          |    depends_on:
+          |      - ref("orders")
+          |      - ref('report', v=2)
+          |      - ref('orders')
+          |""".stripMargin))
+    val (_, m) = ProjectLoader.load(root)
+    assert(m.parentMap("model.tp.report") == Set("model.tp.orders"))
+    assert(m.parentMap("model.tp.py_report") == Set("model.tp.orders"))
+    assert(m.parentMap("model.tp.mixed") == Set("model.tp.orders", "model.tp.report"))
+    assert(graft.core.graph.Selector.select(m, Seq("+report")) ==
+      Set("model.tp.orders", "model.tp.report"))
+    // resource deps are distinct, as dbt-core lists them
+    assert(m.exposures("exposure.tp.dash").dependsOn.nodes ==
+      Vector("model.tp.orders", "model.tp.report"))
+  }
 }

@@ -114,8 +114,34 @@ class ManifestJsonSpec extends AnyFunSuite {
       .nodes("model.p.m").config
     assert(c.get("on_schema_change").contains(YStr("fail")))
     assert(c.get("materialized").contains(YStr("incremental")))
-    // hook lists keep the default: dbt's entries are {sql, transaction}
-    assert(c.get("pre-hook").contains(YList(Vector.empty)))
+    // hooks are written as dbt's {sql, transaction} objects and read back as SQL
+    assert(c.get("pre-hook").contains(YList(Vector(YStr("select 1")))))
+  }
+
+  test("exposure refs round-trip with quotes of either kind, versions and repeats") {
+    val root = Files.createTempDirectory("graft_mjx")
+    Map(
+      "dbt_project.yml" -> "name: tp\n",
+      "models/orders.sql" -> "select 1 as id",
+      "models/report.sql" -> "select * from {{ ref('orders') }}",
+      "models/_exposures.yml" ->
+        """version: 2
+          |exposures:
+          |  - name: dash
+          |    type: dashboard
+          |    depends_on:
+          |      - ref("orders")
+          |      - ref('report', v=2)
+          |      - ref('orders')
+          |""".stripMargin
+    ).foreach { case (rel, text) =>
+      Files.createDirectories(root.resolve(rel).getParent)
+      Files.writeString(root.resolve(rel), text)
+    }
+    val (_, native) = ProjectLoader.load(root)
+    val e = ManifestJson.parse(ManifestJsonWriter.emit(native)).exposures("exposure.tp.dash")
+    assert(e.refStrings == Vector("ref('orders')", "ref('report', v=2)", "ref('orders')"))
+    assert(e.dependsOn.nodes == Vector("model.tp.orders", "model.tp.report"))
   }
 
   test("missing required fields on consumed resource types fail loudly") {

@@ -39,6 +39,15 @@ class ReferencesSpec extends AnyFunSuite {
       == """df = dbt.ref("p", "m")""")
   }
 
+  test("a {% set %}-bound SQL ref and a versioned Python ref are rewritten") {
+    assert(References.updateSqlRefs(
+      "{% set rel = ref('orders') %}\nselect * from {{ rel }}", "orders", "sub")
+      == "{% set rel = ref('sub', 'orders') %}\nselect * from {{ rel }}")
+    assert(References.updatePythonRefs(
+      "def model(dbt, session):\n    return dbt.ref(\"orders\", v=1)\n", "orders", "sub")
+      == "def model(dbt, session):\n    return dbt.ref(\"sub\", \"orders\", v=1)\n")
+  }
+
   test("currentCode threads pending changes (compose-over-unwritten)") {
     val pending = ChangeSet() +
       FileChange(Operation.Update, "models/a.sql", Some("v2")) +
