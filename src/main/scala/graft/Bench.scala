@@ -153,7 +153,11 @@ object Bench {
     // scheduler jitter on multi-stage sub-second plans is ±2× (observed
     // across idle-machine runs); the JVM caches only compiled code
     // between runs; no data or shuffle output is reused (each run
-    // re-executes the full physical plan).
+    // re-executes the full physical plan). The compiled-code cache holds
+    // only while a query's generated classes fit Spark's codegen cache:
+    // at its default 100 entries a query like q77 (82 classes, each
+    // compiled once per class loader) missed on every later run, so
+    // BenchConf.base sizes it to 1024.
     val repeat = Harness.repeat(3)
     def run(name: String, fn: (SparkSession, String) => DataFrame) =
       try Harness.timed(spark, sfDir, "bench", name, fn)

@@ -63,11 +63,28 @@ object BenchConf {
 
   /** The builder every graft session starts from: the harness mains and
     * the perfbench worker (through `builderOf`), the `graft` CLI and the
-    * test fixture. It registers [[graft.engine.LocalFs]] for `file:`
-    * paths. That has to happen in the session conf, before the first
-    * `file:` lookup: Hadoop caches one FileSystem per scheme JVM-wide. */
+    * test fixture. Both settings are JVM-wide, so they belong here and
+    * not in `bench`: the CLI and the tests must get them too.
+    *
+    *  - It registers [[graft.engine.LocalFs]] for `file:` paths. That
+    *    has to happen in the session conf, before the first `file:`
+    *    lookup: Hadoop caches one FileSystem per scheme JVM-wide.
+    *  - It sizes Spark's cache of compiled generated classes
+    *    (`spark.sql.codegen.cache.maxEntries`, default 100). The cache is
+    *    keyed by (context class loader, source). In local mode the
+    *    driver threads and the executor task threads have different
+    *    loaders, so each whole-stage class is compiled and cached twice.
+    *    Measured working sets: 216–223 compiles for one pass of the
+    *    perfbench ops-floor queries, 96 for one 48-model Runner run, 82
+    *    for q77 alone. At 100 entries the LRU missed on every entry of
+    *    every repeated pass and Janino ran again each time; 1024 holds
+    *    four times the largest of them. It is a static conf:
+    *    `CodeGenerator`'s static initializer reads it once, from
+    *    `SQLConf.get` at the JVM's first codegen, so it only takes effect
+    *    from the first builder of the JVM, which is this one. */
   def base(): SparkSession.Builder = SparkSession.builder()
     .config("spark.hadoop.fs.file.impl", classOf[graft.engine.LocalFs].getName)
+    .config("spark.sql.codegen.cache.maxEntries", "1024")
 
   /** A session builder for `profile` plus the overlay. */
   def builderOf(profile: Seq[(String, String)]): SparkSession.Builder = {

@@ -72,13 +72,15 @@ object ProjectLoader {
   /** A model's (or seed's) resolved config — the map dbt-core's Manifest
     * carries as `config`, and the ONLY place config precedence is
     * decided: the Runner, the Selector and the manifest writer read it
-    * as-is. dbt's rule: start from the patch YAML `config:`, lay the
-    * inline `config()` / `dbt.config()` kwargs over it; `pre-hook`,
-    * `post-hook` and `tags` append instead (patch first), with the
+    * as-is. dbt's rule: start from the `dbt_project.yml` tree entries
+    * (see [[treeConfig]]), lay the patch YAML `config:` over them, then
+    * the inline `config()` / `dbt.config()` kwargs; `pre-hook`,
+    * `post-hook` and `tags` append instead (tree first), with the
     * `pre_hook`/`post_hook` spellings folded onto the dash key. A string
     * holding a `['a', 'b']` literal becomes a YList, and an inline
     * `true`/`false` a YBool, so every reader sees YAML-shaped values. */
-  private def resolveConfig(patch: YMap, inline: Map[String, String]): YMap = {
+  private def resolveConfig(tree: Vector[(String, Y)], patch: YMap,
+      inline: Map[String, String]): YMap = {
     val inlineYs = inline.toVector.map { case (k, v) =>
       k -> (v.toLowerCase match {
         case "true" => YBool(true)
@@ -86,7 +88,7 @@ object ProjectLoader {
         case _ => YStr(v)
       })
     }
-    (patch.entries ++ inlineYs).foldLeft(YMap.empty) { case (acc, (k0, y)) =>
+    (tree ++ patch.entries ++ inlineYs).foldLeft(YMap.empty) { case (acc, (k0, y)) =>
       val k = k0 match {
         case "pre_hook" => "pre-hook"
         case "post_hook" => "post-hook"
@@ -99,6 +101,22 @@ object ProjectLoader {
       if (appendKeys(k)) acc.updated(k, YList(acc.get(k).toVector.flatMap(items) ++ items(v)))
       else acc.updated(k, v)
     }
+  }
+
+  /** The config entries the `dbt_project.yml` `models:` tree sets for a
+    * model of project `proj` in directory `dirs` (its directory under its
+    * model-path), outermost level first, so deeper paths win in
+    * [[resolveConfig]]. At each level, under the project's key, a `+key`
+    * is a config (whatever its value) and a key with a map value is a
+    * sub-directory. */
+  private def treeConfig(models: Option[Y], proj: String, dirs: Seq[String]): Vector[(String, Y)] = {
+    def level(node: YMap, rest: Seq[String]): Vector[(String, Y)] =
+      node.entries.collect { case (k, v) if k.startsWith("+") => k.drop(1) -> v } ++
+        rest.headOption.flatMap(node.get).collect {
+          case sub: YMap => level(sub, rest.tail)
+        }.getOrElse(Vector.empty)
+    models.collect { case m: YMap => m }.flatMap(_.get(proj))
+      .collect { case m: YMap => level(m, dirs) }.getOrElse(Vector.empty)
   }
 
   /** A list value's items; a scalar is a list of one. */
@@ -349,7 +367,7 @@ object ProjectLoader {
           materialized = "seed",
           patchPath = patch.map(_._1),
           relationName = Some(s"main.$baseSchema.$name"),
-          config = resolveConfig(patchConfig, Map.empty))
+          config = resolveConfig(Vector.empty, patchConfig, Map.empty))
       }.toMap
 
     // ---- model files
@@ -462,7 +480,9 @@ object ProjectLoader {
       val patch = modelPatches.get(name)
       val patchEntry = patch.map(_._2).getOrElse(YMap.empty)
       val patchConfig = patchEntry.get("config").collect { case m: YMap => m }.getOrElse(YMap.empty)
-      val config = resolveConfig(patchConfig,
+      val dirs = cfg.modelPaths.map(root.resolve).find(p.startsWith).toSeq
+        .flatMap(_.relativize(p.getParent).iterator.asScala.map(_.toString)).filter(_.nonEmpty)
+      val config = resolveConfig(treeConfig(cfg.raw.get("models"), proj, dirs), patchConfig,
         if (lang == "python") JinjaLite.findPythonConfig(code)
         else JinjaLite.findConfig(code))
       // a scalar config value; a list (e.g. a composite unique_key) joins

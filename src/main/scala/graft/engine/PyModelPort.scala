@@ -1,5 +1,7 @@
 package graft.engine
 
+import graft.core.parse.JinjaLite
+import graft.core.parse.JinjaLite.{CallTarget, Framing, RefCall, SourceCall}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -14,7 +16,8 @@ import org.apache.spark.sql.functions._
   * transform (pandas is single-node; the translation is what makes the
   * model survive 100 TB):
   *
-  *  - `x = dbt.ref("m")` / `dbt.source("s","t")`, `.df()` conversions
+  *  - `x = dbt.ref(..)` / `dbt.source(..)`, read by JinjaLite's call
+  *    grammar (so `dbt.ref("p", "m", v=1)` too), `.df()` conversions
   *  - `df.sort_values(by=..., ascending=..., inplace=True)`
   *  - `df["c"] = df.groupby(k)[c].shift(±n)`  → lag/lead window
   *  - `df["c"] = df.groupby(k)[c].cumsum()`   → running-sum window
@@ -42,9 +45,21 @@ object PyModelPort {
 
   private val q = """["']([^"']+)["']"""
 
+  /** `x = <call>` or `x = <call>.df()`, where `<call>` is one
+    * `dbt.ref(..)` / `dbt.source(..)` as [[JinjaLite.scan]] reads it. */
+  private object CallStmt {
+    private val assignRe = """(\w+)\s*=\s*(.+)""".r
+    def unapply(line: String): Option[(String, CallTarget)] = line match {
+      case assignRe(v, rhs) => JinjaLite.scan(rhs, Framing.Python) match {
+        case Vector(c) if c.start == 0 && Set("", ".df()")(rhs.substring(c.end)) =>
+          Some(v -> c.target)
+        case _ => None
+      }
+      case _ => None
+    }
+  }
+
   // statement regexes (anchored, whitespace-tolerant)
-  private val refRe = s"""(\\w+)\\s*=\\s*dbt\\.ref\\(\\s*$q\\s*\\)(?:\\.df\\(\\))?""".r
-  private val sourceRe = s"""(\\w+)\\s*=\\s*dbt\\.source\\(\\s*$q\\s*,\\s*$q\\s*\\)(?:\\.df\\(\\))?""".r
   private val toDfRe = """(\w+)\s*=\s*(\w+)\.(?:df|to_df)\(\)""".r
   private val sortRe =
     """(?:(\w+)\s*=\s*)?(\w+)\.sort_values\(\s*by\s*=\s*([^,)]+|\[[^\]]*\])\s*(?:,\s*ascending\s*=\s*(True|False))?\s*(?:,\s*inplace\s*=\s*True)?\s*\)""".r
@@ -115,8 +130,8 @@ object PyModelPort {
 
   /** Interpret the `def model(dbt, session):` body of `code`. */
   def run(code: String,
-      resolveRef: String => DataFrame,
-      resolveSource: (String, String) => DataFrame): DataFrame = {
+      resolveRef: RefCall => DataFrame,
+      resolveSource: SourceCall => DataFrame): DataFrame = {
     val lines = code.split("\n").toVector
     val defIdx = lines.indexWhere(_.matches("""\s*def\s+model\s*\(.*\)\s*:\s*"""))
     require(defIdx >= 0, "python model: no `def model(dbt, session):` found")
@@ -156,8 +171,8 @@ object PyModelPort {
     body.foreach { raw =>
       val line = stripComment(raw).trim
       if (line.nonEmpty) line match {
-        case refRe(v, m) => env(v) = resolveRef(m)
-        case sourceRe(v, s, t) => env(v) = resolveSource(s, t)
+        case CallStmt(v, r: RefCall) => env(v) = resolveRef(r)
+        case CallStmt(v, sc: SourceCall) => env(v) = resolveSource(sc)
         case toDfRe(v, src) => env(v) = env(src)
         case sortRe(out, v, by, asc) =>
           val cols = strList(by).map(c =>

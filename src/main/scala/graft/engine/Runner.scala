@@ -187,8 +187,9 @@ final class Runner(
     *    model executes, post-hooks after it materializes and its view is
     *    registered; both render through the model's full Jinja context
     *    ({{ this }} = the model's relation) and a throwing hook fails
-    *    the node exactly like a throwing model (dbt's behavior). Patch
-    *    hooks run before inline hooks (dbt accumulates outer→inner).
+    *    the node exactly like a throwing model (dbt's behavior).
+    *    `dbt_project.yml` `models:` tree hooks run first, then patch
+    *    hooks, then inline hooks (dbt accumulates outer→inner).
     *    Ephemeral models never run hooks (dbt: nothing materializes).
     *  - project-level `on-run-start` / `on-run-end` (dbt_project.yml;
     *    string or list): start hooks run before any node (a failure
@@ -202,9 +203,7 @@ final class Runner(
     *
     * Hooks execute eagerly (`.collect()`): DDL/DML runs on `spark.sql`
     * anyway, and a SELECT-shaped hook (the fixture's) must actually
-    * execute, not lazily construct a frame. `dbt_project.yml`'s nested
-    * `models:` config tree is not part of graft's config cascade, so
-    * `+pre-hook` declared there is (documented) out of scope. */
+    * execute, not lazily construct a frame. */
   private def runHookSql(rendered: String): Unit = {
     spark.sql(rendered).collect()
     onHookRun(rendered)
@@ -481,25 +480,24 @@ final class Runner(
   }
 
   /** A Python model's body: the pandas-idiom interpreter resolves
-    * dbt.ref/dbt.source to the same session views SQL models use, so
-    * mixed-language DAGs chain. Access enforcement mirrors the SQL path:
-    * SQL models are checked by the analysis rule over the rendered plan;
-    * python refs resolve here, so each target is checked at resolution
-    * time — a private cross-group ref fails identically in both
-    * languages. */
+    * dbt.ref/dbt.source through the same [[refResolver]] and
+    * [[sourceRelation]] as SQL models (defer targets, cross-project
+    * views), so mixed-language DAGs chain. Access enforcement mirrors the
+    * SQL path: SQL models are checked by the analysis rule over the
+    * rendered plan; python refs resolve here, so each resolved view is
+    * checked at resolution time — a private cross-group ref fails
+    * identically in both languages. */
   private def runPython(m: ModelNode): DataFrame =
     PyModelPort.run(
       m.rawCode,
-      resolveRef = name => deferTargets.get(name) match {
-        case Some(rel) => spark.table(rel) // deferred to the state relation
-        case None =>
-          if (enforceAccess)
-            AccessControl.forSession(spark).checkRelation(viewName(name),
-              AccessControl.Context(m.packageName, m.group))
-          spark.table(viewName(name))
+      resolveRef = rc => {
+        val rel = refResolver(rc)
+        if (enforceAccess)
+          AccessControl.forSession(spark).checkRelation(rel,
+            AccessControl.Context(m.packageName, m.group))
+        spark.table(rel)
       },
-      resolveSource = (sn, tbl) =>
-        spark.table(sourceRelation(JinjaLite.SourceCall(sn, tbl), m.name)))
+      resolveSource = sc => spark.table(sourceRelation(sc, m.name)))
 
   private def execSql(m: ModelNode, isIncremental: Boolean): DataFrame = {
     val sql = renderSql(m, isIncremental)

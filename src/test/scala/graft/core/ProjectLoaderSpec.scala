@@ -319,6 +319,56 @@ class ProjectLoaderSpec extends AnyFunSuite {
     assert(c.get("check_cols").contains(YList.of(YStr("a, b"), YStr("c"))))
   }
 
+  test("the dbt_project.yml models: tree is the lowest config layer, deeper paths win") {
+    val root = writeProject(Map(
+      "dbt_project.yml" ->
+        """name: tp
+          |models:
+          |  tp:
+          |    +materialized: table
+          |    +tags: [t]
+          |    +pre-hook: "select 'tree'"
+          |    staging:
+          |      +materialized: view
+          |      +tags: [s]
+          |  other_pkg:
+          |    +materialized: incremental
+          |""".stripMargin,
+      "models/top.sql" -> "select 1 as id",
+      "models/staging/stg_a.sql" -> "select 1 as id",
+      "models/staging/deep/stg_b.sql" -> "select 1 as id",
+      "models/staging/stg_patched.sql" -> "select 1 as id",
+      "models/staging/stg_inline.sql" ->
+        "{{ config(materialized='ephemeral', tags=['i'], pre_hook=\"select 'i'\") }}\nselect 1 as id",
+      "models/staging/_props.yml" ->
+        """version: 2
+          |models:
+          |  - name: stg_patched
+          |    config:
+          |      materialized: table
+          |      tags: [p]
+          |""".stripMargin))
+    val (_, m) = ProjectLoader.load(root)
+    def node(n: String) = m.nodes(s"model.tp.$n")
+    assert(node("top").materialized == "table")
+    assert(node("top").tags == Vector("t"))
+    // the staging level lies over the project level; a deeper directory
+    // with no level of its own inherits staging's
+    for (n <- Seq("stg_a", "stg_b")) {
+      assert(node(n).materialized == "view", n)
+      assert(node(n).tags == Vector("t", "s"), n)
+    }
+    // the patch overrides the tree, and the inline config the patch;
+    // hooks and tags append, tree first
+    assert(node("stg_patched").materialized == "table")
+    assert(node("stg_patched").tags == Vector("t", "s", "p"))
+    assert(node("stg_inline").materialized == "ephemeral")
+    assert(node("stg_inline").tags == Vector("t", "s", "i"))
+    assert(node("stg_inline").config.get("pre-hook").contains(
+      YList.of(YStr("select 'tree'"), YStr("select 'i'"))))
+    assert(!node("top").config.contains("other_pkg"))
+  }
+
   test("a ref bound in a {% set %} tag and a versioned Python ref are DAG edges") {
     val root = writeProject(Map(
       "dbt_project.yml" -> "name: tp\n",

@@ -1,6 +1,7 @@
 package graft.engine
 
 import graft.SparkFixture
+import graft.core.parse.JinjaLite.{RefCall, SourceCall}
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
 
@@ -37,8 +38,8 @@ class PyModelPortSpec extends AnyFunSuite with SparkFixture {
       (1L, "2024-01-01"), (1L, "2024-01-05"), (1L, "2024-01-09"),
       (2L, "2024-02-01")).toDF("customer_id", "ordered_at")
     val out = PyModelPort.run(code,
-      resolveRef = { n => assert(n == "stg_orders"); stg },
-      resolveSource = (_, _) => fail("no sources in this fixture"))
+      resolveRef = { r => assert(r.name == "stg_orders"); stg },
+      resolveSource = _ => fail("no sources in this fixture"))
       .orderBy("customer_id", "ordered_at").collect()
       .map(r => (r.getLong(0), r.getString(1),
         Option(r.getString(2)), Option(r.getString(3))))
@@ -74,8 +75,8 @@ class PyModelPortSpec extends AnyFunSuite with SparkFixture {
     val customers = Seq((1L, "emea"), (2L, "apac"))
       .toDF("customer_id", "region") // customer 3 missing → region unknown
     val out = PyModelPort.run(code,
-      resolveRef = { n => assert(n == "orders"); orders },
-      resolveSource = { (sn, t) => assert((sn, t) == ("raw", "customers")); customers })
+      resolveRef = { r => assert(r.name == "orders"); orders },
+      resolveSource = { sc => assert(sc == SourceCall("raw", "customers")); customers })
     assert(out.columns.toSeq ==
       Seq("customer_id", "order_id", "amount", "net_amount", "share", "region"))
     val rows = out.orderBy("order_id").collect()
@@ -107,8 +108,8 @@ class PyModelPortSpec extends AnyFunSuite with SparkFixture {
     val feb = Seq((2L, 50, "d3"), (3L, 1, "d4"))
       .toDF("customer_id", "amount", "day")
     val out = PyModelPort.run(code,
-      resolveRef = { n => if (n == "jan") jan else feb },
-      resolveSource = (_, _) => fail("no sources"))
+      resolveRef = { r => if (r.name == "jan") jan else feb },
+      resolveSource = _ => fail("no sources"))
     assert(out.columns.toSeq == Seq("customer_id", "total", "n"))
     val rows = out.orderBy(org.apache.spark.sql.functions.col("total").desc)
       .collect().map(r => (r.getLong(0), r.getDouble(1), r.getLong(2)))
@@ -125,7 +126,7 @@ class PyModelPortSpec extends AnyFunSuite with SparkFixture {
         |    return df
         |""".stripMargin
     val m = Seq(1).toDF("id")
-    val out = PyModelPort.run(code, _ => m, (_, _) => m)
+    val out = PyModelPort.run(code, _ => m, _ => m)
     assert(out.collect().map(_.getString(1)).toSeq == Seq("#promo"))
   }
 
@@ -140,7 +141,7 @@ class PyModelPortSpec extends AnyFunSuite with SparkFixture {
         |    return df
         |""".stripMargin
     val m = Seq((1L, 1, 10.0), (1L, 2, 5.0), (2L, 1, 3.0)).toDF("k", "ord", "v")
-    val out = PyModelPort.run(code, _ => m, (_, _) => fail("no sources"))
+    val out = PyModelPort.run(code, _ => m, _ => fail("no sources"))
       .orderBy("k", "ord").collect().map(r => (r.getLong(0), r.getDouble(3)))
     assert(out.toSeq == Seq((1L, 10.0), (1L, 15.0), (2L, 3.0)))
   }
@@ -160,7 +161,7 @@ class PyModelPortSpec extends AnyFunSuite with SparkFixture {
     val b = Seq((1, 10), (1, 20)).toDF("k", "ts")
     // b has no `other` column: if a's sort keys leaked into b's window
     // this would throw; the fallback orders by the shifted column
-    val out = PyModelPort.run(code, n => if (n == "a") a else b, (_, _) => a)
+    val out = PyModelPort.run(code, r => if (r.name == "a") a else b, _ => a)
       .orderBy("ts").collect().map(r => (r.getInt(1), Option(r.get(2))))
     assert(out.toSeq == Seq((10, None), (20, Some(10))))
   }
@@ -177,7 +178,7 @@ class PyModelPortSpec extends AnyFunSuite with SparkFixture {
         |""".stripMargin
     val m = Seq((1, 10, "a"), (1, 30, "c"), (1, 20, "b"), (2, 5, "z"))
       .toDF("user", "ts", "v")
-    val out = PyModelPort.run(code, _ => m, (_, _) => m)
+    val out = PyModelPort.run(code, _ => m, _ => m)
       .orderBy("user").collect().map(r => (r.getInt(0), r.getString(2)))
     // latest ts per user — deterministic, not an arbitrary survivor
     assert(out.toSeq == Seq((1, "c"), (2, "z")))
@@ -194,7 +195,7 @@ class PyModelPortSpec extends AnyFunSuite with SparkFixture {
     import s.implicits._
     val m = Seq((1, 2, 3)).toDF("a", "b", "c")
     val e = intercept[UnsupportedOperationException](
-      PyModelPort.run(code, _ => m, (_, _) => m))
+      PyModelPort.run(code, _ => m, _ => m))
     assert(e.getMessage.contains("pivot_table"))
   }
 
@@ -333,6 +334,49 @@ class PyModelPortSpec extends AnyFunSuite with SparkFixture {
       (2, "2024-02-01", None)))
   }
 
+  test("dbt.ref statements read every form of the shared call grammar") {
+    val s = spark
+    import s.implicits._
+    val m = Seq(1).toDF("id")
+    val seen = scala.collection.mutable.Buffer.empty[RefCall]
+    PyModelPort.run(
+      """def model(dbt, session):
+        |    a = dbt.ref("orders", v=1)
+        |    b = dbt.ref('up', 'orders').df()
+        |    c = dbt . ref( "orders" , version = 2 )
+        |    return a
+        |""".stripMargin,
+      r => { seen += r; m }, _ => fail("no sources"))
+    assert(seen.toSeq == Seq(RefCall(None, "orders", Some(1)),
+      RefCall(Some("up"), "orders", None), RefCall(None, "orders", Some(2))))
+  }
+
+  test("a Runner resolves python refs like SQL ones: versioned and cross-project") {
+    val s = spark
+    import s.implicits._
+    val root = Files.createTempDirectory("graft_py_refs")
+    def write(rel: String, text: String): Unit = {
+      val p = root.resolve(rel)
+      Files.createDirectories(p.getParent)
+      Files.writeString(p, text)
+    }
+    // the upstream project's published view, as split's D3 rewrite refs it
+    Seq(7).toDF("id").createOrReplaceTempView("up__orders")
+    write("dbt_project.yml", "name: down\n")
+    write("models/base.sql", "select 1 as id")
+    write("models/rep.py",
+      """def model(dbt, session):
+        |    up = dbt.ref("up", "orders")
+        |    mine = dbt.ref("base", v=1).df()
+        |    df = pd.concat([up, mine])
+        |    return df
+        |""".stripMargin)
+    val (cfg, man) = graft.core.parse.ProjectLoader.load(root)
+    val out = new Runner(spark, man, cfg, Files.createTempDirectory("graft_py_wh"),
+      projectRoot = Some(root)).run()
+    assert(out("model.down.rep").as[Int].collect().sorted.toSeq == Seq(1, 7))
+  }
+
   test("pivot_table lowers to one-shuffle groupBy().pivot(); head to limit") {
     val s = spark
     import s.implicits._
@@ -348,8 +392,8 @@ class PyModelPortSpec extends AnyFunSuite with SparkFixture {
       ("east", "q1", 10L), ("east", "q1", 5L), ("east", "q2", 7L),
       ("west", "q2", 3L), ("north", "q1", 1L)).toDF("region", "quarter", "amount")
     val out = PyModelPort.run(code,
-      resolveRef = { n => assert(n == "sales"); sales },
-      resolveSource = (_, _) => fail("no sources"))
+      resolveRef = { r => assert(r.name == "sales"); sales },
+      resolveSource = _ => fail("no sources"))
     assert(out.columns.toSeq == Seq("region", "q1", "q2"))
     val rows = out.collect().map(r =>
       (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
@@ -379,8 +423,8 @@ class PyModelPortSpec extends AnyFunSuite with SparkFixture {
       .toDF("customer_id", "amount", "floor")
     val tiers = Seq((1L, "gold"), (2L, "silver")).toDF("customer_id", "tier")
     val out = PyModelPort.run(code,
-      resolveRef = { n => if (n == "orders") orders else tiers },
-      resolveSource = (_, _) => fail("no sources"))
+      resolveRef = { r => if (r.name == "orders") orders else tiers },
+      resolveSource = _ => fail("no sources"))
       .orderBy("customer_id", "amount").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getString(3), r.getLong(4),
         Option(r.getString(5)))).toSeq
@@ -408,8 +452,8 @@ class PyModelPortSpec extends AnyFunSuite with SparkFixture {
     val tiers = Seq((1L, 5L)).toDF("customer_id", "amount")
     val e = intercept[UnsupportedOperationException](
       PyModelPort.run(code,
-        resolveRef = { n => if (n == "orders") orders else tiers },
-        resolveSource = (_, _) => fail("no sources")))
+        resolveRef = { r => if (r.name == "orders") orders else tiers },
+        resolveSource = _ => fail("no sources")))
     assert(e.getMessage.contains("references frame 'other'"), e.getMessage)
   }
 }
