@@ -2,8 +2,8 @@ package graft.cli
 
 import graft.core.changes.{ChangeSet, ChangeSetProcessor}
 import graft.core.graph.Selector
-import graft.core.model.Owner
-import graft.core.parse.ProjectLoader
+import graft.core.model.{ModelNode, Owner}
+import graft.core.parse.{ManifestJson, ProjectLoader, RunResultsJson}
 import graft.engine.Runner
 import graft.mesh._
 import org.apache.spark.sql.SparkSession
@@ -12,22 +12,37 @@ import java.nio.file.{Files, Path, Paths}
 /** CLI mirroring the reference's command surface (`main.py`):
   *
   * {{{
-  * graft run            [--select S]* [--project-dir P] [--full-refresh] [--threads N]
-  * graft test           [--project-dir P]      (generic tests as violation queries)
-  * graft split NAME      --select S [--target-dir D] [--dry-run]
+  * graft run           [--select S]*             (execute the DAG)
+  * graft build         [--select S]*             (run + data and unit tests)
+  * graft test          [--select S]* [--store-failures]
+  * graft retry         [--state D]               (rerun what run_results.json
+  *                                                left in error/fail/skipped)
+  * graft seed          [--select S]*             (only the seeds)
+  * graft snapshot      [--select S]*             (only the snapshots)
+  * graft compile       [--select S]*             (rendered SQL, nothing runs)
+  * graft show           --select S [--limit N]   (preview rows, nothing kept)
+  * graft run-operation MACRO [--args Y]
+  * graft source freshness
+  * graft ls|list       [--select S]*             (matching unique_ids)
+  * graft clone          --state D [--select S]*
+  * graft docs generate [--no-compile]            (manifest.json + catalog.json)
+  * graft split NAME      --select S [--target-dir D]
   * graft create-group G  --select S [--owner-name N] [--group-yml-path F]
   * graft group G         --select S [--owner-name N]   (create-group + contracts)
-  * graft contract        --select S                    (contracts only)
+  * graft contract|add-contract --select S [--public-only]
   * graft version      MODEL|--select S [--increment|--latest] [--defined-in F]
   * graft add-version  MODEL|--select S [--defined-in F]
   * graft bump-version MODEL|--select S [--increment|--latest] [--defined-in F]
   *                    (default latest_version behavior: prerelease)
   * graft connect         --project-paths P1 P2 | --projects-dir D
-  *                       [--exclude-projects N]* [--dry-run]
+  *                       [--exclude-projects N]*
   * }}}
   *
   * Every selecting command also accepts `--selector NAME` (named selector
-  * from `selectors.yml`) and `--exclude`. Global flags mirror the
+  * from `selectors.yml`), `--exclude` and `--state D` (a dbt-core
+  * artifact directory, for `state:` and `result:` methods). Every command
+  * that executes models takes dbt's `--threads N`, `--full-refresh`,
+  * `--vars '{k: v}'` and `--defer --state D`. Global flags mirror the
   * reference group (`main.py:78-90`): `--version` prints the version and
   * exits, `--debug` raises log verbosity, `--dry-run` plans without
   * editing. `--project-path` (reference spelling, `cli.py:8`) and
@@ -41,8 +56,9 @@ import java.nio.file.{Files, Path, Paths}
   * it against the files (so it fails on the same step a real run would)
   * without editing them (the reference's plan/execute split,
   * `main.py:99-110`).
-  * Commands that need physical schemas (group/contract) run the project
-  * on a local SparkSession first.
+  * Commands that need physical schemas (group/contract/docs) build the
+  * project on a local SparkSession first (`materialize`); commands that
+  * execute models share one run-and-report path (`execute`).
   */
 object Main {
 
@@ -127,6 +143,15 @@ object Main {
     // temp dir
     val readCatalog = Main.readCatalogFrom(
       args.switches("read-catalog"), sys.env)
+    // integer flags: a value that is not an integer is a usage error,
+    // reported in one line that names the flag (exit 2, like click)
+    val Seq(threads, limit) = Seq("threads" -> 1, "limit" -> 5).map {
+      case (flag, default) => args.flags(flag).headOption.fold(default)(v =>
+        v.toIntOption.getOrElse {
+          Console.err.println(s"graft: --$flag expects an integer, got '$v'")
+          return 2
+        })
+    }
     def warehouse(): Path =
       if (readCatalog) Files.createDirectories(root.resolve(".graft").resolve("warehouse"))
       else Files.createTempDirectory("graft_wh")
@@ -134,33 +159,33 @@ object Main {
     def apply(cs: ChangeSet, at: Path = root): Unit =
       new ChangeSetProcessor(at, dryRun = dryRun, log = println).process(Seq(cs))
     def readFile(p: String): String = Files.readString(root.resolve(p))
-    // --state <path>: a dbt-core manifest.json, or a directory holding one
-    // (dbt's --state convention)
-    def stateManifest: Option[Path] = args.flags("state").headOption.map { p =>
-      val path = Paths.get(p)
-      if (Files.isDirectory(path)) path.resolve("manifest.json") else path
-    }
+    // --state <path>: a directory of dbt artifacts, or one manifest file
+    // whose directory holds the rest (dbt's --state convention)
+    val statePath = args.flags("state").headOption.map(Paths.get(_))
+    def stateDir(p: Path): Path =
+      if (Files.isDirectory(p)) p else Option(p.getParent).getOrElse(Paths.get(""))
+    def stateManifest: Option[Path] = statePath.map(p =>
+      if (Files.isDirectory(p)) p.resolve("manifest.json") else p)
     // an inline-YAML map flag (`--vars '{key: value}'`, `--args`)
     def yamlMapFlag(flag: String): Map[String, String] =
       args.flags(flag).headOption.map(graft.core.yaml.Yaml.parseMap(_).entries
         .map { case (k, v) => k -> v.asStr }.toMap).getOrElse(Map.empty)
+    // the project under --project-dir, loaded on first use (connect
+    // loads its own projects)
+    lazy val (cfg, m) = ProjectLoader.load(root)
     // selection = --select/--exclude grammar ∪ --selector (named selector
     // from selectors.yml, like the reference's pass-through to dbt ls)
-    def selection(m: graft.core.model.Manifest): Set[String] = {
+    def selection: Set[String] = {
       // --state: comparison manifest for state:modified/state:new, loaded
       // through the artifact-interop front end. A --state dir may carry
       // only run_results.json (the retry flow); state:modified then fails
       // loudly in the selector rather than here with a bare
       // NoSuchFileException
       val state = stateManifest.filter(Files.isRegularFile(_))
-        .map(graft.core.parse.ManifestJson.load)
+        .map(ManifestJson.load)
       // run_results.json rides the same --state directory (dbt's retry
       // convention); absent file → None, and `result:` then fails loudly
-      val results = args.flags("state").headOption.flatMap { p =>
-        val path = Paths.get(p)
-        val dir = if (Files.isDirectory(path)) path else path.getParent
-        Option(dir).flatMap(graft.core.parse.RunResultsJson.loadIfPresent)
-      }
+      val results = statePath.flatMap(p => RunResultsJson.loadIfPresent(stateDir(p)))
       val bySelect =
         if (args.flags("select").nonEmpty)
           // --exclude is applied inside the select grammar here
@@ -193,12 +218,18 @@ object Main {
     def selectionActive: Boolean =
       args.flags("select").nonEmpty || args.flags("selector").nonEmpty ||
         args.flags("exclude").nonEmpty
-    // shared test-result reporting for test/build/retry (pass/fail by
-    // violations; warn = advisory severity/warn_if threshold, never
-    // affects the exit code; skipped = model not built this invocation;
-    // error = the test itself threw)
+    // a selected data or unit test pulls in the models it reads (dbt
+    // builds what a test needs; otherwise a test-only selection
+    // materializes nothing and the test errors on a missing relation)
+    def withTestParents(sel: Set[String]): Set[String] = sel ++
+      (m.tests.collect { case (tid, t) if sel(tid) => t.dependsOn.nodes } ++
+        m.unitTests.collect { case (uid, ut) if sel(uid) => ut.dependsOn.nodes })
+        .flatten.filter(_.startsWith("model."))
+    // test-result report (pass/fail by violations; warn = advisory
+    // severity/warn_if threshold, never affects the exit code; skipped =
+    // model not built this invocation; error = the test itself threw)
     def printTestResults(results: Map[String, (String, Long)],
-        ran: Option[Int] = None): Unit = {
+        ran: Option[Int]): Unit = {
       results.toSeq.sortBy(_._1).foreach { case (tid, (st, v)) =>
         println(st match {
           case "pass" => s"PASS $tid"
@@ -232,53 +263,109 @@ object Main {
       s.sparkContext.setLogLevel(logLevel)
       s
     }
+    // dbt's --defer: refs outside the selection serve from the state
+    // manifest's relations (requires --state, like state: selectors)
+    lazy val deferTo =
+      if (!args.switches("defer")) None
+      else Some(ManifestJson.load(stateManifest.getOrElse(
+        throw new IllegalArgumentException("--defer requires --state"))))
+    // the one Runner factory: every Runner of this invocation carries its
+    // flags (--full-refresh, --vars, --defer); clone passes its own
+    // warehouse
+    def runner(enforceAccess: Boolean = true, wh: Path = warehouse()): Runner =
+      new Runner(spark(), m, cfg, wh, enforceAccess = enforceAccess,
+        projectRoot = Some(root), readCatalog = readCatalog,
+        fullRefresh = args.switches("full-refresh"),
+        varOverrides = yamlMapFlag("vars"), defer = deferTo)
+    // group/contract/docs read physical schemas: build the whole project
+    // fail-fast with access checks off; returns model name → its view
+    def materialize(): String => String = {
+      val r = runner(enforceAccess = false)
+      r.run()
+      r.viewName
+    }
+
+    // The one path for the commands that execute models (run, seed,
+    // snapshot, test, build, retry). It runs `sel` (None = the whole DAG)
+    // dbt-style: a failing model records `error`, its descendants
+    // `skipped`, and independent branches keep going. Then it prints the
+    // statuses, runs the in-scope data and unit tests, prints one report,
+    // writes target/run_results.json over `prior` (dbt writes it after
+    // every invocation: it is what `graft retry` and the `result:`
+    // selector methods read), and returns 1 iff a model errored or a
+    // test failed or errored.
+    //  - `tests`: None = no test phase; Some(scope) = the tests attached
+    //    to a node in `scope` or selected themselves (None = all tests).
+    //  - `quiet` (test): the DAG builds only so the tests' relations
+    //    exist; no `ran` lines, and only failed models reach the artifact.
+    //  - `build`: dbt 1.8 build. A model's unit tests run BEFORE it
+    //    materializes, and a failure skips it (its descendants skip
+    //    through the parent cascade, nothing bad reaches the warehouse);
+    //    the report counts the models run.
+    //  - `reuseHealthy` (retry): see `Runner.runWithStatus`.
+    def execute(sel: Option[Set[String]],
+        tests: Option[Option[Set[String]]] = None, quiet: Boolean = false,
+        build: Boolean = false, reuseHealthy: Set[String] = Set.empty,
+        prior: Map[String, String] = Map.empty): Int = {
+      val r = runner()
+      val unitInScope: String => Boolean = uid => tests.exists(_.forall(s =>
+        s(uid) || m.unitTests(uid).dependsOn.nodes.exists(s)))
+      val gated = scala.collection.concurrent.TrieMap.empty[String, (String, String)]
+      def unitGate(node: ModelNode): Option[String] = {
+        val res = r.runUnitTests(Some(m.unitTests.collect {
+          case (uid, ut) if ut.model == node.name && unitInScope(uid) => uid }.toSet))
+        gated ++= res
+        val bad = res.collect { case (uid, ("fail" | "error", _)) => uid }
+        if (bad.isEmpty) None
+        else Some(s"unit test(s) failed: ${bad.toSeq.sorted.mkString(", ")}")
+      }
+      val (ran, status) = r.runWithStatus(sel, parallelism = threads,
+        gate = if (build) unitGate else _ => None, reuseHealthy = reuseHealthy)
+      if (!quiet) {
+        ran.keys.toSeq.sorted.foreach(id => println(s"ran $id"))
+        status.toSeq.sorted.collect { case (id, st) if st != "success" =>
+          println(s"$st $id") }
+      }
+      val data = tests.fold(Map.empty[String, (String, Long)])(scope =>
+        r.runTestsDetailed(scope, status,
+          storeFailures = args.switches("store-failures")))
+      // build: an in-scope unit test whose model never reached the gate
+      // (a parent failed) records skipped; one whose model was not part
+      // of this run is left out, like dbt
+      val units = gated.toMap ++ r.runUnitTests(Some(m.unitTests.keySet.filter(uid =>
+        unitInScope(uid) && !gated.contains(uid) &&
+          (!build || m.unitTests(uid).dependsOn.nodes.exists(status.contains)))),
+        status)
+      if (tests.nonEmpty) {
+        printTestResults(data ++ units.map { case (uid, (st, _)) => uid -> (st, -1L) },
+          ran = Option.when(build)(ran.size))
+        units.toSeq.sorted.collect { case (uid, ("fail" | "error", d)) =>
+          println(s"  $uid: $d") }
+      }
+      val outcomes = (if (quiet) status.filter(_._2 != "success") else status) ++
+        data.map { case (tid, (st, _)) => tid -> st } ++
+        units.map { case (uid, (st, _)) => uid -> st }
+      RunResultsJson.write(root.resolve("target").resolve("run_results.json"),
+        (prior ++ outcomes).toSeq.sorted)
+      if (outcomes.values.exists(st => st == "error" || st == "fail")) 1 else 0
+    }
 
     command match {
       case "run" =>
-        val (cfg, m) = ProjectLoader.load(root)
-        val sel = if (!selectionActive) None else Some(selection(m))
         // dbt's --threads: up to N models run at once on the shared
         // session, each starting as soon as its parents settle
-        val threads = args.flags("threads").headOption.map(_.toInt).getOrElse(1)
-        // dbt's --defer: refs outside the selection serve from the state
-        // manifest's relations (requires --state, like state: selectors)
-        val deferM = if (args.switches("defer"))
-          Some(graft.core.parse.ManifestJson.load(stateManifest.getOrElse(
-            throw new IllegalArgumentException("--defer requires --state"))))
-        else None
-        // dbt's --vars '{key: value}' — an inline YAML map overriding
-        // dbt_project.yml vars for this invocation
-        val varOv = yamlMapFlag("vars")
-        val (out, status) = new Runner(spark(), m, cfg,
-          warehouse(), projectRoot = Some(root),
-          readCatalog = readCatalog,
-          fullRefresh = args.switches("full-refresh"),
-          varOverrides = varOv,
-          defer = deferM).runWithStatus(sel, parallelism = threads)
-        out.keys.toSeq.sorted.foreach(id => println(s"ran $id"))
-        status.toSeq.sorted.collect { case (id, st) if st != "success" =>
-          println(s"$st $id") }
-        // dbt writes run_results.json after every invocation — it is the
-        // artifact `graft retry` (default --state ./target) and the
-        // result: selector methods read, so failures become re-runnable
-        graft.core.parse.RunResultsJson.write(
-          root.resolve("target").resolve("run_results.json"),
-          status.toSeq.sorted)
-        if (status.values.exists(_ == "error")) return 1
+        return execute(if (!selectionActive) None else Some(selection))
 
       case "split" =>
         val name = args.positional.head
-        val (cfg, m) = ProjectLoader.load(root)
-        val selected = selection(m)
         // --create-path is the reference spelling (cli.py:41-46)
         val target = (args.flags("create-path") ++ args.flags("target-dir"))
           .headOption.getOrElse(s"${name}_proj")
-        apply(SubprojectCreator.initialize(m, cfg, name, selected, target, readFile))
+        apply(SubprojectCreator.initialize(m, cfg, name, selection, target, readFile))
 
       case "create-group" | "group" =>
         val name = args.positional.head
-        val (cfg0, m) = ProjectLoader.load(root)
-        val selected = selection(m)
+        val selected = selection
         val owner = Owner(
           name = args.flags("owner-name").headOption,
           email = args.flags("owner-email").headOption,
@@ -289,7 +376,7 @@ object Main {
         // group-defining file > models/_groups.yml; multiple existing
         // group files are ambiguous (reference `main.py:592-604`)
         val path = args.flags("group-yml-path").headOption.getOrElse {
-          val existing = cfg0.modelPaths.flatMap { mp =>
+          val existing = cfg.modelPaths.flatMap { mp =>
             val dir = root.resolve(mp)
             if (!Files.isDirectory(dir)) Nil
             else {
@@ -323,46 +410,26 @@ object Main {
         if (command == "create-group")
           apply(Grouper.addGroup(m, name, owner, selected, path))
         else {
-          // group = create-group + contracts for non-private models; run
-          // the project first so schemas exist (the reference reads the
-          // warehouse catalog here)
-          val s = spark()
-          // the already-loaded (cfg0, m) pair is still current — nothing
-          // edited the tree between the loads; re-walking every file
-          // doubled command startup for nothing
-          val runner = new Runner(s, m, cfg0,
-            warehouse(), enforceAccess = false,
-            projectRoot = Some(root), readCatalog = readCatalog)
-          runner.run()
-          apply(Commands.group(s, m, name, owner, selected, path,
-            runner.viewName, p => scala.util.Try(readFile(p)).toOption))
+          // group = create-group + contracts for non-private models; the
+          // project materializes first so schemas exist (the reference
+          // reads the warehouse catalog here)
+          val view = materialize()
+          apply(Commands.group(spark(), m, name, owner, selected, path,
+            view, p => scala.util.Try(readFile(p)).toOption))
         }
 
       case "seed" | "snapshot" =>
         // dbt's dedicated entry points: run ONLY the seeds (resp. only
         // the snapshot models, plus whatever upstream they need — the
         // scheduler pulls ancestors automatically)
-        val (cfg, m) = ProjectLoader.load(root)
         val wanted = m.nodes.collect {
-          case (id, n) if command == "seed" && n.materialized == "seed" => id
-          case (id, n) if command == "snapshot" && n.materialized == "snapshot" => id
-        }.toSet
-        val narrowed =
-          if (!selectionActive) wanted else wanted intersect selection(m)
-        val out = new Runner(spark(), m, cfg,
-          warehouse(), projectRoot = Some(root),
-          readCatalog = readCatalog,
-          fullRefresh = args.switches("full-refresh"))
-          .run(Some(narrowed))
-        out.keys.toSeq.sorted.foreach(id => println(s"ran $id"))
+          case (id, n) if n.materialized == command => id }.toSet
+        return execute(Some(if (!selectionActive) wanted else wanted intersect selection))
 
       case "source" if args.positional.headOption.contains("freshness") =>
         // dbt's `source freshness`: max(loaded_at_field) per configured
         // source vs its warn_after/error_after bounds; exit 1 on error
-        val (cfg, m) = ProjectLoader.load(root)
-        val runner = new Runner(spark(), m, cfg,
-          warehouse(), projectRoot = Some(root), readCatalog = readCatalog)
-        val results = runner.sourceFreshness()
+        val results = runner().sourceFreshness()
         results.toSeq.sortBy(_._1).foreach { case (id, (status, maxTs)) =>
           println(s"${status.toUpperCase} $id" +
             maxTs.map(t => s" (max loaded_at $t)").getOrElse(""))
@@ -374,138 +441,34 @@ object Main {
         // dbt-ls shape: evaluate the selection grammar and print matching
         // unique_ids (the very surface the reference shells to for A1,
         // dbt_projects.py:351-376); no selection = every resource
-        val (_, m) = ProjectLoader.load(root)
-        val ids = if (!selectionActive) m.allResources.keySet else selection(m)
+        val ids = if (!selectionActive) m.allResources.keySet else selection
         ids.toSeq.sorted.foreach(println)
 
       case "test" =>
         // dbt-test shape: materialize the DAG, run every generic test as
-        // a violation query, report per-test counts, exit 1 on failures
-        val (cfg, m) = ProjectLoader.load(root)
-        val runner = new Runner(spark(), m, cfg,
-          warehouse(), projectRoot = Some(root), readCatalog = readCatalog)
-        // continue-on-error: a broken model must not crash the test
-        // command before any artifact is written — its tests record
-        // `skipped` below (dbt's behavior) and the model's own error
-        // status rides the artifact so `graft retry` can rebuild it
-        val (_, mStatus) = runner.runWithStatus()
+        // a violation query, report per-test counts, exit 1 on failures.
+        // A broken model does not stop the command: its tests record
+        // `skipped` and its error rides the artifact for `graft retry`.
         // --select scopes the tests (dbt: tests attached to selected
         // nodes, plus directly selected tests); the DAG still
-        // materializes in full so every test's relations exist
-        val tSel = if (!selectionActive) None else Some(selection(m))
-        val results = runner.runTestsDetailed(tSel, mStatus,
-          storeFailures = args.switches("store-failures"))
-        // dbt 1.8: `dbt test` runs unit tests alongside data tests
-        val uResults = runner.runUnitTests(tSel, mStatus)
-        printTestResults(results ++
-          uResults.map { case (uid, (st, d)) =>
-            uid -> (st, -1L) })
-        uResults.toSeq.sorted.collect { case (uid, ("fail" | "error", d)) =>
-          println(s"  $uid: $d") }
-        graft.core.parse.RunResultsJson.write(
-          root.resolve("target").resolve("run_results.json"),
-          (results.toSeq.map { case (tid, (st, _)) => tid -> st } ++
-            uResults.toSeq.map { case (uid, (st, _)) => uid -> st } ++
-            mStatus.toSeq.filter(_._2 != "success")).sorted)
-        if ((results.values.map(_._1) ++ uResults.values.map(_._1))
-            .exists(s => s == "fail" || s == "error") ||
-          mStatus.values.exists(_ == "error")) return 1
+        // materializes in full so every test's relations exist. dbt 1.8
+        // runs unit tests alongside data tests.
+        return execute(None, tests = Some(Option.when(selectionActive)(selection)),
+          quiet = true)
 
       case "build" =>
         // dbt build: materialize the (selected) DAG AND run its data
         // tests, one command, exit 1 on any test failure. dbt interleaves
         // each node's tests right after it; on a single-session engine a
         // later model cannot alter an earlier model's already-built
-        // relation, so run-then-test yields the same verdicts — tests are
-        // scoped to exactly the models this invocation materialized.
-        val (cfg, m) = ProjectLoader.load(root)
-        val sel0 = if (!selectionActive) None else Some(selection(m))
-        // a DIRECTLY selected test pulls its parent models into the build
-        // (dbt builds what the test needs; without this, a test-shaped
-        // selection materialized nothing and the test silently no-opped)
-        val sel = sel0.map { s =>
-          s ++ m.tests.collect { case (tid, tn) if s(tid) =>
-            tn.dependsOn.nodes.filter(_.startsWith("model."))
-          }.flatten.toSet ++
-            // a directly selected UNIT test likewise pulls its model in
-            // (otherwise nothing materializes and the unit test errors
-            // on unresolvable non-fixtured inputs)
-            m.unitTests.collect { case (uid, ut) if s(uid) =>
-              ut.dependsOn.nodes.filter(_.startsWith("model."))
-            }.flatten.toSet
-        }
-        val threads = args.flags("threads").headOption.map(_.toInt).getOrElse(1)
-        val runner = new Runner(spark(), m, cfg, warehouse(),
-          projectRoot = Some(root), readCatalog = readCatalog,
-          fullRefresh = args.switches("full-refresh"))
-        // dbt 1.8 build: a model's unit tests run BEFORE it materializes;
-        // a failure records the unit test AND skips the model (nothing
-        // bad reaches the warehouse) — descendants skip via the normal
-        // parent cascade. Scope matches runUnitTests' rule: directly
-        // selected, or attached to a selected model.
-        val utRun =
-          scala.collection.concurrent.TrieMap.empty[String, (String, String)]
-        val utInScope: String => Boolean = uid =>
-          sel0.forall(s => s(uid) ||
-            m.unitTests(uid).dependsOn.nodes.exists(s))
-        def unitTestGate(node: graft.core.model.ModelNode): Option[String] = {
-          val uids = m.unitTests.collect {
-            case (uid, ut) if ut.model == node.name && utInScope(uid) => uid
-          }.toSet
-          if (uids.isEmpty) None
-          else {
-            val res = runner.runUnitTests(Some(uids))
-            res.foreach { case (uid, r) => utRun(uid) = r }
-            val bad = res.collect {
-              case (uid, (st, _)) if st == "fail" || st == "error" => uid }
-            if (bad.isEmpty) None
-            else Some(s"unit test(s) failed: ${bad.toSeq.sorted.mkString(", ")}")
-          }
-        }
-        val (ran, status) = runner.runWithStatus(sel, parallelism = threads,
-          gate = unitTestGate)
-        ran.keys.toSeq.sorted.foreach(id => println(s"ran $id"))
-        status.toSeq.sorted.collect { case (id, st) if st != "success" =>
-          println(s"$st $id") }
-        // tests scope to the ORIGINAL selection sel0, not the
-        // parent-widened sel: a directly selected test runs, but its
-        // parents materialize silently — dbt build --select <test> does
-        // NOT run the parents' other tests. Tests whose model errored or
-        // was skipped this invocation record `skipped` (not a crash on
-        // the never-materialized relation).
-        // status.keySet, not ran.keySet: an errored/skipped model is
-        // still in scope so its tests REPORT as skipped instead of
-        // silently vanishing from the artifact
-        val buildScope = Some(sel0.getOrElse(status.keySet))
-        val results = runner.runTestsDetailed(buildScope, status,
-          storeFailures = args.switches("store-failures"))
-        // unit tests already ran inside the pre-materialization gate;
-        // in-scope ones whose OWN tested model was in this run but never
-        // reached its gate (parent errored/skipped) record skipped. A
-        // unit test in scope only through a fixture-INPUT dependency is
-        // omitted, like dbt: its model wasn't part of this run, so
-        // 'model not built' would be a lie (ADVICE r13).
-        val uAll = m.unitTests.keySet.filter { uid =>
-          val ut = m.unitTests(uid)
-          val ownModel = m.nodes.collectFirst {
-            case (id, n) if id.startsWith("model.") && n.name == ut.model => id }
-          utInScope(uid) && ownModel.exists(status.contains)
-        }
-        val uResults: Map[String, (String, String)] = utRun.toMap ++
-          (uAll -- utRun.keySet).map(_ -> ("skipped", "model not built"))
-        printTestResults(results ++
-          uResults.map { case (uid, (st, _)) => uid -> (st, -1L) },
-          ran = Some(ran.size))
-        uResults.toSeq.sorted.collect { case (uid, ("fail" | "error", d)) =>
-          println(s"  $uid: $d") }
-        val nBad = (results.values.map(_._1) ++ uResults.values.map(_._1))
-          .count(s => s == "fail" || s == "error")
-        graft.core.parse.RunResultsJson.write(
-          root.resolve("target").resolve("run_results.json"),
-          (status.toSeq ++
-            results.toSeq.map { case (tid, (st, _)) => tid -> st } ++
-            uResults.toSeq.map { case (uid, (st, _)) => uid -> st }).sorted)
-        if (nBad > 0 || status.values.exists(_ == "error")) return 1
+        // relation, so run-then-test yields the same verdicts. Tests
+        // scope to the selection itself, not the models a selected test
+        // pulled in: `build --select <test>` builds the test's parents
+        // silently and does NOT run their other tests. A test whose model
+        // errored or was skipped records `skipped`.
+        val sel = Option.when(selectionActive)(selection)
+        return execute(sel.map(withTestParents),
+          tests = Some(Some(sel.getOrElse(m.nodes.keySet))), build = true)
 
       case "compile" =>
         // dbt compile: render every selected model's SQL — Jinja
@@ -513,14 +476,11 @@ object Main {
         // would use — into target/compiled/<project>/<model path>,
         // executing NOTHING. Slim-CI tooling and humans read these files;
         // the rendering is byte-identical to what `graft run` executes
-        // (same renderSql). is_incremental() renders false (dbt's
-        // empty-state behavior); python models have no SQL form and are
-        // listed-skipped loudly rather than silently omitted.
-        val (cfg, m) = ProjectLoader.load(root)
-        val sel = if (!selectionActive) None else Some(selection(m))
-        val runner = new Runner(spark(), m, cfg, warehouse(),
-          enforceAccess = false, projectRoot = Some(root),
-          readCatalog = readCatalog)
+        // (same renderSql, same --vars). is_incremental() renders false
+        // (dbt's empty-state behavior); python models have no SQL form
+        // and are listed-skipped loudly rather than silently omitted.
+        val sel = if (!selectionActive) None else Some(selection)
+        val r = runner(enforceAccess = false)
         val outDir = root.resolve("target").resolve("compiled")
           .resolve(m.projectName)
         var nWritten = 0
@@ -531,7 +491,7 @@ object Main {
             else if (node.materialized == "seed")
               () // seeds have no SQL to compile (dbt skips them too)
             else {
-              val sql = runner.renderSql(node, isIncremental = false)
+              val sql = r.renderSql(node, isIncremental = false)
               val p = outDir.resolve(node.filePath)
               Files.createDirectories(p.getParent)
               Files.writeString(p, sql)
@@ -550,29 +510,22 @@ object Main {
         // itself write artifacts). Upstream of the selection
         // re-materializes as in any selected run (idempotent views /
         // incremental merges) so refs resolve.
-        val stateDir = args.flags("state").headOption
-          .map(Paths.get(_)).getOrElse(root.resolve("target"))
-        val dir = if (Files.isDirectory(stateDir)) stateDir
-          else Option(stateDir.getParent).getOrElse(root)
-        val rs = graft.core.parse.RunResultsJson.loadIfPresent(dir)
+        val dir = stateDir(statePath.getOrElse(root.resolve("target")))
+        val rs = RunResultsJson.loadIfPresent(dir)
           .getOrElse(throw new IllegalArgumentException(
             s"retry needs run_results.json under $dir " +
               "(pass --state <dir> to point at a previous run's artifacts)"))
-        val (cfg, m) = ProjectLoader.load(root)
         val sel = Selector.select(m,
           Seq("result:error", "result:fail", "result:skipped"),
           Nil, None, Some(rs))
         if (sel.isEmpty) println("nothing to retry")
         else {
-          val runner = new Runner(spark(), m, cfg, warehouse(),
-            projectRoot = Some(root), readCatalog = readCatalog)
-          // status-tracked like run/build — a retry that fails again must
-          // refresh the artifact with its OWN statuses, and a fully
-          // successful retry must clear the stale error/skipped entries
-          // (dbt retry rewrites run_results.json; without this a second
-          // `graft retry` re-ran already-fixed nodes forever)
+          // The retry rewrites the artifact with its OWN outcomes merged
+          // over the previous ones: a retry that fails again records it,
+          // and a successful one clears the stale entries (without this a
+          // second `graft retry` re-ran already-fixed nodes forever).
           //
-          // Selected TESTS pull their parent models into the run: a fresh
+          // Selected tests pull their parent models into the run: a fresh
           // retry process has no session views, so a failed test whose
           // model previously SUCCEEDED would otherwise error on the
           // missing relation instead of re-running. Re-materializing a
@@ -587,61 +540,23 @@ object Main {
           // parent re-renders (its session view died with the previous
           // process), which re-fires its hooks; idempotent hooks — the
           // dbt best practice — are unaffected.
-          val selW = sel ++
-            m.tests.collect { case (tid, tn) if sel(tid) =>
-              tn.dependsOn.nodes.filter(_.startsWith("model.")) }.flatten ++
-            m.unitTests.collect { case (uid, ut) if sel(uid) =>
-              ut.dependsOn.nodes.filter(_.startsWith("model.")) }.flatten
-          // healthy = pulled in only for ref resolution AND previously
-          // succeeded; the runner reuses those whose table exists
-          val healthy = (selW -- sel).filter(id =>
-            rs.get(id).contains("success"))
-          val (ran, status) = runner.runWithStatus(Some(selW),
-            reuseHealthy = healthy)
-          ran.keys.toSeq.sorted.foreach(id => println(s"ran $id"))
-          status.toSeq.sorted.collect { case (id, st) if st != "success" =>
-            println(s"$st $id") }
-          // failed/skipped TESTS selected by result: re-run too (dbt
-          // retry covers test nodes); their models either just re-ran or
-          // carry their previous state in the session/warehouse
-          val testSel = sel.filter(m.tests.contains)
-          val tResults =
-            if (testSel.isEmpty) Map.empty[String, (String, Long)]
-            else runner.runTestsDetailed(Some(testSel), status,
-              storeFailures = args.switches("store-failures"))
-          // failed UNIT tests selected by result: re-run as well (before
-          // this, retry silently dropped them — exit 0 with the stale
-          // 'fail' left in the artifact forever)
-          val utSel = sel.filter(m.unitTests.contains)
-          val uResults =
-            if (utSel.isEmpty) Map.empty[String, (String, String)]
-            else runner.runUnitTests(Some(utSel), status)
-          if (tResults.nonEmpty || uResults.nonEmpty) {
-            printTestResults(tResults ++
-              uResults.map { case (uid, (st, _)) => uid -> (st, -1L) })
-            uResults.toSeq.sorted.collect {
-              case (uid, ("fail" | "error", d)) => println(s"  $uid: $d") }
-          }
-          // merge this retry's outcomes over the previous artifact: nodes
-          // not retried keep their old status, retried nodes record what
-          // just happened
-          val merged = (rs ++ status ++
-            tResults.map { case (tid, (st, _)) => tid -> st } ++
-            uResults.map { case (uid, (st, _)) => uid -> st }).toSeq.sorted
-          graft.core.parse.RunResultsJson.write(
-            root.resolve("target").resolve("run_results.json"), merged)
-          if (status.values.exists(_ == "error") ||
-            (tResults.values.map(_._1) ++ uResults.values.map(_._1))
-              .exists(r => r == "fail" || r == "error"))
-            return 1
+          val selW = withTestParents(sel)
+          // failed/skipped data and unit tests selected by result: re-run
+          // too (dbt retry covers test nodes)
+          val testIds = sel.filter(id => m.tests.contains(id) || m.unitTests.contains(id))
+          return execute(Some(selW),
+            tests = Option.when(testIds.nonEmpty)(Some(testIds)),
+            // healthy = pulled in only for ref resolution AND previously
+            // succeeded; the runner reuses those whose table exists
+            reuseHealthy = (selW -- sel).filter(id => rs.get(id).contains("success")),
+            prior = rs)
         }
 
       case "contract" | "add-contract" =>
-        val (cfg, m) = ProjectLoader.load(root)
-        val selected = selection(m)
+        val selected = selection
         def contractable = selected.toSeq.sorted.flatMap(m.nodes.get)
           .filter(_.uniqueId.startsWith("model."))
-          .collect { case node: graft.core.model.ModelNode
+          .collect { case node: ModelNode
             // --public-only contracts only public-access models
             // (`main.py:275,292-295`)
             if !args.switches("public-only") ||
@@ -660,13 +575,10 @@ object Main {
               Contractor.generateContractFromCatalog(node, entry)
             }
           } else {
+            val view = materialize()
             val s = spark()
-            val runner = new Runner(s, m, cfg,
-              warehouse(), enforceAccess = false,
-              projectRoot = Some(root), readCatalog = readCatalog)
-            runner.run()
             contractable.map(node =>
-              Contractor.generateContract(s, node, runner.viewName(node.name)))
+              Contractor.generateContract(s, node, view(node.name)))
           }
         apply(ChangeSet(cs.toVector))
 
@@ -681,21 +593,17 @@ object Main {
         // `run --defer --state <project>/target` serves unselected refs
         // from the clones, and `run --read-catalog` reuses them as
         // already-materialized catalog tables.
-        val (cfg, m) = ProjectLoader.load(root)
-        val stateM = graft.core.parse.ManifestJson.load(stateManifest.getOrElse(
+        val stateM = ManifestJson.load(stateManifest.getOrElse(
           throw new IllegalArgumentException("clone requires --state")))
-        val sel = if (selectionActive) selection(m) else m.nodes.keySet
+        val sel = if (selectionActive) selection else m.nodes.keySet
         val persistent = Set("table", "incremental", "snapshot", "seed")
         val s = spark()
         // clones ALWAYS land in the durable project-local catalog — a
         // throwaway temp warehouse would defeat clone's purpose (the
         // artifact must survive this process so a later `run --defer`
         // or `run --read-catalog` can serve from it)
-        val cloneWh = Files.createDirectories(
-          root.resolve(".graft").resolve("warehouse"))
-        val runner = new Runner(s, m, cfg, cloneWh,
-          enforceAccess = false, projectRoot = Some(root),
-          readCatalog = readCatalog)
+        val r = runner(enforceAccess = false, wh = Files.createDirectories(
+          root.resolve(".graft").resolve("warehouse")))
         val cloned = sel.toSeq.sorted.flatMap { id =>
           for {
             node <- m.nodes.get(id)
@@ -715,7 +623,7 @@ object Main {
                 None
             }
           } yield {
-            runner.cloneRelation(node, df)
+            r.cloneRelation(node, df)
             println(s"cloned $id from $rel")
             id
           }
@@ -723,7 +631,7 @@ object Main {
         val target = Files.createDirectories(root.resolve("target"))
         val outM = m.copy(nodes = m.nodes.map { case (id, n) =>
           id -> (if (cloned(id))
-            n.copy(relationName = Some(runner.viewName(n.name)))
+            n.copy(relationName = Some(r.viewName(n.name)))
           else n)
         })
         graft.core.parse.ManifestJsonWriter.write(
@@ -736,20 +644,15 @@ object Main {
         // materializes (or --read-catalog reuses) the project like the
         // contract flow, then crawls the produced schemas. --no-compile
         // (dbt's own flag) skips the catalog half.
-        val (cfg, m) = ProjectLoader.load(root)
         val target = root.resolve("target")
         graft.core.parse.ManifestJsonWriter.write(
           m, target.resolve("manifest.json"))
         println(s"wrote ${target.resolve("manifest.json")}")
         if (!args.switches("no-compile")) {
+          val view = materialize()
           val s = spark()
-          val runner = new Runner(s, m, cfg, warehouse(),
-            enforceAccess = false,
-            projectRoot = Some(root), readCatalog = readCatalog)
-          runner.run()
           val entries = m.nodes.values.toSeq.sortBy(_.uniqueId).map { node =>
-            (node.uniqueId, runner.viewName(node.name),
-              s.table(runner.viewName(node.name)).schema)
+            (node.uniqueId, view(node.name), s.table(view(node.name)).schema)
           }
           graft.core.parse.CatalogJsonWriter.write(
             entries, target.resolve("catalog.json"))
@@ -757,14 +660,13 @@ object Main {
         }
 
       case "version" | "add-version" | "bump-version" =>
-        val (_, m) = ProjectLoader.load(root)
         // reference selects with --select; a bare positional model name is
         // accepted as a convenience. A bare --exclude is an active
         // selection here too (all-minus-exclusion), consistent with every
         // other command.
         val names: Seq[String] =
           if (selectionActive)
-            selection(m).toSeq.sorted.flatMap(m.nodes.get)
+            selection.toSeq.sorted.flatMap(m.nodes.get)
               .filter(_.uniqueId.startsWith("model.")).map(_.name)
           else args.positional
         // default behavior is Prerelease (keep latest_version), matching
@@ -832,8 +734,7 @@ object Main {
           readFile = (proj, f) => Files.readString(byName(proj).resolve(f)))
         plans.toSeq.sortBy(_._1).foreach { case (proj, cs) =>
           println(s"-- $proj --")
-          new ChangeSetProcessor(byName(proj), dryRun = dryRun, log = println)
-            .process(Seq(cs))
+          apply(cs, byName(proj))
         }
 
       case "run-operation" =>
@@ -845,12 +746,7 @@ object Main {
         val name = args.positional.headOption.getOrElse(
           throw new IllegalArgumentException(
             "run-operation requires a macro name"))
-        val (cfg, m) = ProjectLoader.load(root)
-        val macroArgs = yamlMapFlag("args")
-        val runner = new Runner(spark(), m, cfg, warehouse(),
-          projectRoot = Some(root), readCatalog = readCatalog,
-          varOverrides = yamlMapFlag("vars"))
-        runner.runOperation(name, macroArgs)
+        runner().runOperation(name, yamlMapFlag("args"))
         println(s"ran operation $name")
 
       case "show" =>
@@ -860,20 +756,16 @@ object Main {
         // shown model). Upstream models materialize first (a session
         // engine has no standing warehouse to read them from), into the
         // usual throwaway temp warehouse unless --read-catalog.
-        val (cfg, m) = ProjectLoader.load(root)
-        val limit = args.flags("limit").headOption.map(_.toInt).getOrElse(5)
         if (!selectionActive)
           throw new IllegalArgumentException("show requires --select")
-        val models = selection(m).toSeq.sorted.flatMap(m.nodes.get)
+        val models = selection.toSeq.sorted.flatMap(m.nodes.get)
           .filter(n => n.uniqueId.startsWith("model."))
         if (models.isEmpty) {
           System.err.println("show: selection matches no models")
           return 1
         }
         val s = spark()
-        val runner = new Runner(s, m, cfg, warehouse(),
-          enforceAccess = false, projectRoot = Some(root),
-          readCatalog = readCatalog)
+        val r = runner(enforceAccess = false)
         // ancestors of the WHOLE selection, materialized once up front —
         // per-model runner.run re-ran shared upstream tables once per
         // selected model (idempotent but wasteful; ADVICE r14). Each
@@ -882,18 +774,18 @@ object Main {
         val allUp = models.filter(_.language != "python").map(node =>
           Selector.select(m, Seq(s"+${node.name}"), Nil, None) -
             node.uniqueId).foldLeft(Set.empty[String])(_ ++ _)
-        if (allUp.nonEmpty) runner.run(Some(allUp))
+        if (allUp.nonEmpty) r.run(Some(allUp))
         models.foreach { node =>
           if (node.language == "python")
             println(s"skipped ${node.uniqueId} (python model, no SQL preview)")
           else {
-            val df = s.sql(runner.renderSql(node, isIncremental = false))
+            val df = s.sql(r.renderSql(node, isIncremental = false))
               .limit(limit)
             val rows = df.collect()
             println(s"-- ${node.uniqueId}")
             println(df.columns.mkString(" | "))
-            rows.foreach(r => println((0 until r.length).map(i =>
-              if (r.isNullAt(i)) "NULL" else r.get(i).toString)
+            rows.foreach(row => println((0 until row.length).map(i =>
+              if (row.isNullAt(i)) "NULL" else row.get(i).toString)
               .mkString(" | ")))
           }
         }
@@ -901,7 +793,7 @@ object Main {
       case other =>
         println(
           s"""unknown command: $other
-             |usage: graft {run|build|retry|test|compile|show|run-operation|ls|seed|snapshot|clone|docs|split|create-group|group|contract|version|connect} [options]
+             |usage: graft {run|build|test|retry|seed|snapshot|compile|show|run-operation|source freshness|ls|list|clone|docs generate|split|create-group|group|contract|add-contract|version|add-version|bump-version|connect} [options]
              |""".stripMargin)
         return if (other == "help") 0 else 1
     }

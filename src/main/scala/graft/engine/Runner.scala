@@ -992,12 +992,6 @@ final class Runner(
         id -> res
     }
 
-  // ------------------------------------------------------------- tests
-  /** Run generic data tests as violation queries; returns violations per
-    * test id (0 = pass), mirroring dbt test semantics (SURVEY §2.F). */
-  def runTests(onModels: Option[Set[String]] = None): Map[String, Long] =
-    testsInScope(onModels).map { case (tid, t) => tid -> runOneTest(tid, t) }
-
   // -------------------------------------------------------- unit tests
   /** dbt 1.8 `unit_tests:` execution: render the tested model with each
     * `given:` input swapped for a fixture temp view, run the SQL, and
@@ -1207,8 +1201,10 @@ final class Runner(
     out
   }
 
-  /** dbt-faithful test execution for the CLI: per-test terminal status
-    * instead of propagate-first-exception. A test whose model dependency
+  // ------------------------------------------------------------- tests
+  /** Generic data tests as violation queries (dbt test semantics, SURVEY
+    * §2.F), each with its terminal status; the one test path, for the
+    * CLI and library callers alike. A test whose model dependency
     * the SAME invocation left in error/skipped state (per `modelStatus`)
     * records `skipped` WITHOUT executing — dbt build marks such tests
     * skipped rather than crashing on the never-materialized relation —
@@ -1321,9 +1317,6 @@ final class Runner(
       : Map[String, graft.core.model.TestNode] =
     manifest.tests.filter { case (tid, t) =>
       onModels.forall(sel => sel(tid) || t.dependsOn.nodes.exists(sel)) }
-
-  private def runOneTest(tid: String, t: graft.core.model.TestNode): Long =
-    violationFrame(tid, t).count()
 
   /** The violating-rows frame a generic test compiles to (what dbt's
     * rendered test SELECTs); `count()` of it is the violation count and

@@ -901,6 +901,71 @@ class MainSpec extends AnyFunSuite {
     assert(s.table("shop__kept").collect().map(_.getInt(0)).toSeq == Seq(25))
   }
 
+  test("compile --vars renders the override into the compiled SQL") {
+    val root = writeProject(Map(
+      "dbt_project.yml" ->
+        """name: shop
+          |vars:
+          |  floor: 10
+          |""".stripMargin,
+      "seeds/raw.csv" -> "id\n5\n15\n25\n",
+      "models/kept.sql" ->
+        "select * from {{ ref('raw') }} where id > {{ var('floor') }}"))
+    val code = Console.withOut(new java.io.PrintStream(
+      new java.io.ByteArrayOutputStream())) {
+      Main.run(Array("compile", "--project-dir", root.toString,
+        "--vars", "{floor: 20}"))
+    }
+    assert(code == 0)
+    // the compiled file is what `run --vars` executes: the CLI value wins
+    val sql = Files.readString(root.resolve("target/compiled/shop/models/kept.sql"))
+    assert(sql.contains("where id > 20"), sql)
+  }
+
+  test("a failing snapshot reports error, writes run_results.json and exits 1") {
+    val root = writeProject(Map(
+      "dbt_project.yml" -> "name: shop\n",
+      "models/snap_ok.sql" ->
+        ("{{ config(materialized='snapshot', unique_key='id', " +
+          "updated_at='id') }}\nselect 1 as id"),
+      "models/snap_bad.sql" ->
+        ("{{ config(materialized='snapshot', unique_key='id', " +
+          "updated_at='id') }}\nselect * from shop_no_such_relation")))
+    val out = new java.io.ByteArrayOutputStream()
+    val code = Console.withOut(new java.io.PrintStream(out)) {
+      Main.run(Array("snapshot", "--project-dir", root.toString))
+    }
+    val lines = out.toString.linesIterator.toSeq
+    assert(code == 1, out.toString)
+    assert(lines == Seq("ran model.shop.snap_ok", "error model.shop.snap_bad"),
+      out.toString)
+    // the artifact records the failure, so `graft retry` can rerun it
+    val rs = graft.core.parse.RunResultsJson.load(
+      root.resolve("target/run_results.json"))
+    assert(rs == Map("model.shop.snap_ok" -> "success",
+      "model.shop.snap_bad" -> "error"), rs.toString)
+  }
+
+  test("a non-integer --threads or --limit is a one-line usage error") {
+    val root = writeProject(project)
+    for ((flag, cmd) <- Seq("threads" -> "run", "limit" -> "show")) {
+      val out = new java.io.ByteArrayOutputStream()
+      val err = new java.io.ByteArrayOutputStream()
+      val code = Console.withOut(new java.io.PrintStream(out)) {
+        Console.withErr(new java.io.PrintStream(err)) {
+          Main.run(Array(cmd, "--select", "mart", s"--$flag", "x",
+            "--project-dir", root.toString))
+        }
+      }
+      assert(code == 2, s"$flag: exit $code")
+      assert(err.toString == s"graft: --$flag expects an integer, got 'x'\n",
+        err.toString)
+      assert(out.toString.isEmpty, out.toString)
+    }
+    // nothing ran, so no artifact was written
+    assert(!Files.exists(root.resolve("target/run_results.json")))
+  }
+
   test("connect rewrites the downstream and registers the dependency") {
     val up = writeProject(Map(
       "dbt_project.yml" -> "name: up_proj\n",

@@ -82,7 +82,7 @@ class RunnerSpec extends AnyFunSuite with SparkFixture {
     assert(orders.map(_.getLong(0)).toSeq == Seq(1L, 2L, 3L))
     assert(orders.map(_.getDecimal(1).toString).toSeq == Seq("1.50", "2.50", "10.00"))
     // generic tests all pass (0 violations)
-    assert(runner.runTests().values.forall(_ == 0L))
+    assert(runner.runTestsDetailed().values.forall(_._2 == 0L))
   }
 
   test("contract violation: produced schema must match the declared contract") {
@@ -423,9 +423,9 @@ class RunnerSpec extends AnyFunSuite with SparkFixture {
     val runner = new Runner(s, manifest, cfg,
       Files.createTempDirectory("wh_ct"), enforceAccess = false)
     runner.run()
-    val results = runner.runTests()
-    assert(results("test.jaffle.positive_values_stg_cents") == 1L) // the -5 row
-    assert(results("test.jaffle.always_passes_stg_cents") == 0L)
+    val results = runner.runTestsDetailed()
+    assert(results("test.jaffle.positive_values_stg_cents")._2 == 1L) // the -5 row
+    assert(results("test.jaffle.always_passes_stg_cents")._2 == 0L)
   }
 
   test("a {% for %}-generated union model renders through JinjaLite and runs") {
@@ -1159,12 +1159,12 @@ class RunnerSpec extends AnyFunSuite with SparkFixture {
     val runner = new Runner(spark, manifest, cfg,
       Files.createTempDirectory("graft_wh_gt"), enforceAccess = false)
     runner.run()
-    val results = runner.runTests()
+    val results = runner.runTestsDetailed()
     // two NULL keys are NOT a uniqueness violation (dbt filters them)
-    assert(results("test.gt.unique_m_k") == 0L, results.toString)
+    assert(results("test.gt.unique_m_k")._2 == 0L, results.toString)
     // both statuses sit in the accepted list, whatever YAML shape the
     // lite parser surfaced it as
-    assert(results("test.gt.accepted_values_m_status") == 0L, results.toString)
+    assert(results("test.gt.accepted_values_m_status")._2 == 0L, results.toString)
   }
 
   test("test severity/warn_if/error_if: warn statuses, thresholds, loud typos") {
@@ -1727,6 +1727,7 @@ class RunnerSpec extends AnyFunSuite with SparkFixture {
           |""".stripMargin))
     val (runner, _) = mkRunner(root, enforceAccess = false)
     runner.run()
-    assert(runner.runTests() == Map("test.av.accepted_values_m_status" -> 0L))
+    assert(runner.runTestsDetailed().map { case (tid, (_, v)) => tid -> v } ==
+      Map("test.av.accepted_values_m_status" -> 0L))
   }
 }
