@@ -298,15 +298,18 @@ object Main {
     //    to a node in `scope` or selected themselves (None = all tests).
     //  - `quiet` (test): the DAG builds only so the tests' relations
     //    exist; no `ran` lines, and only failed models reach the artifact.
-    //  - `build`: dbt 1.8 build. A model's unit tests run BEFORE it
+    //  - `reuseHealthy` (retry): see `Runner.runWithStatus`.
+    //  - `which`: the command whose semantics apply, recorded in the
+    //    artifact as dbt's `args.which` (retry passes the original one).
+    //    `build` is dbt 1.8 build: a model's unit tests run BEFORE it
     //    materializes, and a failure skips it (its descendants skip
     //    through the parent cascade, nothing bad reaches the warehouse);
     //    the report counts the models run.
-    //  - `reuseHealthy` (retry): see `Runner.runWithStatus`.
     def execute(sel: Option[Set[String]],
         tests: Option[Option[Set[String]]] = None, quiet: Boolean = false,
-        build: Boolean = false, reuseHealthy: Set[String] = Set.empty,
-        prior: Map[String, String] = Map.empty): Int = {
+        reuseHealthy: Set[String] = Set.empty,
+        prior: Map[String, String] = Map.empty, which: String = command): Int = {
+      val build = which == "build"
       val r = runner()
       val unitInScope: String => Boolean = uid => tests.exists(_.forall(s =>
         s(uid) || m.unitTests(uid).dependsOn.nodes.exists(s)))
@@ -346,7 +349,7 @@ object Main {
         data.map { case (tid, (st, _)) => tid -> st } ++
         units.map { case (uid, (st, _)) => uid -> st }
       RunResultsJson.write(root.resolve("target").resolve("run_results.json"),
-        (prior ++ outcomes).toSeq.sorted)
+        which, (prior ++ outcomes).toSeq.sorted)
       if (outcomes.values.exists(st => st == "error" || st == "fail")) 1 else 0
     }
 
@@ -468,7 +471,7 @@ object Main {
         // errored or was skipped records `skipped`.
         val sel = Option.when(selectionActive)(selection)
         return execute(sel.map(withTestParents),
-          tests = Some(Some(sel.getOrElse(m.nodes.keySet))), build = true)
+          tests = Some(Some(sel.getOrElse(m.nodes.keySet))))
 
       case "compile" =>
         // dbt compile: render every selected model's SQL — Jinja
@@ -509,12 +512,15 @@ object Main {
         // dir; defaults to ./target, where `docs generate` and dbt
         // itself write artifacts). Upstream of the selection
         // re-materializes as in any selected run (idempotent views /
-        // incremental merges) so refs resolve.
+        // incremental merges) so refs resolve. The previous command's
+        // semantics carry over (`args.which`): after a `build`, unit
+        // tests gate their models again.
         val dir = stateDir(statePath.getOrElse(root.resolve("target")))
         val rs = RunResultsJson.loadIfPresent(dir)
           .getOrElse(throw new IllegalArgumentException(
             s"retry needs run_results.json under $dir " +
               "(pass --state <dir> to point at a previous run's artifacts)"))
+        val which = RunResultsJson.which(dir.resolve("run_results.json"))
         val sel = Selector.select(m,
           Seq("result:error", "result:fail", "result:skipped"),
           Nil, None, Some(rs))
@@ -549,7 +555,7 @@ object Main {
             // healthy = pulled in only for ref resolution AND previously
             // succeeded; the runner reuses those whose table exists
             reuseHealthy = (selW -- sel).filter(id => rs.get(id).contains("success")),
-            prior = rs)
+            prior = rs, which = which.getOrElse(command))
         }
 
       case "contract" | "add-contract" =>

@@ -1,6 +1,6 @@
 package graft.core.parse
 
-import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.ObjectMapper
 import scala.jdk.CollectionConverters._
 
 /** Loader for a dbt-core-produced `run_results.json` — the artifact
@@ -37,14 +37,24 @@ object RunResultsJson {
     }.toMap
   }
 
+  /** dbt-core's top-level `args.which`: the command that wrote the
+    * artifact (`run`, `build`, ...), which `graft retry` re-applies.
+    * None when absent — dbt-core writes `"args": {}` for some
+    * invocations. */
+  def which(path: java.nio.file.Path): Option[String] =
+    Some(new ObjectMapper().readTree(java.nio.file.Files.readString(path))
+      .at("/args/which")).filter(_.isTextual).map(_.asText)
+
   /** Writer for the same artifact: first-party `graft run/build/test`
     * emit it so `graft retry` and `result:` selectors work without a
     * dbt-core invocation ever having produced one. Emits exactly the
-    * fields the loader requires; dbt-core's extra fields are additive. */
-  def write(path: java.nio.file.Path,
+    * fields the loader and [[which]] read; dbt-core's extra fields are
+    * additive. */
+  def write(path: java.nio.file.Path, which: String,
       results: Seq[(String, String)]): Unit = {
     val om = new ObjectMapper()
     val root = om.createObjectNode()
+    root.putObject("args").put("which", which)
     val arr = root.putArray("results")
     results.foreach { case (id, status) =>
       val e = arr.addObject()

@@ -29,7 +29,7 @@ import org.apache.spark.sql.types._
   * distinct set per group before truncation, which is exactly the
   * count-distinct cost the sketch exists to avoid. Partial (map-side)
   * aggregation and `merge` make the sketch associatively combinable,
-  * which is also what a streaming/incremental rollup needs: union of
+  * which is also what an incremental rollup needs: union of
   * sketches = sketch of union (pinned by KmvAggSpec's merge law).
   *
   * Correctness of the bounded insert: a new value is rejected only when
@@ -127,9 +127,7 @@ object KmvAgg {
     Bridge.column(KmvAgg(Bridge.expression(h), k).toAggregateExpression())
 
   /** The bounded distinct-min-k insert rule — one definition shared by
-    * the aggregate's update/merge and the streaming state twin
-    * ([[graft.streaming.Streams.vocabSketch]]), so batch and stream
-    * cannot drift. */
+    * the aggregate's update and merge. */
   private[graft] def insert(
       buf: java.util.TreeSet[java.lang.Long], k: Int, h: Long): Unit = {
     if (buf.size < k) { buf.add(h); () }
@@ -138,18 +136,5 @@ object KmvAgg {
       // TreeSet.add dedupes, so only shrink on a genuine insertion.
       if (buf.add(h)) { buf.pollLast(); () }
     }
-  }
-
-  /** Fold values into an ascending min-k array via [[insert]] — the
-    * streaming GroupState representation (a plain serializable array). */
-  private[graft] def fold(state: Array[Long], k: Int, vs: Iterator[Long]): Array[Long] = {
-    val set = new java.util.TreeSet[java.lang.Long]()
-    state.foreach(v => set.add(v))
-    vs.foreach(h => insert(set, k, h))
-    val out = new Array[Long](set.size)
-    val it = set.iterator()
-    var i = 0
-    while (it.hasNext) { out(i) = it.next().longValue(); i += 1 }
-    out
   }
 }

@@ -425,8 +425,8 @@ object Dedup {
     * × 2 rows. Both sigs are < 1e9+7 < 2^30, so a band's pair packs
     * exactly into one long (sig1·2^30 + sig2) — candidate joins run on
     * (band#, long) instead of concatenated strings: smaller shuffle rows,
-    * cheaper hash, no codegen string work. Shared by the batch LSH (d03)
-    * and the streaming near-dup ingest ([[graft.streaming.Streams]]). */
+    * cheaper hash, no codegen string work. Shared by the LSH candidate
+    * join (d03) and the recall audit (d12). */
   private[graft] def bandKeys(perDoc: DataFrame): DataFrame = {
     import org.apache.spark.sql.functions.{array, col, element_at, lit, posexplode}
     val keyCols = (0 until 32).map(b =>
@@ -2053,9 +2053,7 @@ object Dedup {
     * corpus (even doc_ids), never corpus-vs-corpus. Tiers mirror the
     * production ladder: a new doc is `exact_hist` when its md5 matches
     * any historical doc (16-byte semi-join probe), else `near_hist`
-    * when it has a Jaccard ≥ 0.5 shingle pair with a historical doc
-    * (the batch-audit form of what [[graft.streaming.Streams
-    * .nearDupIngest]]'s persistent band index decides per micro-batch),
+    * when it has a Jaccard ≥ 0.5 shingle pair with a historical doc,
     * else fresh. Per-source fresh ppm is the number ingestion dashboards
     * watch: a crash says the crawler is re-fetching yesterday.
     *
@@ -2068,8 +2066,7 @@ object Dedup {
     * the same narrow projection) — the round-12 shape paid four
     * text-column scans for the same answer. In production the near
     * tier probes the persisted BAND-KEY index instead of re-deriving
-    * pairs — same decisions, index-sized state (the streaming twin
-    * does exactly that). */
+    * pairs — same decisions, index-sized state. */
   def d26(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     // one scan, one kernel pass, pinned: digests for the exact tier,

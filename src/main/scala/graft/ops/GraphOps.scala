@@ -1465,37 +1465,6 @@ object GraphOps {
       |FROM fullc f LEFT JOIN oldc o ON f.doc_id = o.doc_id
       |ORDER BY f.doc_id""".stripMargin
 
-  /** g18's contraction composition as a reusable step: fold a batch of
-    * edges into an existing (doc_id, component) label table, returning
-    * the updated labels for old ∪ batch vertices. Old labels must be
-    * min-ids (as [[components]] emits) — then the result is bit-identical
-    * to a full recompute, and RE-applying the same batch is a no-op
-    * (same-component edges contract away), which is what makes the
-    * streaming twin's micro-batch replay idempotent. */
-  private[graft] def incrementalLabels(oldLab: DataFrame, batchE: DataFrame): DataFrame = {
-    val s = oldLab.sparkSession
-    import s.implicits._
-    val lab = oldLab.select($"doc_id", $"component").localCheckpoint(eager = false)
-    val e = batchE.select($"da", $"db").localCheckpoint(eager = false)
-    val contracted = e
-      .join(lab.select($"doc_id".as("da"), $"component".as("la")), Seq("da"), "left")
-      .join(lab.select($"doc_id".as("db"), $"component".as("lb")), Seq("db"), "left")
-      .select(coalesce($"la", $"da").as("x"), coalesce($"lb", $"db").as("y"))
-      .filter($"x" =!= $"y")
-      .select(least($"x", $"y").as("da"), greatest($"x", $"y").as("db"))
-      .distinct()
-    val merged = components(contracted)
-    val verts = lab.select($"doc_id")
-      .union(e.select($"da".as("doc_id")))
-      .union(e.select($"db".as("doc_id"))).distinct()
-    verts
-      .join(lab, Seq("doc_id"), "left")
-      .withColumn("c0", coalesce($"component", $"doc_id"))
-      .join(merged.select($"doc_id".as("cv"), $"component".as("c1")),
-        $"c0" === $"cv", "left")
-      .select($"doc_id", coalesce($"c1", $"c0").as("component"))
-  }
-
   // ---------------------------------------------------------------- g19
   /** Per-component density — the clique-vs-chain triage at the CLUSTER
     * grain: density 10⁶ ppm (= complete graph) is a mutually-confirming

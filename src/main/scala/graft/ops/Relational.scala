@@ -419,8 +419,8 @@ object Relational {
       |GROUP BY r_name, n_name ORDER BY r_name, n_name""".stripMargin
 
   // ---------------------------------------------------------------- q13
-  /** Event-stream tumbling-window aggregate (batch view of the streaming
-    * hourly rollup; see graft.streaming for the readStream form). */
+  /** Event-stream tumbling-window aggregate: the hourly rollup, in batch
+    * form. */
   def q13(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     Tables.t(s, dir, "events")
@@ -965,9 +965,9 @@ object Relational {
     * matter for an audit: a row duplicated on one side only is a real
     * discrepancy that DISTINCT-based EXCEPT would hide.
     *
-    * This is the batch form of the kappa check the streaming ops
-    * promise (backfill == live); run nightly it catches drift from late
-    * data, replays, or logic skew between the two paths. */
+    * This is the batch form of the kappa check (backfill == live); run
+    * nightly it catches drift from late data, replays, or logic skew
+    * between the two paths. */
   def q30(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     def proj(df: DataFrame): DataFrame = df.select(

@@ -1851,8 +1851,8 @@ object Similarity {
 
   /** Batch-fit the per-label fixed-point centroids (Σq div n per dim) —
     * |labels|·dims values, a bounded domain, collected under s22's
-    * k-row rule. Shared by s28 and the streaming centroidGate so the
-    * live gate and a batch backfill score against the SAME integers. */
+    * k-row rule. Split out of s28 so the spec can pin the fit on a
+    * hand-built corpus. */
   private[graft] def fitCentroids(emb: DataFrame): Seq[(Int, Seq[Long])] = {
     val s = emb.sparkSession
     import s.implicits._
@@ -1870,7 +1870,7 @@ object Similarity {
   }
 
   /** (own-centroid d², min other-centroid d²) columns over literal
-    * centroids — pure narrow compiled work, usable on a stream. */
+    * centroids — pure narrow compiled work, no join. */
   private[graft] def silhouetteCols(
       cents: Seq[(Int, Seq[Long])], label: Column, qe: Column): (Column, Column) = {
     val own = cents.foldLeft(lit(null).cast(LongType)) {

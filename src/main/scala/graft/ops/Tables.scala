@@ -63,9 +63,8 @@ object Tables {
   }
 
   /** Normalize a `ts` column to TimestampType whatever the parquet
-    * encoding surfaced (nanos-as-long or NTZ). Shared by the batch reader
-    * above and the streaming twins, so both halves of a kappa pair see
-    * the identical event-time domain. */
+    * encoding surfaced (nanos-as-long or NTZ), so every query reading
+    * `events` through the reader above sees the same event-time domain. */
   def normalizeTs(df: DataFrame): DataFrame = {
     import org.apache.spark.sql.functions._
     df.schema.find(_.name == "ts").map(_.dataType) match {

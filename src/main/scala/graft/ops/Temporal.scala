@@ -6,8 +6,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types._
 
 /** Event-time operators over `events`: sessionization and as-of join —
-  * the temporal surface a streaming-flavored pipeline needs in batch form
-  * (the streaming forms live in [[graft.streaming.Streams]]).
+  * the temporal surface a streaming-flavored pipeline needs, in batch
+  * form.
   *
   * Scale (100 TB):
   *  - q17 sessionization uses Spark's native `session_window` aggregate —
@@ -1195,13 +1195,13 @@ object Temporal {
 
   // ---------------------------------------------------------------- q77
   /** Watermark-delay planner — the batch audit that decides what
-    * `withWatermark` delay the streaming twins should ship: for each
+    * `withWatermark` delay a streaming consumer should ship: for each
     * candidate delay, how many events would a watermark drop? An event's
     * LATENESS is the event-time frontier at its arrival (inclusive
     * running max of ts in arrival order) minus its own ts — exact
     * integer micros — and a delay D drops it when lateness > D·10⁶. The
-    * four candidate delays (1 min / 10 min / 1 h / 1 d) cover the
-    * decision range of every gate in [[graft.streaming.Streams]].
+    * four candidate delays (1 min / 10 min / 1 h / 1 d) are the audit's
+    * decision range, from sub-hour event windows up to daily ones.
     * Arrival order models a rate-matched consumer interleaving 8
     * user-keyed source partitions by per-partition sequence number (see
     * inline note), so lateness measures the real thing a watermark

@@ -521,10 +521,8 @@ object TextAnalysis {
       |FROM tg GROUP BY trigram ORDER BY n DESC, trigram LIMIT 20""".stripMargin
 
   // ---------------------------------------------------------------- t13
-  // Shared PII expressions — the SINGLE source of truth for batch t13 and
-  // the streaming curation ingest (graft.streaming.Streams.scrubIngest):
-  // the kappa property (backfill == live) holds because both paths build
-  // from these very definitions, not hand-synced copies.
+  // PII expressions of t13: the scrub and its redaction count build from
+  // the same two patterns.
 
   /** Email pattern in the common subset of Java regex and RE2 (character
     * classes, bounded repetition, no backrefs) so any engine agrees. */
@@ -910,10 +908,9 @@ object TextAnalysis {
     * estimator `(k−1)·H / kth`. */
   val KmvRange48 = 281474976710656L
 
-  /** 48-bit cross-engine token hash: the first 12 hex chars of md5 as an
-    * integer. One definition shared by batch t19 and the streaming
-    * vocabulary sketch ([[graft.streaming.Streams.vocabSketch]]); the
-    * DuckDB oracle mirrors it as a hex-digit polynomial. */
+  /** 48-bit cross-engine token hash of t19: the first 12 hex chars of
+    * md5 as an integer; the DuckDB oracle mirrors it as a hex-digit
+    * polynomial. */
   def tokenHash48(w: Column): Column =
     conv(substring(md5(w), 1, 12), 16, 10).cast(LongType)
 
@@ -2013,9 +2010,8 @@ object TextAnalysis {
 
   /** The "trained" unigram LM of a corpus: (term, cppm) where cppm is the
     * term's integer share of corpus token mass in ppm. Vocabulary-sized
-    * output — the broadcastable artifact both batch scoring (t35) and
-    * the streaming gate ([[graft.streaming.Streams.surprisalGateIngest]])
-    * consume. */
+    * output — the broadcastable artifact t35's scoring
+    * ([[surprisalProfile]]) joins against. */
   private[graft] def unigramLm(docsIn: DataFrame): DataFrame = {
     val s = docsIn.sparkSession
     import s.implicits._
@@ -2035,7 +2031,7 @@ object TextAnalysis {
     val lm = unigramLm(docsIn)
     // the LM is vocabulary-sized (Heaps-growing): no broadcast hint, AQE
     // broadcasts while it fits and shuffles on term beyond — a deployed
-    // gate would also prune the LM to a top-K artifact (Streams does)
+    // gate would also prune the LM to a top-K artifact
     tok.join(lm, Seq("term"))
       .groupBy($"doc_id")
       .agg(
@@ -2153,13 +2149,9 @@ object TextAnalysis {
   def t37(s: SparkSession, dir: String): DataFrame =
     qualityRules(Tables.t(s, dir, "documents"))
 
-  /** t37's kernel over any (source, text) frame — split out so the spec
-    * can fire every rule on constructed docs (the synthetic corpus only
-    * exercises len and stop). */
   /** The four t37 rule-failure predicates over a text Column, in rule
-    * order (len, wordlen, stop, rep) — shared by the batch battery and
-    * the streaming gate ([[graft.streaming.Streams.rulesGateIngest]]) so
-    * a backfill and the live ingest make bit-identical decisions. */
+    * order (len, wordlen, stop, rep) — one named Column per rule, which
+    * [[qualityRules]] turns into flag columns. */
   private[graft] def ruleFailures(text: Column): Seq[(String, Column)] = {
     val ws = words(text)
     val nTok = size(ws).cast(LongType)
@@ -2174,6 +2166,9 @@ object TextAnalysis {
         lit(5L) * graft.functions.TopBigramRun(ws) > (nTok - 1L)))
   }
 
+  /** t37's kernel over any (source, text) frame — split out so the spec
+    * can fire every rule on constructed docs (the synthetic corpus only
+    * exercises len and stop). */
   private[graft] def qualityRules(docsIn: DataFrame): DataFrame = {
     val s = docsIn.sparkSession
     import s.implicits._
@@ -2927,11 +2922,10 @@ object TextAnalysis {
     * pipeline dictionary-free exactly as t36 documents. */
   val DsirTargetLang = "en"
 
-  /** The B-row DSIR weight fit of t46, split out so the streaming gate's
-    * offline training path ([[graft.streaming.Streams.dsirGate]]) shares
-    * the exact arithmetic: (bucket, w_ppm) for every bucket, zero
-    * buckets included (posexplode of the dense kernel vector), so the
-    * packed weight vector always has exactly [[HashBuckets]] entries. */
+  /** The B-row DSIR weight fit that t46 packs into one broadcast row:
+    * (bucket, w_ppm) for every bucket, zero buckets included (posexplode
+    * of the dense kernel vector), so the packed weight vector always has
+    * exactly [[HashBuckets]] entries. */
   private[graft] def dsirWeights(docsIn: DataFrame): DataFrame =
     dsirWeightsOf(docsIn.select(col("lang"),
       graft.functions.HashedBowCounts(col("text"), HashBuckets).as("cnts")))
@@ -3042,11 +3036,10 @@ object TextAnalysis {
     * 16-byte-wide key tuple ever shuffles, no text); the per-k sweep
     * cross-joins a broadcast 4-row k frame against the class frame and
     * re-aggregates to 4 rows. Nothing touches the corpus twice. */
-  /** t47's equivalence-class build, split out so the streaming gate's
-    * offline fit ([[graft.streaming.Streams.kAnonGate]]) shares the
-    * exact quasi-identifier definition: one map-side-combining collapse
-    * of the corpus to (lang, source, len_bucket, csize) — bounded by
-    * the QI domain, never by docs. */
+  /** t47's equivalence-class build, split out of t47 so the spec can pin
+    * the quasi-identifier definition on a hand-built corpus: one
+    * map-side-combining collapse of the corpus to (lang, source,
+    * len_bucket, csize) — bounded by the QI domain, never by docs. */
   private[graft] def qiClasses(docs: DataFrame): DataFrame = {
     val s = docs.sparkSession
     import s.implicits._
@@ -3243,7 +3236,7 @@ object TextAnalysis {
 
   // ---------------------------------------------------------------- t50
   /** Count-Min sketch error audit (Cormode & Muthukrishnan 2005): build
-    * the 4×1024 CMS every streaming frequency estimator actually ships,
+    * the 4×1024 CMS a streaming frequency estimator typically ships,
     * then measure its overestimation on the top-50 tokens against exact
     * counts — the calibration read before trusting sketch counts for
     * heavy-hitter cutoffs or mixture weights. The sketch is a pure
@@ -3259,25 +3252,14 @@ object TextAnalysis {
     * definition of the sketch params; exact top-50 counts ride the
     * vocabulary aggregate; the probe joins 200 (token, row) keys
     * against the broadcast sketch. */
-  /** CMS geometry: 4 rows × 1024 buckets; row hashes are disjoint 12-bit
-    * slices of md5 — shared by batch t50 and the streaming cmsIngest so
-    * the two sketches are the same deterministic function of the data. */
+  /** CMS geometry of t50: 4 rows × 1024 buckets; row hashes are disjoint
+    * 12-bit slices of md5, so the sketch is a deterministic function of
+    * the data. */
   private[graft] val CmsRows = 4
   private[graft] val CmsWidth = 1024
   private[graft] def cmsBucket(w: Column, row: Int): Column =
     (conv(substring(md5(w), 1 + 3 * row, 3), 16, 10)
       .cast(LongType) % CmsWidth).cast(IntegerType)
-
-  /** The (r, b, cell) sketch table of a token frame (column `w`). A plain
-    * count aggregate over ≤ [[CmsRows]]·[[CmsWidth]] keys — streaming-legal
-    * as-is (update/complete modes), with state bounded by the sketch
-    * params, never by the stream. */
-  private[graft] def cmsCells(tok: DataFrame): DataFrame =
-    tok.select(explode(array(
-        (0 until CmsRows).map(i =>
-          struct(lit(i).as("r"), cmsBucket(col("w"), i).as("b"))): _*)).as("c"))
-      .groupBy(col("c.r").as("r"), col("c.b").as("b"))
-      .agg(count(lit(1)).as("cell"))
 
   def t50(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
@@ -3363,9 +3345,7 @@ object TextAnalysis {
     * bucket) rollup of |langs|·B cells; the model is parameter-bounded
     * (|langs|·(B+1) rows — SURVEY §8's algorithm-parameter class), so it
     * collects and embeds as literals and scoring is a PURE NARROW scan
-    * (compiled zip_with dot products, no join, no shuffle). The same
-    * frozen literals drive [[graft.streaming.Streams]]' nbGate, so
-    * ingest and backfill classify bit-identically (kappa). */
+    * (compiled zip_with dot products, no join, no shuffle). */
   def t51(s: SparkSession, dir: String): DataFrame =
     Q.sortedNarrow(
       nbClassify(Tables.t(s, dir, "documents"), nbModel(Tables.t(s, dir, "documents"))),
@@ -3401,8 +3381,8 @@ object TextAnalysis {
   }
 
   /** Classify any (doc_id, lang, text) frame against a FROZEN model —
-    * shared verbatim by batch t51 and the streaming nbGate, so the two
-    * paths cannot diverge. Narrow per-row work only. */
+    * split out of t51 so the spec can score hand-built docs against a
+    * hand-built model. Narrow per-row work only. */
   private[graft] def nbClassify(docsIn: DataFrame,
       model: Seq[(String, Long, Seq[Long])]): DataFrame = {
     val s = docsIn.sparkSession

@@ -756,6 +756,46 @@ class MainSpec extends AnyFunSuite {
     assert(rs("unit_test.rt2.top_check") == "pass", rs.toString)
   }
 
+  test("retry after a gated build keeps the unit-test gate (model and descendants skip)") {
+    val root = writeProject(Map(
+      "dbt_project.yml" -> "name: ur\n",
+      "models/base.sql" -> "select 1 as id, 'a@b.c' as email",
+      "models/flags.sql" ->
+        ("select id, case when email like '%@%' then true else false end " +
+          "as ok from {{ ref('base') }}"),
+      "models/leaf.sql" -> "select id from {{ ref('flags') }}",
+      "models/_unit.yml" ->
+        """version: 2
+          |unit_tests:
+          |  - name: flag_logic
+          |    model: flags
+          |    given:
+          |      - input: ref('base')
+          |        rows:
+          |          - {id: 2, email: bad}
+          |    expect:
+          |      rows:
+          |        - {id: 2, ok: true}
+          |""".stripMargin))
+    val artifact = root.resolve("target").resolve("run_results.json")
+    // the build, then two retries: the second reads the artifact the
+    // first wrote, so the original command must ride it forward
+    for (cmd <- Seq("build", "retry", "retry")) {
+      val out = new java.io.ByteArrayOutputStream()
+      val code = Console.withOut(new java.io.PrintStream(out)) {
+        Main.run(Array(cmd, "--project-dir", root.toString))
+      }
+      assert(code == 1, s"$cmd: $out")
+      assert(!out.toString.contains("ran model.ur.flags"), s"$cmd: $out")
+      assert(!out.toString.contains("ran model.ur.leaf"), s"$cmd: $out")
+      val rs = graft.core.parse.RunResultsJson.load(artifact)
+      assert(rs("unit_test.ur.flag_logic") == "fail", s"$cmd: $rs")
+      assert(rs("model.ur.flags") == "skipped", s"$cmd: $rs")
+      assert(rs("model.ur.leaf") == "skipped", s"$cmd: $rs")
+      assert(graft.core.parse.RunResultsJson.which(artifact).contains("build"))
+    }
+  }
+
   test("compile renders selected models to target/compiled without executing") {
     val root = writeProject(Map(
       "dbt_project.yml" -> "name: cp\nvars:\n  cutoff: '2099'\n",

@@ -65,6 +65,23 @@ class SimilaritySpec extends AnyFunSuite with SparkFixture {
       -20L -> ((2L, 333333L))))
   }
 
+  test("s28 fitCentroids: one fixed-point centroid per label, labels ascending") {
+    val s = spark
+    import s.implicits._
+    // two well-separated label clusters in 3 dims
+    val rows = Seq(
+      (1L, 0, Seq(1.0f, 0.0f, 0.0f)), (2L, 0, Seq(0.9f, 0.1f, 0.0f)),
+      (3L, 1, Seq(0.0f, 1.0f, 0.0f)), (4L, 1, Seq(0.1f, 0.9f, 0.0f)))
+    val cents = Similarity.fitCentroids(rows.toDF("vec_id", "label", "embedding"))
+    assert(cents.map(_._1) == Seq(0, 1))
+    // reference: floor(x · 2^20) per dim, summed, div the label's count
+    def q(x: Float): Long = math.floor(x.toDouble * 1048576.0).toLong
+    val expect = rows.groupBy(_._2).toSeq.sortBy(_._1).map { case (l, rs) =>
+      l -> rs.map(_._3.map(q)).transpose.map(_.sum / rs.size)
+    }
+    assert(cents == expect)
+  }
+
   test("s22 kernel: greedy maximin picks the farthest-from-set, ties to lowest id") {
     val s = spark
     import s.implicits._

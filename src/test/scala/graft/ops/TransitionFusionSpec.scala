@@ -167,6 +167,19 @@ class TransitionFusionSpec extends AnyFunSuite with SparkFixture {
     assert(out("B") == ((2L, 1L, 2L, 1000000L)))
   }
 
+  test("t47: qiClasses collapses docs to (lang, source, len_bucket) class sizes") {
+    val s = spark
+    import s.implicits._
+    // (en, web, bucket 0) has 3 members; (fr, web, 0) has 1
+    val docs = Seq(
+      (1L, "en", "web", 50L), (2L, "en", "web", 120L), (3L, "en", "web", 10L),
+      (4L, "fr", "web", 30L)).toDF("doc_id", "lang", "source", "n_chars")
+    val got = TextAnalysis.qiClasses(docs).collect()
+      .map(r => (r.getString(0), r.getString(1), r.getLong(2), r.getLong(3)))
+      .toSet
+    assert(got == Set(("en", "web", 0L, 3L), ("fr", "web", 0L, 1L)))
+  }
+
   test("g14: a borderline-glued chain splits; a tight clique is robust") {
     val s = spark
     import s.implicits._
